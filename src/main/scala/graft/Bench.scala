@@ -39,10 +39,25 @@ object Bench {
   // driver run measured d07 at 15.5 s (vs an 8 s median reproduced
   // before and after) with gc_ms=77 and shm=0 — nothing JVM-internal
   // explains a 2x, so record what the HOST was doing at the time.
-  private def loadAvg: Double =
+  private[graft] def loadAvg: Double =
     try java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
     catch { case _: Throwable => -1.0 }
+
+  /** Between samples (outside any timed window): the clean storage
+    * state described above. */
+  private[graft] def cleanStorage(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    System.gc() // drain ContextCleaner refs -> delete tmpfs shuffle files
+  }
+
+  /** Warm-up before the first sample: JIT/codegen/IO paths, not counted. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.read.parquet(s"$sfDir/region.parquet").count()
+    SparkEntry.entry(spark).count()
+    cleanStorage(spark)
+  }
 
   /** Per-stage recorder for the in-window phase instrumentation (the
     * round-12 verdict's top item): the heavy entries (≥3 s) have read
@@ -59,10 +74,7 @@ object Bench {
     * wall ≫ task/32 (scheduler/host starvation), inflated task time
     * (genuinely slower compute), or gc/spill concentration — a lookup,
     * not an adjudication. */
-  private final class StageRecorder extends org.apache.spark.scheduler.SparkListener {
-    final case class StageSample(id: Int, name: String, wallMs: Long,
-      taskMs: Long, cpuMs: Long, gcMs: Long, inMb: Long, shReadMb: Long,
-      shWriteMb: Long, spillMb: Long, tasks: Int, subMs: Long, endMs: Long)
+  private[graft] final class StageRecorder extends org.apache.spark.scheduler.SparkListener {
     private val buf = new java.util.concurrent.ConcurrentLinkedQueue[StageSample]
     def reset(): Unit = buf.clear()
     def snapshot(): Seq[StageSample] = {
@@ -84,6 +96,16 @@ object Bench {
         si.numTasks, si.submissionTime.getOrElse(-1L),
         si.completionTime.getOrElse(-1L)))
     }
+  }
+
+  private[graft] final case class StageSample(id: Int, name: String, wallMs: Long,
+      taskMs: Long, cpuMs: Long, gcMs: Long, inMb: Long, shReadMb: Long,
+      shWriteMb: Long, spillMb: Long, tasks: Int, subMs: Long, endMs: Long) {
+    def json: String =
+      s"""{"id":$id,"wall_ms":$wallMs,"task_ms":$taskMs,""" +
+        s""""cpu_ms":$cpuMs,"gc_ms":$gcMs,"in_mb":$inMb,""" +
+        s""""sh_r_mb":$shReadMb,"sh_w_mb":$shWriteMb,""" +
+        s""""spill_mb":$spillMb,"tasks":$tasks,"name":"$name"}"""
   }
 
   /** Seconds above which a query's diag line carries its stage table.
@@ -218,46 +240,26 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      // AQE coalescing stays ON (A/B measured best total): the CPU-dense
-      // kernels protect their own parallelism with pinned repartition(N)
-      // nodes, which AQE does not coalesce; everything else benefits.
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_COALESCE", "true"))
-      .getOrCreate()
+    val cpus = Session.cpus(32)
+    val spark = Session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val sc = spark.sparkContext
     // fixture-drift tripwire (round-10 postmortem) — printed now and
     // again just before the final JSON line so the driver's 2000-char
     // tail capture includes it on every run
     val probeLine = graft.core.SchemaProbe.report(spark, sfDir)
-    // warm-up: JIT/codegen/IO paths, not counted
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-    SparkEntry.entry(spark).count()
-    def cleanStorage(): Unit = {
-      spark.catalog.clearCache()
-      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc() // drain ContextCleaner refs -> delete tmpfs shuffle files
-    }
-    cleanStorage()
+    warmUp(spark, sfDir)
     val diag = new StringBuilder
     val ctlRuns = scala.collection.mutable.ArrayBuffer.empty[Double]
     val ctl2Runs = scala.collection.mutable.ArrayBuffer.empty[Double]
     def runControl(tag: String): Unit = {
       val s = controlProbe(spark, sfDir)
       ctlRuns += s
-      cleanStorage()
+      cleanStorage(spark)
       val s2 = controlProbe2(spark, sfDir)
       ctl2Runs += s2
       System.err.println(f"[bench-ctl] $tag ${s}%.3fs / heavy ${s2}%.3fs")
-      cleanStorage()
+      cleanStorage(spark)
     }
     runControl("pre")
     // streaming fixed-cost probe: once per run (it is itself a
@@ -265,7 +267,7 @@ object Bench {
     // which is exactly what it measures)
     val ctlStream = math.round(controlProbeStream(spark) * 1000) / 1000.0
     System.err.println(f"[bench-ctl] stream $ctlStream%.3fs")
-    cleanStorage()
+    cleanStorage(spark)
     val allQueries = SparkEntry.queries.toSeq.sortBy(_._1)
     val midAt = allQueries.size / 2
     // per-SUITE control samples (r8 verdict: the p-suite incident was
@@ -280,7 +282,7 @@ object Bench {
       val s = controlProbe(spark, sfDir)
       suiteCtl(suite) = s
       System.err.println(f"[bench-ctl] suite:$suite ${s}%.3fs")
-      cleanStorage()
+      cleanStorage(spark)
     }
     // frozen medians loaded BEFORE the query loop (round-15 verdict
     // item 4): the in-loop >2x retry needs the yardstick at query time
@@ -346,12 +348,7 @@ object Bench {
         org.apache.spark.graft.ListenerInterop.drain(sc, 5000)
         val all = stageRec.snapshot()
         val top = all.sortBy(-_.wallMs).take(12)
-        val items = top.map { st =>
-          s"""{"id":${st.id},"wall_ms":${st.wallMs},"task_ms":${st.taskMs},""" +
-            s""""cpu_ms":${st.cpuMs},"gc_ms":${st.gcMs},"in_mb":${st.inMb},""" +
-            s""""sh_r_mb":${st.shReadMb},"sh_w_mb":${st.shWriteMb},""" +
-            s""""spill_mb":${st.spillMb},"tasks":${st.tasks},"name":"${st.name}"}"""
-        }.mkString(",")
+        val items = top.map(_.json).mkString(",")
         // window totals across ALL stages (top-12 under-counts the
         // many-small-stage entries) + the two driver-side lags:
         // pre_stage_ms = t0 -> first stage submission (planning, file
@@ -381,7 +378,7 @@ object Bench {
       // false-regression class after the corpus regen)
       val pubN = graft.core.Materialize.publishCount - pub0
       val blocksLeft = sc.getPersistentRDDs.size
-      cleanStorage()
+      cleanStorage(spark)
       // shm snapshot BEFORE any retry: the field means "tmpfs shuffle
       // residue after the OFFICIAL sample" in every prior round's diag,
       // and the adjudication protocol compares it cross-round
@@ -425,7 +422,7 @@ object Bench {
             }
           val rSecs = (System.nanoTime() - rt0) / 1e9
           val rLoadEnd = loadAvg // sampled BEFORE cleanup: the retry's own window
-          cleanStorage()
+          cleanStorage(spark)
           (rSecs, graft.core.Materialize.publishCount - rp0, failed, rLoad, rLoadEnd)
         }
       val retryJson = retry.map { case (rs, rp, rf, rl, rle) =>

@@ -44,13 +44,7 @@ object Main {
 
     case "query" :: name :: rest =>
       val dir = rest.headOption.getOrElse("/root/testdata/sf0.001")
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .withExtensions(new graft.plans.GraftExtensions)
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-        .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val spark = graft.Session(graft.Session.cpus(4))
       spark.sparkContext.setLogLevel("WARN")
       graft.SparkEntry.queries.get(name) match {
         case Some(q) => q(spark, dir).show(50, false); spark.stop()
@@ -65,13 +59,7 @@ object Main {
       // window counts -> kinesis-emu sink, with the commit-stats hook
       // (R13) reporting each epoch. Runs for N seconds (default 12).
       val seconds = rest.headOption.map(_.toInt).getOrElse(12)
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .withExtensions(new graft.plans.GraftExtensions)
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val spark = graft.Session(4)
       spark.sparkContext.setLogLevel("ERROR")
       import org.apache.spark.sql.functions._
       KinesisEmu.createStream("pipeline", shards = 2)
@@ -100,9 +88,9 @@ object Main {
 
     case "bench-sink" :: rest =>
       // reference bench parity (bench/main.go): synthetic offered load
-      // through the FastWriter-equivalent stack; report throughput and
-      // drops. Default: 1 KiB payloads, 20 MiB total (200x the
-      // reference's per-second offered load).
+      // through the FastWriter-equivalent stack; report throughput
+      // (this path has no drop stage). Default: 1 KiB payloads, 20 MiB
+      // total (200x the reference's per-second offered load).
       val totalBytes = rest.headOption.map(_.toLong).getOrElse(20L * 1024 * 1024)
       val payload = Array.fill(1024)(7.toByte)
       KinesisEmu.createStream("bench", shards = 4)
@@ -119,7 +107,7 @@ object Main {
       val recs = KinesisEmu.stream("bench").get.allRecords
       println(f"""{"metric":"sink_throughput","bytes":$sent,"secs":$secs%.3f,""" +
         f""""mib_per_sec":${sent / 1024.0 / 1024.0 / secs}%.1f,""" +
-        s""""records":${recs.size},"dropped":0}""")
+        s""""records":${recs.size}}""")
 
     case _ =>
       System.err.println("usage: ingest <stream> [-p key] | query <name> [sfDir] | stream [secs] | bench-sink [bytes]")

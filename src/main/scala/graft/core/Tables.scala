@@ -120,30 +120,12 @@ object Tables {
   /** Pinned repartition ahead of a CPU-dense explode whose input is a
     * single-split scan (each corpus parquet is one row group, so the
     * scan-rooted stage otherwise runs on ONE core — the t10/d04
-    * discipline, round 21). `spark.graft.explode.spread=false` disables
-    * it so an A/B rail — warm interleaved in one JVM, or cold across
-    * JVMs — can measure the exchange cost vs the parallelism win per
-    * entry; the explicit partition count is never AQE-coalesced.
-    * EVERY round-21 pinned explode repartition routes through here
-    * (d11, d12, d15, t10, t12, benchShingles — round-22, closing the
-    * round-21 ADVICE low that the conf silently covered only d15).
-    * The pre-r21 pins (d04's salted spread, the Ann/Multimodal/TextSim
-    * kernel pins, cleanRedacted) predate the conf and stay hard — they
-    * are load-bearing plan shape, not an open A/B. Result-neutral by
-    * construction (partitioning only). The conf value is parsed
-    * defensively: anything but a literal true/false warns and keeps
-    * the default (on) rather than throwing mid-plan. */
-  def spread(df: DataFrame, key: Column): DataFrame = {
-    val on = df.sparkSession.conf.getOption("spark.graft.explode.spread")
-      .forall(_.trim.toLowerCase match {
-        case "true" => true
-        case "false" => false
-        case other =>
-          System.err.println(s"[graft] spark.graft.explode.spread=$other " +
-            "is not true/false — keeping the default (spread on)")
-          true
-      })
-    if (on) df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
-    else df
-  }
+    * discipline, round 21); the explicit partition count is never
+    * AQE-coalesced. EVERY round-21 pinned explode repartition routes
+    * through here (d11, d12, d15, t10, t12, benchShingles). The pre-r21
+    * pins (d04's salted spread, the Ann/Multimodal/TextSim kernel pins,
+    * cleanRedacted) stay inline — they are load-bearing plan shape.
+    * Result-neutral by construction (partitioning only). */
+  def spread(df: DataFrame, key: Column): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
 }

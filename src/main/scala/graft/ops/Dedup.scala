@@ -644,11 +644,11 @@ object Dedup {
     // full band-key vectors on every collision row, and at the 8×2
     // recall shape that array carriage measured 14.6 s for 10.3 M
     // candidates at sf0.1 where the 16-byte-row distinct shuffle of the
-    // same 45 M collisions measures 2.6 s (D02Prof, round 9) — the
-    // collision stream is ~4× the candidate set, so shuffling it slim
-    // beats materializing 2×numBands keys per row in-stage. At scale
-    // the distinct's exchange volume is collisions × 16 B, map-side
-    // combined within each band partition.
+    // same 45 M collisions measures 2.6 s (test-side graft.tools.D02Prof,
+    // round 9) — the collision stream is ~4× the candidate set, so
+    // shuffling it slim beats materializing 2×numBands keys per row
+    // in-stage. At scale the distinct's exchange volume is
+    // collisions × 16 B, map-side combined within each band partition.
     val cand = a.join(b, col("band") === col("band_b") &&
         col("sig") === col("sig_b") && col("i") < col("j") &&
         greatest(col("n"), col("nb")) * lit(TauNum) <=
@@ -1382,8 +1382,8 @@ object Dedup {
     // publishes both label artifacts (cold-marked via the publish
     // counter, exactly like d02's band table), every later run is a
     // parquet read of the live labels + the size join. The CC kernel
-    // itself stays measurable on demand (tools/D07Rounds, and any
-    // corpus/code change re-keys the fingerprint and re-runs it).
+    // itself stays measurable on demand (test-side graft.tools.D07Rounds,
+    // and any corpus/code change re-keys the fingerprint and re-runs it).
     // liveCcLabels -> computeAndMaterializeLiveLabels -> ccLabels
     // guarantees the full-corpus table is built before the repair
     // needs it; pair INPUT comes from the materialized pair table —
@@ -1971,7 +1971,7 @@ object Dedup {
     * empty range). */
   def d11(s: SparkSession, d: String): DataFrame = {
     val occ = graft.core.Tables.spread(documents(s, d), col("doc_id"))
-      // pinned repartition (via spread, conf-gated): the corpus file is
+      // pinned repartition (via spread): the corpus file is
       // one row group, so the span-md5 explode otherwise runs on one
       // core (t10/d04 discipline)
       .withColumn("toks", split(col("text"), " "))
@@ -2037,7 +2037,7 @@ object Dedup {
     * for that decision). */
   def d12(s: SparkSession, d: String): DataFrame = {
     val occ = graft.core.Tables.spread(documents(s, d), col("doc_id"))
-      // pinned repartition (via spread, conf-gated): single-row-group
+      // pinned repartition (via spread): single-row-group
       // scan, one-core explode otherwise (t10/d04 discipline)
       .withColumn("toks", split(col("text"), " "))
       .where(size(col("toks")) >= SpanLen)

@@ -663,7 +663,7 @@ object Pipeline {
   private def benchShingles(live: DataFrame): DataFrame =
     graft.core.Tables.spread(
       live.where(col("doc_id") < graft.ops.Dedup.ContamBenchIds), col("doc_id"))
-      // pinned repartition (via spread, conf-gated) before the CPU-dense
+      // pinned repartition (via spread) before the CPU-dense
       // redact+shingle explode, for the same single-row-group reason as
       // [[cleanRedacted]] — the OUTPUT is tiny (broadcast by the decon
       // join) but the redact pass itself otherwise runs on one core

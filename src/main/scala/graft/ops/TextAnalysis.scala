@@ -402,7 +402,7 @@ object TextAnalysis {
     * never travels past the shingle projection. */
   def t10(s: SparkSession, d: String): DataFrame = {
     val occ = graft.core.Tables.spread(documents(s, d), col("doc_id"))
-      // pinned repartition (via spread, conf-gated) before the CPU-dense
+      // pinned repartition (via spread) before the CPU-dense
       // shingle-md5 explode: the corpus file is a single row group, so
       // the scan-rooted stage otherwise runs on ONE core (r20 diag: two
       // 1.6–1.8 s single-task stages; the cleanRedacted/d04 discipline)
@@ -565,7 +565,7 @@ object TextAnalysis {
   def t12(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy("doc_id").orderBy("pos")
     var cur = graft.core.Tables.spread(documents(s, d), col("doc_id"))
-      // pinned repartition (via spread, conf-gated): single-row-group
+      // pinned repartition (via spread): single-row-group
       // corpus file, same reason as t10 — and the per-round doc_id
       // windows reuse this exchange
       .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("p", "tok")))

@@ -47,14 +47,4 @@ object KinesisWriter {
     }
     def flush(): Unit = if (buf.size() > 0) { onFlush(buf.toByteArray); buf.reset() }
   }
-
-  /** Write a batch of flush units through the drop policy, delivering the
-    * accepted ones. Deterministic per input (SURVEY.md §7.4 decision). */
-  def writeWithDrops(cfg: Config, units: Seq[Array[Byte]],
-                     drainPerOffer: Double = 1.0): DropStats = {
-    val (accepted, _, stats) =
-      DropPolicy.decide(units.map(_.length.toLong), cfg.queueDepth, drainPerOffer)
-    accepted.foreach(i => write(cfg, units(i)))
-    stats
-  }
 }

@@ -267,15 +267,11 @@ object Replay {
     * 32 cores made the drain SLOWER (s14 14.7 s vs 9.4 s, s16 21.6 s
     * vs 12.2 s, warm medians) — per-store RocksDB init/commit/changelog
     * overhead at 32 instances × batches swamps the extra parallelism;
-    * the CPU-dense verify is widened AFTER the stateful operator
-    * instead (pinned repartition in [[s14]], which the state exchange
-    * does not see). `spark.graft.stream.admissionPartitions` overrides
-    * — a production deployment sizes it to state volume (the round-17
-    * 40.7M-key sweep completes at 8; a larger watermark window scales
-    * the knob, not the code). */
-  private[graft] def admissionPartitions(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.stream.admissionPartitions").map(_.toInt)
-      .getOrElse(8)
+    * the CPU-dense verify is widened BEFORE the stateful operator
+    * instead (the arrival source is rebalanced in [[s14Arrivals]],
+    * which the state exchange does not see). The round-17 40.7M-key
+    * sweep completes at 8. */
+  private[graft] val AdmissionPartitions = 8
 
   /** FQCN of Spark's disk-backed state store provider (rocksdbjni ships
     * in the Spark distribution). */
@@ -1252,40 +1248,12 @@ object Replay {
       .as[(Long, String)]
   }
 
-  /** Operator order for the admission drain (round 22, verdict item 5).
-    * The shipped order is VERIFY-FIRST: the banded candidate join, the
-    * token-array attach and the exact merge-intersect verify all run in
-    * the WIDE STATELESS stage (the arrival source is rebalanced to
-    * defaultParallelism), and the watermark-bounded pair dedup then
-    * holds only slim VERIFIED (ni, ci, jac) rows — so the state
-    * exchange to [[admissionPartitions]] carries ~24-byte rows and the
-    * RocksDB store holds verified-pair keys only. The pre-r22 order
-    * (dedup the candidate stream BEFORE verify) shipped every arrival's
-    * token-id array through the 8-partition state exchange — the guide
-    * §8 violation (heavy payload riding a decision shuffle): the r22
-    * diag read that stage at 48 s summed task / 40.5 s CPU on 8 tasks
-    * while the machine had 32 idle-ish cores. Cost of the reorder:
-    * multi-band collisions of one pair are verified once PER COLLISION
-    * ROW instead of once per pair — bounded by numBands (4) and paid at
-    * full width; measured A/B below. `spark.graft.stream.verifyFirst
-    * =false` restores the old order (a deployment whose repeat factor ×
-    * verify cost outweighs the exchange saving — e.g. huge docs with
-    * near-identical copies — flips it back). Results are identical
-    * either way: jac is a pure function of the pair, the dedup key is
-    * (ni, ci) in both orders, and the read-back distincts on exactly
-    * those columns. */
-  private[graft] def s14VerifyFirst(s: SparkSession): Boolean =
-    s.conf.getOption("spark.graft.stream.verifyFirst").forall(_.toBoolean)
-
-  def s14(s: SparkSession, d: String): DataFrame = {
-    // ISOLATED admission session (round 19): the whole drain — source,
-    // stream-static joins, stateful dedup, sink, report — is built on
-    // [[admissionSession]]'s child, so the RocksDB provider conf lives
-    // only there; queries on the parent session can never inherit it
-    // (Round19OpsSpec pins the isolation via checkpoint metadata).
-    val as = admissionSession(s)
-    val arrivals = s14Arrivals(as, d)
-    val newBands = graft.ops.Dedup.streamArrivalBandRows(arrivals)
+  /** s14's inputs on the admission session `as`: the banded candidate
+    * rows (ni, ci, ta), the standing corpus's token arrays (ci, tb) and
+    * the corpus view the candidates were joined against. */
+  private[graft] def s14Candidates(as: SparkSession, d: String)
+      : (DataFrame, DataFrame, graft.ops.Dedup.BandView) = {
+    val newBands = graft.ops.Dedup.streamArrivalBandRows(s14Arrivals(as, d))
     // the same standing-corpus view d16 grades against — under a
     // collapsed build its rows are representative-level and its
     // membership re-expands drained matches below (None, and identity,
@@ -1301,55 +1269,71 @@ object Replay {
           greatest(col("na"), col("nb")) * lit(graft.ops.Dedup.TauNum) <=
             lit(graft.ops.Dedup.TauDen) * least(col("na"), col("nb")))
       .select(col("ni"), col("ci"), col("ta"))
-    // pair-key dedup state BOUNDED by watermark (round-15 verdict
-    // item 2): a bare dropDuplicates keeps every pair key forever —
-    // fine for this AvailableNow replay, a state leak in the
-    // continuous ingest deployment the entry models. Soundness of
-    // the bound: a repeated (ni,ci) can ONLY arise from multi-band
-    // collisions of ONE arrival doc, and streamArrivalBandRows emits
-    // all of a doc's band rows from one flatMap over one input row —
-    // so every repeat lands in the SAME micro-batch, where
-    // current_timestamp() (the batch timestamp, constant within a
-    // micro-batch) gives them one event time: any positive delay
-    // covers them, and state older than the watermark horizon is
-    // evicted instead of kept for the life of the stream
-    // (Round16OpsSpec drains a two-batch feed and pins the eviction).
-    def dedupPairs(df: DataFrame): DataFrame = df
-      .withColumn("arrival_ts", current_timestamp())
-      .transform(StreamDedup.dedupWithinWatermark(_, Seq("ni", "ci"),
-        "arrival_ts", "10 seconds"))
-      .drop("arrival_ts")
     val tb = corpus.where(col("band") === 0)
       .select(col("i").as("ci"), col("toks").as("tb"))
-    val pairs =
-      if (s14VerifyFirst(as)) {
-        // verify-first (shipped, [[s14VerifyFirst]]): tb attach + exact
-        // verify run stateless at source width; only slim verified
-        // pairs enter the state exchange and the store
-        dedupPairs(graft.ops.Dedup.verifyCandidates(
-          cand.join(tb, "ci")
-            .select(col("ni"), col("ci"), col("ta"), col("tb"))))
-      } else {
-        // dedup-first (pre-r22 order, conf-restorable): cut multi-band
-        // repeats before paying the verify — at the cost of shipping
-        // every candidate's token array through the state exchange.
-        // NOT widened below the stateful operator (r21 A/B): a pinned
-        // repartition(defaultParallelism) between the dedup and the
-        // verify measured SLOWER interleaved-A/B in one JVM
-        // (11.1/13.3/11.3 s plain vs 15.6/16.2/13.9 s widened): the
-        // extra per-micro-batch exchange of the (ni, ci, ta) rows costs
-        // more than the added cores return.
-        graft.ops.Dedup.verifyCandidates(
-          dedupPairs(cand).join(tb, "ci")
-            .select(col("ni"), col("ci"), col("ta"), col("tb")))
-      }
-    // admission tier = pair-volume state: disk-backed provider by
-    // default, carried by the CHILD session's conf (set once at
-    // [[admissionSession]] creation — no session-wide set/restore
-    // window for another tier to inherit from)
+    (cand, tb, corpusView)
+  }
+
+  /** Pair-key dedup state BOUNDED by watermark (round-15 verdict
+    * item 2): a bare dropDuplicates keeps every pair key forever —
+    * fine for this AvailableNow replay, a state leak in the continuous
+    * ingest deployment the entry models. Soundness of the bound: a
+    * repeated (ni,ci) can ONLY arise from multi-band collisions of ONE
+    * arrival doc, and streamArrivalBandRows emits all of a doc's band
+    * rows from one flatMap over one input row — so every repeat lands
+    * in the SAME micro-batch, where current_timestamp() (the batch
+    * timestamp, constant within a micro-batch) gives them one event
+    * time: any positive delay covers them, and state older than the
+    * watermark horizon is evicted instead of kept for the life of the
+    * stream (Round16OpsSpec drains a two-batch feed and pins the
+    * eviction). */
+  private[graft] def s14DedupPairs(df: DataFrame): DataFrame = df
+    .withColumn("arrival_ts", current_timestamp())
+    .transform(StreamDedup.dedupWithinWatermark(_, Seq("ni", "ci"),
+      "arrival_ts", "10 seconds"))
+    .drop("arrival_ts")
+
+  /** Drain `pairs` (ni, ci, jac) through the admission sink and build
+    * s14's report. Admission tier = pair-volume state: disk-backed
+    * provider by default, carried by the CHILD session's conf (set once
+    * at [[admissionSession]] creation — no session-wide set/restore
+    * window for another tier to inherit from). */
+  private[graft] def s14Drain(as: SparkSession, d: String, pairs: DataFrame,
+                              corpusView: graft.ops.Dedup.BandView): DataFrame = {
     val drained = sinkRun(as, pairs, runBase(as, "s14"),
-      partitions = admissionPartitions(as))
+      partitions = AdmissionPartitions)
     s14Report(as, d, drained, corpusView.members)
+  }
+
+  /** Operator order for the admission drain (round 22, verdict item 5)
+    * is VERIFY-FIRST: the banded candidate join, the token-array attach
+    * and the exact merge-intersect verify all run in the WIDE STATELESS
+    * stage (the arrival source is rebalanced to defaultParallelism),
+    * and the watermark-bounded pair dedup then holds only slim VERIFIED
+    * (ni, ci, jac) rows — so the state exchange to
+    * [[AdmissionPartitions]] carries ~24-byte rows and the RocksDB
+    * store holds verified-pair keys only. The pre-r22 order (dedup the
+    * candidate stream BEFORE verify) shipped every arrival's token-id
+    * array through the 8-partition state exchange: the r22 diag read
+    * that stage at 48 s summed task / 40.5 s CPU on 8 tasks while the
+    * machine had 32 idle-ish cores. Cost of the reorder: multi-band
+    * collisions of one pair are verified once PER COLLISION ROW
+    * instead of once per pair — bounded by numBands (4) and paid at
+    * full width. Results are identical either way (R22OptimizationSpec
+    * keeps the pre-r22 order as its reference): jac is a pure function
+    * of the pair, the dedup key is (ni, ci) in both orders, and the
+    * read-back distincts on exactly those columns. */
+  def s14(s: SparkSession, d: String): DataFrame = {
+    // ISOLATED admission session (round 19): the whole drain — source,
+    // stream-static joins, stateful dedup, sink, report — is built on
+    // [[admissionSession]]'s child, so the RocksDB provider conf lives
+    // only there; queries on the parent session can never inherit it
+    // (Round19OpsSpec pins the isolation via checkpoint metadata).
+    val as = admissionSession(s)
+    val (cand, tb, corpusView) = s14Candidates(as, d)
+    val pairs = s14DedupPairs(graft.ops.Dedup.verifyCandidates(
+      cand.join(tb, "ci").select(col("ni"), col("ci"), col("ta"), col("tb"))))
+    s14Drain(as, d, pairs, corpusView)
   }
 
   /** s14's sink read-back → admission report, factored for the
@@ -1493,13 +1477,9 @@ object Replay {
     val as = admissionSession(s)
     val schema = StructType(Seq(
       StructField("ni", LongType), StructField("ci", LongType)))
-    val feed = as.readStream.schema(schema).parquet(feedDir)
-      .withColumn("arrival_ts", current_timestamp())
-      .transform(StreamDedup.dedupWithinWatermark(_, Seq("ni", "ci"),
-        "arrival_ts", "10 seconds"))
-      .drop("arrival_ts")
+    val feed = s14DedupPairs(as.readStream.schema(schema).parquet(feedDir))
     var finalState = -1L
-    withReplayPartitions(as, admissionPartitions(as)) {
+    withReplayPartitions(as, AdmissionPartitions) {
       leasedQueryRun(as, base) {
         feed.writeStream.format("parquet")
           .option("path", s"$base/out")

@@ -14,19 +14,13 @@ import org.scalatest.BeforeAndAfterAll
   * the scans must report themselves bucketed. */
 class BucketedJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-bucketed-join-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+  private lazy val spark: SparkSession = Session(4,
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString,
     // propagate the bucket files' sort order into the plan (off by
     // default since 3.0 because it is only valid with one file per
     // bucket — which the repartition-by-key write below guarantees)
-    .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    .getOrCreate()
+    "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true")
 
   override def afterAll(): Unit = spark.stop()
 

@@ -12,14 +12,7 @@ import graft.functions.CosineSimilarity.cosine_similarity
   * self-cosine optimizer rule. */
 class CosineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-cosine-spec")
-    .withExtensions(new graft.plans.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = Session(4)
 
   override def afterAll(): Unit = spark.stop()
 

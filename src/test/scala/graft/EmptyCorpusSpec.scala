@@ -13,15 +13,8 @@ import org.scalatest.BeforeAndAfterAll
   * sequence()-on-empty edges, and first()/head() assumptions. */
 class EmptyCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-empty-corpus-spec")
-    .withExtensions(new graft.plans.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession =
+    Session(4, "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   override def afterAll(): Unit = spark.stop()
 

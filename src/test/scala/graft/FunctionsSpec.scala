@@ -11,13 +11,7 @@ import graft.functions.{GraftFunctions, MinHashAggregator}
   * with the relational form, HLL tolerance, scalar UDFs. */
 class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-functions-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = Session(4)
 
   override def afterAll(): Unit = spark.stop()
 

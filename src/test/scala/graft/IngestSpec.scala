@@ -195,9 +195,7 @@ class IngestSpec extends AnyFunSuite {
     withStream(shards = 2) {
       (0 until 10).foreach(i => KinesisWriter.write(
         KinesisWriter.Config("t", s"k$i"), Array.fill(4)(i.toByte)))
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]").config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC").getOrCreate()
+      val spark = Session(4)
       val df = KinesisEmu.toDataFrame(spark, "t")
       assert(df.columns.toSeq ==
         Seq("partitionKey", "data", "sequenceNumber", "shardId", "arrivalTs"))

@@ -1,40 +1,35 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** Round-22 optimization equivalence: s14's verify-first operator order
   * (verify in the wide stateless stage, watermark-dedup the slim
   * verified pairs) must drain to EXACTLY the same admission report as
-  * the pre-r22 dedup-first order, on the same session, toggled only by
-  * `spark.graft.stream.verifyFirst`. Round15OpsSpec separately pins the
-  * shipped order against d16's batch answer; this spec pins the two
-  * orders against each other so the conf can never become a semantics
-  * switch. */
+  * the pre-r22 dedup-first order, built here from the same pieces on the
+  * same session. Round15OpsSpec separately pins the shipped order
+  * against d16's batch answer; this spec pins the shipped order against
+  * the old one. */
 class R22OptimizationSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-r22-optimization-spec")
-    .withExtensions(new graft.plans.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = Session(4)
 
   override def afterAll(): Unit = spark.stop()
 
   test("s14 verify-first == dedup-first, row for row") {
-    def run(verifyFirst: Boolean): Seq[Seq[Any]] = {
-      spark.conf.set("spark.graft.stream.verifyFirst", verifyFirst.toString)
-      try graft.streaming.Replay.s14(spark, sf).collect().toSeq.map(_.toSeq)
-      finally spark.conf.unset("spark.graft.stream.verifyFirst")
-    }
-    val first = run(verifyFirst = true)
-    val legacy = run(verifyFirst = false)
+    val R = graft.streaming.Replay
+    val first = R.s14(spark, sf).collect().toSeq.map(_.toSeq)
+    // pre-r22 order: dedup the candidate stream, then attach tb and verify
+    val as = R.admissionSession(spark)
+    val (cand, tb, corpusView) = R.s14Candidates(as, sf)
+    val legacy = R.s14Drain(as, sf, graft.ops.Dedup.verifyCandidates(
+        R.s14DedupPairs(cand).join(tb, "ci")
+          .select(col("ni"), col("ci"), col("ta"), col("tb"))), corpusView)
+      .collect().toSeq.map(_.toSeq)
     assert(first === legacy,
       "s14's verify-first order changed the admission report")
     assert(first.nonEmpty, "s14 drained an empty report — vacuous equivalence")

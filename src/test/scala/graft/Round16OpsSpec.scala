@@ -16,14 +16,7 @@ import org.scalatest.BeforeAndAfterAll
   */
 class Round16OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-round16-ops-spec")
-    .withExtensions(new graft.plans.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = Session(4)
 
   override def afterAll(): Unit = spark.stop()
 

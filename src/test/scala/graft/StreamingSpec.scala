@@ -19,13 +19,7 @@ case class Ev(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, 
 
 class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-streaming-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = Session(4)
 
   override def afterAll(): Unit = { spark.stop(); KinesisEmu.reset() }
 

@@ -7,18 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** TopKPerKey custom operator: plan rewrite fires, results are
-  * bit-identical to the window form, and the non-extension session is
-  * untouched. */
+  * bit-identical to the window form (the same session with the rewrite
+  * rule excluded), and non-matching shapes are left alone. */
 class TopKSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-topk-spec")
-    .withExtensions(new graft.plans.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = Session(4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -37,24 +30,21 @@ class TopKSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!plan.contains("Window "), s"window should be gone:\n$plan")
   }
 
-  test("results identical to the window form (vanilla session), incl. rank values") {
-    val got = topOrders(3)
-      .select("o_custkey", "rn", "o_orderkey", "o_totalprice")
-      .orderBy("o_custkey", "rn").collect()
-
-    val vanilla = SparkSession.builder()
-      .master("local[4]").appName("graft-topk-vanilla")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // same query text against a session with NO extensions
-    val w = Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    val want = graft.core.Tables.orders(vanilla, sfDir)
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= 3)
-      .select("o_custkey", "rn", "o_orderkey", "o_totalprice")
-      .orderBy("o_custkey", "rn").collect()
+  test("results identical to the window form (TopK rule excluded), incl. rank values") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("o_custkey", "rn", "o_orderkey", "o_totalprice")
+        .orderBy("o_custkey", "rn")
+    val got = rows(topOrders(3)).collect()
+    // the same query text with the rewrite excluded for this query only:
+    // the reference must really plan the window form
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.TopKRewriteRule")
+    val (refPlan, want) =
+      try {
+        val ref = rows(topOrders(3))
+        (ref.queryExecution.executedPlan.toString, ref.collect())
+      } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+    assert(refPlan.contains("Window") && !refPlan.contains("TopKPerKey"),
+      s"reference did not plan the window form:\n$refPlan")
     assert(got.length == want.length && got.length > 0)
     assert(got.map(_.toString).sameElements(want.map(_.toString)))
   }

@@ -33,13 +33,7 @@ object CrossProcessMaterializer {
   def main(args: Array[String]): Unit = {
     val Array(matRoot, kind, fp, sleepMs, readyFile) = args.take(5)
     val writeSlowMs = if (args.length > 5) args(5).toLong else 0L
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-xproc-mat-child")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.mat.dir", matRoot)
-      .getOrCreate()
+    val spark = graft.Session(2, "spark.graft.mat.dir" -> matRoot)
     try {
       // signal the parent that this JVM is warm and about to enter the
       // race, so both sides' publish windows overlap

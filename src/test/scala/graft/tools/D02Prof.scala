@@ -2,16 +2,10 @@
 //   sbt "Test/runMain graft.tools.D02Prof [sfDir]"
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 object D02Prof {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session(32)
     spark.sparkContext.setLogLevel("ERROR")
     def t[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f

@@ -1,11 +1,7 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object D07Rounds {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session(32)
     spark.sparkContext.setLogLevel("ERROR")
     val t0 = System.nanoTime()
     val n = graft.ops.Dedup.d07(spark, args.headOption.getOrElse("/root/testdata/sf0.1")).count()

@@ -18,16 +18,9 @@
 // Numbers land in BASELINE.md ("s11 serving shapes at the ANN sweep").
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 object S11Sweep {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     val dirs = sys.env.get("SWEEP_DIRS") match {

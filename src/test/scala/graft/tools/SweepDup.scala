@@ -27,11 +27,6 @@ object SweepDup {
   def dirFor(k: Int): String = s"/tmp/graft_sweep/x$k"
 
   def main(args: Array[String]): Unit = {
-    val b = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // State provider is SHIPPED CONFIG since round 18: the admission
     // tier (s14-class pair-volume state) selects the disk-backed
     // RocksDB provider by itself (Replay.admissionStateProvider) —
@@ -41,13 +36,12 @@ object SweepDup {
     // the disk-backed provider on EVERY stateful entry; `memory`
     // opts the admission tier back onto the session default (the
     // config that reproduces the round-17 OOM measurement).
-    val spark = (sys.env.get("SWEEP_STATE_PROVIDER") match {
-      case Some("rocksdb") => b.config(
-        "spark.sql.streaming.stateStore.providerClass",
+    val spark = graft.Session(32, sys.env.get("SWEEP_STATE_PROVIDER").toSeq.flatMap {
+      case "rocksdb" => Seq("spark.sql.streaming.stateStore.providerClass" ->
         graft.streaming.Replay.RocksDbProvider)
-      case Some("memory") => b.config("spark.graft.stream.stateProvider", "memory")
-      case _ => b
-    }).getOrCreate()
+      case "memory" => Seq("spark.graft.stream.stateProvider" -> "memory")
+      case _ => Nil
+    }: _*)
     spark.sparkContext.setLogLevel("ERROR")
     args.headOption match {
       case Some("build") => build(spark, Multiples)
