@@ -446,12 +446,6 @@ object Bench {
     // full precision doubled the line length past the driver's capture.
     def r3(v: Double): Double = math.round(v * 1000) / 1000.0
     val rounded = results.map { case (k, v, _, _, _) => k -> r3(v) }
-    // entries whose timed window included a materialization publish —
-    // a COLD sample (first run at this corpus fingerprint, or an
-    // always-compute kernel). Three rounds running, first-run publishes
-    // read as false regressions in the driver's single run; the marker
-    // makes them mechanically adjudicable from the tail line alone.
-    val coldNames = results.collect { case (k, _, p, _, _) if p > 0 => k }.toSet
     // session-ambient yardstick: median of the 3 control runs (full
     // list in the diag file). Extra top-level JSON keys are additive —
     // the driver's parser reads metric/value/queries and ignores these.
@@ -459,6 +453,11 @@ object Bench {
     val ctl2 = r3(ctl2Runs.sorted.apply(ctl2Runs.size / 2))
     val suites = suiteCtl.map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
+    // entries whose timed window included a materialization publish —
+    // a COLD sample (first run at this corpus fingerprint, or an
+    // always-compute kernel). Three rounds running, first-run publishes
+    // read as false regressions in a single bench run; the marker
+    // makes them mechanically adjudicable from the tail line alone.
     // "cold" is an additive top-level key (the driver's parser reads
     // metric/value/queries and ignores extras) carried by BOTH the
     // short tail line and the full-name file line. The query-map keys

@@ -108,16 +108,10 @@ object FileEmuStore {
   def isCommitted(dir: String, stream: String, key: String, partition: Int): Boolean =
     Files.exists(tokenPath(dir, stream, key, partition)) ||
       segmentCovered(dir, stream, key, partition)
-  def isCommitted(dir: String, stream: String, epoch: Long, partition: Int): Boolean =
-    isCommitted(dir, stream, epoch.toString, partition)
 
   /** The durable exactly-once commit. Returns true iff THIS call won
-    * the (stream, epoch, partition) token. Empty record lists commit
-    * the token only (Spark emits empty partitions routinely). */
-  def commitEpoch(dir: String, stream: String, epoch: Long, partition: Int,
-                  records: Seq[KinesisRecord], arrivalNanos: Long): Boolean =
-    commit(dir, stream, epoch.toString, partition, records, arrivalNanos)
-
+    * the (stream, key, partition) token. Empty record lists commit the
+    * token only (Spark emits empty partitions routinely). */
   def commit(dir: String, stream: String, key: String, partition: Int,
              records: Seq[KinesisRecord], arrivalNanos: Long): Boolean = {
     requireKey(key)

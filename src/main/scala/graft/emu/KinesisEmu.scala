@@ -132,17 +132,7 @@ object KinesisEmu {
   def putRecords(streamName: String, records: Seq[KinesisRecord]): PutRecordsResponse = {
     val st = stream(streamName).getOrElse(
       throw new IllegalArgumentException(s"ResourceNotFoundException: stream $streamName"))
-    require(records.nonEmpty, "ValidationException: empty record list")
-    require(records.size <= Limits.PutRecordsLimit,
-      s"ValidationException: ${records.size} records exceeds limit ${Limits.PutRecordsLimit}")
-    records.foreach { r =>
-      val sz = r.partitionKey.getBytes("UTF-8").length + r.data.length
-      require(sz <= Limits.RecordSizeLimit,
-        s"ValidationException: record of $sz bytes exceeds ${Limits.RecordSizeLimit}")
-    }
-    val total = records.map(r => r.partitionKey.getBytes("UTF-8").length.toLong + r.data.length).sum
-    require(total <= Limits.PutRecordsSizeLimit,
-      s"ValidationException: request of $total bytes exceeds ${Limits.PutRecordsSizeLimit}")
+    checkLimits(records)
 
     val failures = failureInjector(streamName, records).map(f => f.index -> f).toMap
     val now = clock()
@@ -151,8 +141,7 @@ object KinesisEmu {
         case Some(f) => Left(f)
         case None =>
           val shard = st.shardFor(r.partitionKey)
-          val sz = r.partitionKey.getBytes("UTF-8").length.toLong + r.data.length
-          if (enforceShardRates && !shard.admit(sz, now))
+          if (enforceShardRates && !shard.admit(recordBytes(r), now))
             Left(PerRecordFailure(i, "ProvisionedThroughputExceededException"))
           else Right(shard.append(r.partitionKey, r.data, now))
       }
@@ -211,21 +200,32 @@ object KinesisEmu {
     committed
   }
 
-  /** The service-limit + injected-failure checks shared by the in-JVM
-    * and durable commit paths. Throws on any violation. */
-  private def validateBatch(streamName: String, records: Seq[KinesisRecord],
-                            token: String): Unit = {
+  /** Bytes a record counts against the service limits: partition key
+    * plus payload. */
+  private def recordBytes(r: KinesisRecord): Long =
+    r.partitionKey.getBytes("UTF-8").length.toLong + r.data.length
+
+  /** The PutRecords request limits (ValidationException): record count,
+    * per-record size and request size. Throws on any violation. */
+  private def checkLimits(records: Seq[KinesisRecord]): Unit = {
     require(records.nonEmpty, "ValidationException: empty record list")
     require(records.size <= Limits.PutRecordsLimit,
       s"ValidationException: ${records.size} records exceeds limit ${Limits.PutRecordsLimit}")
     records.foreach { r =>
-      val sz = r.partitionKey.getBytes("UTF-8").length + r.data.length
+      val sz = recordBytes(r)
       require(sz <= Limits.RecordSizeLimit,
         s"ValidationException: record of $sz bytes exceeds ${Limits.RecordSizeLimit}")
     }
-    val total = records.map(r => r.partitionKey.getBytes("UTF-8").length.toLong + r.data.length).sum
+    val total = records.map(recordBytes).sum
     require(total <= Limits.PutRecordsSizeLimit,
       s"ValidationException: request of $total bytes exceeds ${Limits.PutRecordsSizeLimit}")
+  }
+
+  /** The service-limit + injected-failure checks shared by the in-JVM
+    * and durable commit paths. Throws on any violation. */
+  private def validateBatch(streamName: String, records: Seq[KinesisRecord],
+                            token: String): Unit = {
+    checkLimits(records)
     val failures = failureInjector(streamName, records)
     if (failures.nonEmpty)
       throw new IllegalStateException(
@@ -244,8 +244,7 @@ object KinesisEmu {
     val now = clock()
     records.map { r =>
       val shard = st.shardFor(r.partitionKey)
-      val sz = r.partitionKey.getBytes("UTF-8").length.toLong + r.data.length
-      if (enforceShardRates && !shard.admit(sz, now))
+      if (enforceShardRates && !shard.admit(recordBytes(r), now))
         throw new IllegalStateException(
           s"PutRecords partial failure: ProvisionedThroughputExceeded; epoch $token aborted before append")
       (shard, r)
@@ -253,41 +252,28 @@ object KinesisEmu {
   }
 
   /** Durable, CROSS-PROCESS variant of [[putRecordsIdempotent]]: same
-    * validation and exactly-once (stream, epoch, partition) token
-    * semantics, but the token and the staged records live in
-    * [[FileEmuStore]]'s shared-filesystem layout — so the protocol
-    * holds across JVMs (a real cluster's executors, or any concurrent
-    * writer process), which the in-memory singleton cannot provide.
-    * The failure injector still applies in the CALLING process (a test
-    * hook, not service state); per-shard rate admission is in-process
-    * state and is not enforced on this path. */
-  def putRecordsIdempotentPersisted(dir: String, streamName: String, epochId: Long,
-                                    partitionId: Int,
-                                    records: Seq[KinesisRecord]): Boolean = {
+    * validation and exactly-once token semantics, but the token and the
+    * staged records live in [[FileEmuStore]]'s shared-filesystem layout
+    * — so the protocol holds across JVMs (a real cluster's executors,
+    * or any concurrent writer process), which the in-memory singleton
+    * cannot provide. The token is (stream, key, partition): a streaming
+    * sink passes the epoch number as `key`, so epoch retries commit at
+    * most once; a BATCH write job passes its `writeId`, minted once per
+    * job on the driver ("b" + UUID hex) and carried by the serialized
+    * writer factory — task retries of one partition cannot duplicate (a
+    * crashed attempt's staged file is an invisible orphan), while two
+    * separate jobs get two writeIds and both land (batch append
+    * semantics). The failure injector still applies in the CALLING
+    * process (a test hook, not service state); per-shard rate
+    * admission is in-process state and is not enforced on this path.
+    * Returns true iff this call committed the token. */
+  def putRecordsPersisted(dir: String, streamName: String, key: String,
+                          partitionId: Int, records: Seq[KinesisRecord]): Boolean = {
     FileEmuStore.numShardsOf(dir, streamName) // ResourceNotFound on a missing stream
-    if (FileEmuStore.isCommitted(dir, streamName, epochId, partitionId)) return false
-    val token = s"$streamName/$epochId/$partitionId"
+    if (FileEmuStore.isCommitted(dir, streamName, key, partitionId)) return false
     graft.ingest.RecordBatcher.batch(records)
-      .foreach(b => validateBatch(streamName, b, token))
-    FileEmuStore.commitEpoch(dir, streamName, epochId, partitionId, records, clock())
-  }
-
-  /** Durable exactly-once commit for a BATCH write job: the token is
-    * (writeId, partition) where `writeId` is minted once per job on the
-    * driver ("b" + UUID hex) and rides the serialized writer factory —
-    * so task retries of the same partition cannot duplicate (Spark's
-    * batch commit coordinator admits one commit per partition; a
-    * crashed attempt's staged file is an invisible orphan). Two
-    * separate write JOBS get two writeIds and both land — batch append
-    * semantics, unlike streaming's per-epoch idempotence. */
-  def putRecordsBatchPersisted(dir: String, streamName: String, writeId: String,
-                               partitionId: Int,
-                               records: Seq[KinesisRecord]): Boolean = {
-    FileEmuStore.numShardsOf(dir, streamName)
-    if (FileEmuStore.isCommitted(dir, streamName, writeId, partitionId)) return false
-    graft.ingest.RecordBatcher.batch(records)
-      .foreach(b => validateBatch(streamName, b, s"$streamName/$writeId/$partitionId"))
-    FileEmuStore.commit(dir, streamName, writeId, partitionId, records, clock())
+      .foreach(b => validateBatch(streamName, b, s"$streamName/$key/$partitionId"))
+    FileEmuStore.commit(dir, streamName, key, partitionId, records, clock())
   }
 
   /** Rebuild this JVM's in-memory view of a persisted stream by

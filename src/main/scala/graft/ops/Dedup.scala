@@ -229,12 +229,6 @@ object Dedup {
     }
   }
 
-  /** Candidate-pair count after banding + first-match + size prune but
-    * BEFORE exact verification — the volume the verify stage pays for;
-    * profiling/sweep diagnostic only. */
-  private[graft] def d02CandidateCount(s: SparkSession, d: String): Long =
-    d02Internals(s, d)._2.count()
-
   /** cache key of the published MinHash band-signature table: corpus
     * identity × banding parameters × code salt (the suite-wide
     * [[dedupCodeSalt]] defined with the d03/d07 fingerprints below). */
@@ -745,116 +739,49 @@ object Dedup {
     * verifies. Replaces the round-1 all-pairs theta join (a
     * BroadcastNestedLoop, O(n^2) at any scale) with one hash shuffle of
     * 7 rows/doc; recall is exact, not probabilistic. */
-  /** (idx, bit offset, width) for `bits` split into `n` chunks; the
-    * first `bits % n` chunks get one more bit. */
-  private[graft] def hammingChunkLayout(bits: Int, n: Int): Seq[(Int, Int, Int)] = {
-    val base = bits / n
-    val extra = bits % n // first `extra` chunks get one more bit
-    val widths = Seq.tabulate(n)(i => if (i < extra) base + 1 else base)
-    widths.scanLeft(0)(_ + _).zip(widths).zipWithIndex.map {
-      case ((off, w), idx) => (idx, off, w)
-    }
-  }
+  val SimhashChunks: Seq[(Int, Int, Int)] =
+    graft.plans.Pigeonhole.chunkLayout(SimhashBits, HammingMax + 1)
 
-  val SimhashChunks: Seq[(Int, Int, Int)] = hammingChunkLayout(SimhashBits, HammingMax + 1)
-
-  /** Pigeonhole multi-index hamming self-join as a library primitive —
-    * the construction d03 uses (and plans/HammingJoinRule applies to
-    * user-written joins), parameterized for any fingerprint width and
-    * distance: split the `bits`-bit fingerprint into maxH+1 chunks
-    * (pigeonhole: within-distance pairs agree on ≥1 chunk), equi-join
+  /** Pigeonhole multi-index hamming self-join — the construction d03
+    * (one 60-bit word) and m03 (two 60-bit words) use, and
+    * plans/HammingJoinRule applies to user-written joins. The
+    * fingerprint is the little-endian concatenation of the long
+    * columns `fp0, fp1, ...` (word k holds `wordBits(k)` bits, 1 to
+    * 64). It is split into maxH+1 chunks over the CONCATENATED bit
+    * space (pigeonhole: within-distance pairs agree on >= 1 chunk); a
+    * chunk may straddle a word boundary, in which case its value is
+    * assembled from two masked pieces — so a 120-bit fingerprint at
+    * maxH=14 gets 15 uniform 8-bit chunks (256-way buckets) instead of
+    * the 4-bit (16-way) chunks a 60-bit hash is forced into. Equi-join
     * on (chunk idx, chunk value), keep each pair exactly once via the
     * first-match CASE chain (codegen-friendly — HOF lambdas here are
     * interpreted per joined row, measured 10x slower), verify with the
-    * exact bit_count. Recall is exact, not probabilistic. Input `fps`
-    * must have columns (id, fp); output (id_a, id_b, hamming) with
-    * id_a < id_b and hamming <= maxH. Chunk width trades candidate
-    * volume against chunk count: narrow chunks (large maxH) prune less
-    * — callers at 100 TB should keep maxH small relative to `bits`,
-    * exactly like d03's 7x~8-bit layout. */
-  private[graft] def hammingSelfJoin(fps: DataFrame, bits: Int, maxH: Int): DataFrame = {
+    * exact bit_count summed across words. Recall is exact, not
+    * probabilistic. Input (id, fp0, fp1, ...); output (id_a, id_b,
+    * hamming) with id_a < id_b and hamming <= maxH. Chunk width trades
+    * candidate volume against chunk count: narrow chunks (large maxH)
+    * prune less — callers at 100 TB should keep maxH small relative to
+    * the width, exactly like d03's 7x~8-bit layout. */
+  private[graft] def hammingSelfJoin(fps: DataFrame, wordBits: Seq[Int],
+                                     maxH: Int): DataFrame = {
+    import graft.plans.Pigeonhole.{chunkLayout, mask, pieces}
     // Degenerate parameters silently collapse the multi-index into one
     // bucket (an O(n^2) join): maxH+1 > bits yields zero-width chunks
-    // whose mask is 0, and a naive (1L << 64) - 1 wraps to 0 on the
-    // JVM. Reject the former, and compute full-width masks explicitly.
-    require(bits >= 1 && bits <= 64, s"fingerprint width $bits not in [1, 64]")
+    // whose mask is 0. Reject it; full-width masks are explicit.
+    require(wordBits.nonEmpty && wordBits.forall(b => b >= 1 && b <= 64),
+      s"word widths $wordBits must each be in [1, 64]")
+    val bits = wordBits.sum
     require(maxH >= 0 && maxH + 1 <= bits,
       s"maxH=$maxH needs ${maxH + 1} chunks but only $bits bits — " +
         "zero-width chunks would degenerate to a single-bucket join")
-    def mask(w: Int): Long = if (w >= 64) -1L else (1L << w) - 1
-    val defs = hammingChunkLayout(bits, maxH + 1)
-    val chunked = fps.select(col("id"), col("fp"),
-      explode(array(defs.map { case (idx, off, w) =>
-        struct(lit(idx).as("ck"),
-          shiftright(col("fp"), off).bitwiseAND(lit(mask(w))).as("cv"))
-      }: _*)).as("c"))
-      .select(col("id"), col("fp"), col("c.ck").as("ck"), col("c.cv").as("cv"))
-    val a = chunked.select(col("id").as("id_a"), col("fp").as("fa"),
-      col("ck"), col("cv"))
-    val b = chunked.select(col("id").as("id_b"), col("fp").as("fb"),
-      col("ck").as("ck_b"), col("cv").as("cv_b"))
-    def chunkEq(k: Int): Column = {
-      val (_, off, w) = defs(k)
-      (shiftright(col("fa"), off).bitwiseAND(lit(mask(w)))) ===
-        (shiftright(col("fb"), off).bitwiseAND(lit(mask(w))))
-    }
-    val firstMatch = (1 until defs.length)
-      .foldLeft(when(col("ck") === 0, lit(true))) { (acc, idx) =>
-        acc.when(col("ck") === idx, !(0 until idx).map(chunkEq).reduce(_ || _))
-      }
-      .otherwise(lit(false))
-    // predicate order matters: the exact hamming verify (xor+popcount,
-    // ~3 codegen ops) runs BEFORE the first-match chain (O(chunks²)
-    // shift/compare ops) — almost every candidate fails the verify, so
-    // the chain only runs on true pairs. Worth ~15% on m03's 15-chunk
-    // worst case (9.2 s -> 7.9 s verify stage at sf0.1; the remaining
-    // cost is the candidate-row volume itself, which only the chunk
-    // width / threshold trade can change).
-    a.join(b, col("ck") === col("ck_b") && col("cv") === col("cv_b") &&
-        col("id_a") < col("id_b"))
-      .withColumn("hamming", bit_count(col("fa").bitwiseXOR(col("fb"))).cast(LongType))
-      .where(col("hamming") <= maxH)
-      .where(firstMatch)
-      .select("id_a", "id_b", "hamming")
-  }
-
-  /** Multi-word generalization of [[hammingSelfJoin]] for fingerprints
-    * wider than one BIGINT: the fingerprint is the little-endian
-    * concatenation of `wordBits.length` long columns `fp0, fp1, ...`
-    * (word k holds bits `[sum(wordBits.take(k)), +wordBits(k))`; each
-    * word ≤ 63 bits so values stay non-negative and arithmetic
-    * shiftright is safe on both engines). Chunks are laid out over the
-    * CONCATENATED bit space — a chunk may straddle a word boundary, in
-    * which case its value is assembled from two masked pieces — so a
-    * 120-bit fingerprint at maxH=14 gets 15 uniform 8-bit chunks
-    * (256-way buckets) instead of the 4-bit (16-way) chunks a 60-bit
-    * hash is forced into: 16x less birthday-collision candidate volume
-    * on hash-uniform corpora at identical exact recall. This is m03's
-    * scale fix (round-7 verdict); input (id, fp0, fp1, ...), output
-    * (id_a, id_b, hamming) with id_a < id_b, hamming summed across
-    * words. */
-  private[graft] def hammingSelfJoinWide(fps: DataFrame, wordBits: Seq[Int],
-                                         maxH: Int): DataFrame = {
-    require(wordBits.nonEmpty && wordBits.forall(b => b >= 1 && b <= 63),
-      s"word widths $wordBits must each be in [1, 63]")
-    val bits = wordBits.sum
-    require(maxH >= 0 && maxH + 1 <= bits,
-      s"maxH=$maxH needs ${maxH + 1} chunks but only $bits bits")
-    def mask(w: Int): Long = if (w >= 64) -1L else (1L << w) - 1
-    val nWords = wordBits.length
-    val wordOff = wordBits.scanLeft(0)(_ + _) // start bit of each word
-    // chunk value at [off, off+w) of the concatenated space, assembled
-    // from the overlapping piece(s) of the given word columns
+    // chunk value at [off, off+w) of the concatenated space
     def extract(words: Seq[Column], off: Int, w: Int): Column =
-      (0 until nWords).flatMap { k =>
-        val lo = math.max(off, wordOff(k))
-        val hi = math.min(off + w, wordOff(k) + wordBits(k))
-        if (hi <= lo) None
-        else Some(shiftleft(
-          shiftright(words(k), lo - wordOff(k)).bitwiseAND(lit(mask(hi - lo))),
-          lo - off))
+      pieces(wordBits, off, w).map { case (k, right, width, left) =>
+        val piece = shiftright(words(k), right).bitwiseAND(lit(mask(width)))
+        if (left == 0) piece else shiftleft(piece, left)
       }.reduce(_.bitwiseOR(_))
-    val defs = hammingChunkLayout(bits, maxH + 1)
+    val defs = chunkLayout(bits, maxH + 1)
+    val nWords = wordBits.length
     val fpCols = (0 until nWords).map(k => col(s"fp$k"))
     val chunked = fps.select((col("id") +: fpCols) :+
       explode(array(defs.map { case (idx, off, w) =>
@@ -882,8 +809,13 @@ object Dedup {
     val hamming = (0 until nWords)
       .map(k => bit_count(faCols(k).bitwiseXOR(fbCols(k))))
       .reduce(_ + _).cast(LongType)
-    // same predicate order as the single-word kernel: cheap exact
-    // verify first, O(chunks^2) first-match chain only on true pairs
+    // predicate order matters: the exact hamming verify (xor+popcount,
+    // ~3 codegen ops per word) runs BEFORE the first-match chain
+    // (O(chunks²) shift/compare ops) — almost every candidate fails the
+    // verify, so the chain only runs on true pairs. Worth ~15% on m03's
+    // 15-chunk worst case (9.2 s -> 7.9 s verify stage at sf0.1; the
+    // remaining cost is the candidate-row volume itself, which only the
+    // chunk width / threshold trade can change).
     a.join(b, col("ck") === col("ck_b") && col("cv") === col("cv_b") &&
         col("id_a") < col("id_b"))
       .withColumn("hamming", hamming)
@@ -908,8 +840,8 @@ object Dedup {
     // left to byte-based sizing it lands on one core.
     val f = simhashes(s, d).repartition(
       s.sparkContext.defaultParallelism, col("doc_id"))
-    hammingSelfJoin(f.select(col("doc_id").as("id"), col("simhash").as("fp")),
-      SimhashBits, HammingMax)
+    hammingSelfJoin(f.select(col("doc_id").as("id"), col("simhash").as("fp0")),
+      Seq(SimhashBits), HammingMax)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("hamming"))
   }
 
@@ -1094,9 +1026,7 @@ object Dedup {
     def hinted(df: DataFrame): DataFrame = if (labelsBroadcastable) broadcast(df) else df
     var converged = false
     var iter = 0
-    val ccTiming = sys.env.contains("GRAFT_CC_TIMING")
     while (!converged && iter < 64) {
-      val roundT0 = System.nanoTime()
       // pointer-jumping step on the MATERIALIZED label table (both join
       // sides read the checkpoint, so the dual consumption is free):
       // follow label -> label(label). Labels are always vertex ids, so
@@ -1154,8 +1084,6 @@ object Dedup {
       converged = obs.get("shrunk").asInstanceOf[Long] == 0L
       labels = next
       iter += 1
-      if (ccTiming) System.err.println(
-        f"[cc] round $iter ${(System.nanoTime() - roundT0) / 1e9}%.2fs converged=$converged")
     }
     lastCcRounds = iter
     if (!converged)
@@ -1570,12 +1498,12 @@ object Dedup {
     if (over.getLong(0) == 0L) None
     else {
       val worstN = over.getLong(1)
-      Some(s"blockedJaccard: ${over.getLong(0)} block(s) exceed the " +
+      Some(s"blockedJaccardTyped: ${over.getLong(0)} block(s) exceed the " +
         s"JaccardMaxSalts=$JaccardMaxSalts work bound (cap $jaccardCapDocs docs/block); " +
         s"worst block '${over.getString(2)}' has $worstN docs " +
         s"(~${worstN * worstN / 2} intra-block pairs). Task work grows past the " +
         s"${JaccardPairBudget}-pair budget — use the MinHash-LSH path (d02) for this corpus, " +
-        "or set spark.graft.jaccard.strict=true to fail fast.")
+        "or pass strict = true to fail fast.")
     }
   }
 
@@ -1585,48 +1513,39 @@ object Dedup {
     * doc's feature set P times, never the exploded feature-pair join
     * (which is quadratic in shuffle bytes for low-cardinality
     * vocabularies). Emits (doc_a, doc_b, inter_cnt, union_cnt, jaccard).
-    */
-  def blockedJaccard(s: SparkSession, feats: DataFrame,
-                     threshold: Double): DataFrame = {
-    import s.implicits._
-    blockedJaccardTyped(s, feats.as[(String, Long, Array[String])], threshold)
-  }
-
-  /** Typed variant: callers with JVM-side feature extraction (cheaper
-    * than interpreted HOF lambdas for per-char work) pass the Dataset
-    * directly. A pinned round-robin repartition spreads the CPU-bound
-    * sort/replicate map work regardless of source file layout.
+    * Typed input: callers extract features JVM-side (cheaper than
+    * interpreted HOF lambdas for per-char work). A pinned round-robin
+    * repartition spreads the CPU-bound sort/replicate map work
+    * regardless of source file layout.
     *
     * Per-block salt counts come from a map-side-combined groupBy count
     * of the block keys (one cheap extra pass), joined back to the
     * feature stream — Spark auto-broadcasts the tiny count table, the
     * derived P rides along in each replica row, and no block census
-    * ever lands on the driver (only the scalar block COUNT does). */
-  def blockedJaccardTyped(s: SparkSession,
-                          feats: org.apache.spark.sql.Dataset[(String, Long, Array[String])],
-                          threshold: Double): DataFrame =
-    blockedJaccardTyped(s, feats, threshold, None)
-
-  /** `census`: optional precomputed (block_key, count) table. The block
+    * ever lands on the driver (only the scalar block COUNT does).
+    *
+    * `census`: optional precomputed (block_key, count) table. The block
     * census never needs the FEATURES — callers whose feature extraction
     * is expensive (d04's per-char shingling) pass a count over the raw
     * source instead of paying the extraction twice (the typed lambda is
-    * opaque to Catalyst, so it cannot prune it out of the count path). */
+    * opaque to Catalyst, so it cannot prune it out of the count path).
+    * `strict`: throw instead of warning when a block exceeds the
+    * salt-cap work bound ([[jaccardCapWarning]]). */
   def blockedJaccardTyped(s: SparkSession,
                           feats: org.apache.spark.sql.Dataset[(String, Long, Array[String])],
                           threshold: Double,
-                          census: Option[DataFrame]): DataFrame = {
+                          census: Option[DataFrame] = None,
+                          strict: Boolean = false): DataFrame = {
     import s.implicits._
     val par = s.sparkContext.defaultParallelism
     val counts = census.getOrElse(feats.groupByKey(_._1).count().toDF("bk", "bn"))
       .toDF("bk", "bn")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val numBlocks = counts.count()
-    // salt-cap cliff guard: warn (or fail fast under the strict conf)
-    // instead of silently letting task work grow past the pair budget
+    // salt-cap cliff guard: warn (or fail fast when strict) instead of
+    // silently letting task work grow past the pair budget
     jaccardCapWarning(counts).foreach { msg =>
-      if (s.conf.getOption("spark.graft.jaccard.strict").exists(_.toBoolean))
-        throw new IllegalStateException(msg)
+      if (strict) throw new IllegalStateException(msg)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
     }
     val withCnt = feats.toDF("src", "id", "fs")

@@ -326,7 +326,7 @@ object Multimodal {
   /** m03: perceptual near-dup pairs over the media column — dHash per
     * blob (batched partition-local kernel, no shuffle), then the shared
     * pigeonhole multi-index hamming self-join
-    * ([[graft.ops.Dedup.hammingSelfJoinWide]] — the d03 construction
+    * ([[graft.ops.Dedup.hammingSelfJoin]] — the kernel d03 runs, here
     * over the two-word 120-bit fingerprint, 15 uniform chunks of 8
     * bits = 256-way buckets): every pair within hamming
     * [[M03HammingMax]], found by equi-join, never a nested-loop cross.
@@ -346,7 +346,7 @@ object Multimodal {
       .as[(Long, Array[Byte])]
       .map { case (id, blob) => val fp = dhashMedia(blob); (id, fp._1, fp._2) }
       .toDF("id", "fp0", "fp1")
-    Dedup.hammingSelfJoinWide(fps, Seq(DhashWordBits, DhashWordBits), M03HammingMax)
+    Dedup.hammingSelfJoin(fps, Seq(DhashWordBits, DhashWordBits), M03HammingMax)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("hamming"))
       .orderBy("doc_a", "doc_b")
   }
@@ -476,7 +476,7 @@ object Multimodal {
     }.map { case (pid, blob) =>
       val fp = dhashMedia(blob); (pid, fp._1, fp._2)
     }.toDF("id", "fp0", "fp1")
-    Dedup.hammingSelfJoinWide(fps, Seq(DhashWordBits, DhashWordBits), M03HammingMax)
+    Dedup.hammingSelfJoin(fps, Seq(DhashWordBits, DhashWordBits), M03HammingMax)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
       .orderBy("doc_a", "doc_b")
   }

@@ -1177,8 +1177,8 @@ object Pipeline {
     * carries one (pos, n_tok) struct per taken-down row — at ~16 B/row
     * the default cap is ~1.6 MB, far under any broadcast limit; a
     * mass takedown beyond it pays p11's own pinned window exchange
-    * over the slim survivor rows instead). Per-session override:
-    * `spark.graft.p13.broadcastMaxRows`. */
+    * over the slim survivor rows instead). [[p13Over]] takes it as a
+    * parameter. */
   val TakedownBroadcastMaxRows = 100000L
 
   /** (family kind, fingerprint) of the PUBLISHED full placement — the
@@ -1281,26 +1281,22 @@ object Pipeline {
     * for the nightly census entry (p13) and the streamed-feed
     * composition (s18, takedown = the drained event feed), mirroring
     * d17Over/a16Over: the placement tier serves the same liveness
-    * whichever axis the deletion arrives on. */
-  private[graft] def p13Over(s: SparkSession, d: String,
-                             feed: DataFrame, name: String): DataFrame = {
+    * whichever axis the deletion arrives on. Past `broadcastMaxRows`
+    * takedown rows the repair takes the windowed re-rank. */
+  private[graft] def p13Over(s: SparkSession, d: String, feed: DataFrame, name: String,
+                             broadcastMaxRows: Long = TakedownBroadcastMaxRows): DataFrame = {
     val M = graft.core.Materialize
     val placement = placementTable(s, d)
     val hit = placement.join(feed, "doc_id")
       .select(col("shard"), col("pos"), col("n_tok"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // try/finally: the persisted takedown set must not outlive this
-    // call if ANYTHING after the persist throws — including the conf
-    // parse (round-22, the round-21 ADVICE low: a malformed
-    // broadcastMaxRows value threw OUTSIDE the try and leaked the
-    // MEMORY_AND_DISK dataset the finally exists to release)
+    // call if ANYTHING after the persist throws
     try {
-      val maxRows = s.conf.getOption("spark.graft.p13.broadcastMaxRows")
-        .map(_.toLong).getOrElse(TakedownBroadcastMaxRows)
       val nTakedown = hit.count() // takedown-sized action (plan choice)
       val survivors = placement.join(feed, Seq("doc_id"), "left_anti")
       val repaired =
-        if (nTakedown <= maxRows) exciseBroadcast(survivors, hit)
+        if (nTakedown <= broadcastMaxRows) exciseBroadcast(survivors, hit)
         else exciseWindowed(s, survivors)
       val (pk, pfp) = placementArtifact(s, d)
       shipBuild(s, name, repaired, Seq(

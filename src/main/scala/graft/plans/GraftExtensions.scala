@@ -25,8 +25,9 @@ import graft.functions.{CosineSimilarity, NonZeroVector}
   *    Window becomes the bounded-heap TopKPerKeyExec;
   *  - `HammingJoinRule`: `bit_count(a ^ b) <= k` theta joins (planned
   *    as nested loops by stock Spark) become pigeonhole chunk
-  *    equi-joins with exact recall (see graft.ops.Dedup.d03 for the
-  *    hand-written instance of the same construction).
+  *    equi-joins with exact recall (graft.ops.Dedup.hammingSelfJoin
+  *    is the hand-written kernel d03 and m03 call; both share
+  *    `Pigeonhole`'s chunk layout).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

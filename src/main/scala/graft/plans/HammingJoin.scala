@@ -6,6 +6,46 @@ import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan,
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
+/** Pigeonhole chunk geometry, shared by [[HammingJoinRule]] and the
+  * hand-written kernel `graft.ops.Dedup.hammingSelfJoin`: a fingerprint
+  * is the little-endian concatenation of words, split into maxH+1
+  * chunks over the concatenated bit space. */
+object Pigeonhole {
+
+  /** (idx, bit offset, width) for `bits` split into `n` chunks; the
+    * first `bits % n` chunks get one more bit. */
+  def chunkLayout(bits: Int, n: Int): Seq[(Int, Int, Int)] = {
+    val base = bits / n
+    val extra = bits % n
+    val widths = Seq.tabulate(n)(i => if (i < extra) base + 1 else base)
+    widths.scanLeft(0)(_ + _).zip(widths).zipWithIndex.map {
+      case ((off, w), idx) => (idx, off, w)
+    }
+  }
+
+  /** All-ones mask of `w` low bits. `(1L << 64) - 1` is NOT it — JVM
+    * shift counts are mod 64, so it evaluates to 0 and a k=0 join (one
+    * 64-bit chunk) would degenerate into a constant-key cross join.
+    * With -1L the k=0 case becomes an exact equi-join on the whole
+    * fingerprint. */
+  def mask(w: Int): Long = if (w >= 64) -1L else (1L << w) - 1
+
+  /** The pieces of chunk [off, off+w) over words of widths `wordBits`,
+    * as (word, shift right, width, shift left): the chunk value is the
+    * OR over pieces of `((word >> right) & mask(width)) << left`. A
+    * chunk inside one word has one piece with left = 0; a chunk that
+    * straddles a word boundary has two. Arithmetic shift right is safe:
+    * the mask strips any sign-extension bits. */
+  def pieces(wordBits: Seq[Int], off: Int, w: Int): Seq[(Int, Int, Int, Int)] = {
+    val wordOff = wordBits.scanLeft(0)(_ + _)
+    wordBits.indices.flatMap { k =>
+      val lo = math.max(off, wordOff(k))
+      val hi = math.min(off + w, wordOff(k) + wordBits(k))
+      if (hi <= lo) None else Some((k, lo - wordOff(k), hi - lo, lo - off))
+    }
+  }
+}
+
 /** Optimizer rule: similarity self-joins of the form
   *
   *   a JOIN b ON bit_count(a.fp ^ b.fp) <= k [AND extra...]
@@ -18,8 +58,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * have no equi-conjunct, so Spark plans a BroadcastNestedLoopJoin —
   * O(|a|x|b|) comparisons, dead at scale. For k+1 <= 8 chunks per
   * 64-bit word this rule rewrites the join into the pigeonhole
-  * multi-index form (the same construction graft.ops.Dedup.d03 /
-  * hammingSelfJoinWide hand-write): split the concatenated fingerprint
+  * multi-index form (the construction graft.ops.Dedup.hammingSelfJoin
+  * hand-writes for d03 and m03): split the concatenated fingerprint
   * into k+1 chunks (a chunk may straddle a word boundary — its value
   * is assembled from two masked pieces); two fingerprints within
   * hamming k must agree on at least one chunk, so exploding each side
@@ -40,15 +80,6 @@ object HammingJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   val MaxChunksPerWord = 8 // keeps chunk width >= 8 bits (256-way buckets)
   val MaxWords = 4
   private val Marker = "__graft_hj"
-
-  private def chunkDefs(n: Int, bits: Int): Seq[(Int, Int, Int)] = {
-    val base = bits / n
-    val extra = bits % n
-    val widths = Seq.tabulate(n)(i => if (i < extra) base + 1 else base)
-    widths.scanLeft(0)(_ + _).zip(widths).zipWithIndex.map {
-      case ((off, w), idx) => (idx, off, w)
-    }
-  }
 
   /** (word pairs as (leftFp, rightFp), k) when a conjunct is a sum of
     * bit_count(xor) terms <= k with each term's attributes on opposite
@@ -86,25 +117,13 @@ object HammingJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     }
   }
 
-  /** All-ones mask of `w` low bits. `(1L << 64) - 1` is NOT it — JVM
-    * shift counts are mod 64, so it evaluates to 0 and a k=0 rewrite
-    * (one 64-bit chunk) would degenerate into a constant-key cross
-    * join. With -1L the k=0 case becomes an exact equi-join on the
-    * whole fingerprint. */
-  private def mask(w: Int): Long = if (w >= 64) -1L else (1L << w) - 1
-
   /** chunk value at [off, off+w) of the CONCATENATED 64xN-bit space,
-    * assembled from the overlapping masked piece(s) of each word
-    * (arithmetic shiftright is safe: the mask strips any
-    * sign-extension bits). */
+    * assembled from the masked piece(s) of each word. */
   private def extract(fps: Seq[Expression], off: Int, w: Int): Expression =
-    fps.zipWithIndex.flatMap { case (fp, k) =>
-      val lo = math.max(off, k * 64)
-      val hi = math.min(off + w, k * 64 + 64)
-      if (hi <= lo) None
-      else Some(ShiftLeft(
-        BitwiseAnd(ShiftRight(fp, Literal(lo - k * 64)), Literal(mask(hi - lo))),
-        Literal(lo - off)): Expression)
+    Pigeonhole.pieces(fps.map(_ => 64), off, w).map { case (k, right, width, left) =>
+      val piece = BitwiseAnd(ShiftRight(fps(k), Literal(right)),
+        Literal(Pigeonhole.mask(width)))
+      if (left == 0) piece else ShiftLeft(piece, Literal(left))
     }.reduce(BitwiseOr(_, _))
 
   private def chunkArray(fps: Seq[Expression], defs: Seq[(Int, Int, Int)]): Expression =
@@ -138,7 +157,7 @@ object HammingJoinRule extends Rule[LogicalPlan] with PredicateHelper {
         case Seq((_, (words, k))) if k >= 0 && k + 1 <= MaxChunksPerWord * words.size =>
           val lfp = words.map(_._1: Expression)
           val rfp = words.map(_._2: Expression)
-          val defs = chunkDefs(k + 1, 64 * words.size)
+          val defs = Pigeonhole.chunkLayout(64 * words.size, k + 1)
           val structT = StructType(Seq(StructField("ck", IntegerType, nullable = false),
             StructField("cv", LongType, nullable = false)))
           val lOut = AttributeReference(s"${Marker}_l", structT, nullable = false)()

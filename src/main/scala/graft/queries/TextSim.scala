@@ -117,15 +117,9 @@ object TextSim {
       |SELECT probe_id, CAST(rank AS BIGINT) AS rank, neighbor_id, sim
       |FROM ranked WHERE rank <= 5 ORDER BY probe_id, rank""".stripMargin
 
-  /** distinct tokens per doc, with the blocking key. */
-  private def docTokens(s: SparkSession, d: String): DataFrame =
-    documents(s, d)
-      .select(col("doc_id"), col("source"),
-        explode(array_distinct(split(col("text"), " "))).as("w"))
-
   /** Q26: pairwise token-set Jaccard >= 0.5 within the same source.
     * Delegates to the shared salted blocked merge-intersect kernel
-    * (graft.ops.Dedup.blockedJaccard): feature sets shuffled P times,
+    * (graft.ops.Dedup.blockedJaccardTyped): feature sets shuffled P times,
     * pair space of each source block fanned out over P(P+1)/2 tasks —
     * same exact int/int arithmetic, no single-task-per-block straggler. */
   def q26(s: SparkSession, d: String): DataFrame = {

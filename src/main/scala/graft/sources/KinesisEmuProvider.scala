@@ -252,12 +252,10 @@ class KinesisEmuDataWriter(cfg: SinkConfig, valueIsString: Boolean,
   override def commit(): WriterCommitMessage = {
     flusher.flush(); drain() // final flush drains EVERYTHING (fixes quirk (b))
     (epoch, cfg.persistDir) match {
-      case (Some(e), Some(dir)) => KinesisEmu.putRecordsIdempotentPersisted(
-        dir, cfg.streamName, e, partitionId, staged.toSeq)
+      case (_, Some(dir)) => KinesisEmu.putRecordsPersisted(dir, cfg.streamName,
+        epoch.fold(cfg.writeId)(_.toString), partitionId, staged.toSeq)
       case (Some(e), None) =>
         KinesisEmu.putRecordsIdempotent(cfg.streamName, e, partitionId, staged.toSeq)
-      case (None, Some(dir)) => KinesisEmu.putRecordsBatchPersisted(
-        dir, cfg.streamName, cfg.writeId, partitionId, staged.toSeq)
       case (None, None) => () // non-durable batch: records already sent
     }
     staged.clear()
@@ -299,7 +297,6 @@ object ShardOffsets {
 final case class AdmissionCaps(maxRecords: Option[Long], maxBytes: Option[Long]) {
   maxRecords.foreach(n => require(n > 0, s"maxRecordsPerTrigger must be > 0, got $n"))
   maxBytes.foreach(n => require(n > 0, s"maxBytesPerTrigger must be > 0, got $n"))
-  def isUnlimited: Boolean = maxRecords.isEmpty && maxBytes.isEmpty
 }
 
 class KinesisEmuScanBuilder(stream: String, persistDir: Option[String] = None,

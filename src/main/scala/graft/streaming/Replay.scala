@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Streaming GOLDEN-REPLAY driver entries — the correctness rows that
@@ -140,8 +140,8 @@ object Replay {
     * dir leased: lease written before start, refreshed per progress
     * event, unregistered after `drive` returns. */
   private def leasedQueryRun[T](s: SparkSession, base: String)
-      (start: => org.apache.spark.sql.streaming.StreamingQuery)
-      (drive: org.apache.spark.sql.streaming.StreamingQuery => T): T = {
+      (start: => StreamingQuery)
+      (drive: StreamingQuery => T): T = {
     ensureLeaseListener(s)
     touchLease(base)
     val q = start
@@ -302,25 +302,6 @@ object Replay {
         s"spark.graft.stream.stateProvider=$other (want auto|rocksdb|memory)")
     }
 
-  /** Run `body` (which STARTS the admission-tier streaming query) with
-    * the resolved provider set on the session; restored after. The
-    * provider is pinned into the query's checkpoint at first start
-    * (OffsetSeqMetadata), so a resumed checkpoint keeps its provider
-    * regardless of later session conf — consistent across the
-    * multi-pass drains.
-    *
-    * Scoping note: the conf set here is SESSION-scoped, so an
-    * unrelated streaming query started on the SAME session inside the
-    * body's window would inherit (and checkpoint-pin) the RocksDB
-    * provider — which is why the SHIPPED drains (s14, s14DedupDrain)
-    * no longer use this wrapper: since round 19 they build their whole
-    * pipeline on [[admissionSession]]'s child session, whose conf the
-    * parent never sees. This wrapper remains for callers that must run
-    * an admission-tier query on an EXISTING session (e.g. resuming a
-    * pre-round-19 checkpoint whose DataFrames are already bound to
-    * it); concurrent admission drains are serialized here so
-    * interleaved restores cannot strand the session on the wrong
-    * provider. */
   /** CHILD SESSION for an admission-tier drain (round 19, closing the
     * round-18 documented session-inheritance low STRUCTURALLY): the
     * drain's whole pipeline — source, stream-static joins, stateful
@@ -409,30 +390,6 @@ object Replay {
       child
     }
 
-  private val admissionConfLock = new Object
-  private[graft] def withAdmissionStateProvider[T](s: SparkSession)(body: => T): T =
-    admissionStateProvider(s) match {
-      case None => body
-      case Some(cls) => admissionConfLock.synchronized {
-        // changelog checkpointing rides along: without it every
-        // micro-batch uploads a FULL RocksDB snapshot per partition to
-        // the checkpoint (measured +7.5 s on s14's 1.6M-key gate drain);
-        // with it the per-batch upload is the delta and snapshots are
-        // background-maintained — the standard pairing for this
-        // provider
-        val keys = Seq(
-          "spark.sql.streaming.stateStore.providerClass" -> cls,
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-            -> "true")
-        val prev = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-        keys.foreach { case (k, v) => s.conf.set(k, v) }
-        try body finally prev.foreach {
-          case (k, Some(p)) => s.conf.set(k, p)
-          case (k, None) => s.conf.unset(k)
-        }
-      }
-    }
-
   /** Peak state rows (max stateOperators.numRowsTotal over the last
     * replay's progress events) — the measured state-volume diagnostic
     * behind the replay entries' scale claims (s09's "4× tumbling for
@@ -441,17 +398,20 @@ object Replay {
     * stateful operator has run in this JVM. */
   @volatile private[graft] var lastStateRows: Long = -1L
 
-  private def recordStateRows(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+  private def recordStateRows(q: StreamingQuery): Unit =
     lastStateRows = q.recentProgress
       .flatMap(p => Option(p.stateOperators).toSeq.flatten)
       .map(_.numRowsTotal)
       .foldLeft(-1L)(math.max)
 
-  /** one AvailableNow pass of a streaming `df` into `$base/out`,
-    * returned as a batch reader — the single-bootstrap entries'
-    * (s06/s07) whole sink protocol. */
+  /** One AvailableNow pass of a streaming `df` into the parquet sink
+    * `$base/out` (checkpoint `$base/ck`), returned as a batch reader of
+    * the sink — the only code that starts an AvailableNow sink query.
+    * A later call on the same base resumes the checkpoint and drains
+    * only what arrived since. `onDone` sees the finished query. */
   private def sinkRun(s: SparkSession, df: DataFrame, base: String,
-                      partitions: Int = 8): DataFrame = {
+                      partitions: Int = 8,
+                      onDone: StreamingQuery => Unit = _ => ()): DataFrame = {
     withReplayPartitions(s, partitions) {
       leasedQueryRun(s, base) {
         df.writeStream.format("parquet")
@@ -462,6 +422,7 @@ object Replay {
       } { q =>
         q.awaitTermination()
         recordStateRows(q)
+        onDone(q)
       }
     }
     s.read.parquet(s"$base/out")
@@ -478,8 +439,6 @@ object Replay {
                     (pipe: DataFrame => DataFrame): DataFrame = {
     val base = runBase(s, name)
     val sentinelDir = s"$base/sentinel"
-    val outDir = s"$base/out"
-    val ckDir = s"$base/ck"
 
     val maxTsUs: Long = corpusMaxTsUs(s, d)
     def publishSentinel(offsetUs: Long): Unit =
@@ -514,39 +473,29 @@ object Replay {
       col("event_type"))
     val unioned = evStream.select(cols: _*).unionByName(sentStream.select(cols: _*))
 
-    withReplayPartitions(s) {
-      if (!flushRun) {
-        // immediate-emission operators (inner stream-stream joins):
-        // one AvailableNow pass emits everything
+    if (!flushRun) {
+      // immediate-emission operators (inner stream-stream joins): one
+      // AvailableNow pass emits everything
+      sinkRun(s, pipe(unioned), base)
+    } else {
+      // watermark-gated operators need the second sentinel AFTER the
+      // first batch's watermark commit. Until round 8 that was two
+      // AvailableNow queries on one checkpoint — two full engine
+      // bootstraps. One ProcessingTime query does both passes in a
+      // single bootstrap: processAllAvailable() blocks until the
+      // data + sentinel-1 batch is committed (watermark advanced),
+      // the second sentinel lands as a new file, and the second
+      // processAllAvailable() drains the flush batch that finalizes
+      // every still-open session/window. Same batch sequencing, same
+      // watermark history, half the engine starts. (A no-data batch
+      // the engine may insert between the two only finalizes state
+      // earlier — same output rows either way.)
+      withReplayPartitions(s) {
         leasedQueryRun(s, base) {
           pipe(unioned).writeStream
             .format("parquet")
-            .option("path", outDir)
-            .option("checkpointLocation", ckDir)
-            .trigger(Trigger.AvailableNow())
-            .start()
-        } { q =>
-          q.awaitTermination()
-          recordStateRows(q)
-        }
-      } else {
-        // watermark-gated operators need the second sentinel AFTER the
-        // first batch's watermark commit. Until round 8 that was two
-        // AvailableNow queries on one checkpoint — two full engine
-        // bootstraps. One ProcessingTime query does both passes in a
-        // single bootstrap: processAllAvailable() blocks until the
-        // data + sentinel-1 batch is committed (watermark advanced),
-        // the second sentinel lands as a new file, and the second
-        // processAllAvailable() drains the flush batch that finalizes
-        // every still-open session/window. Same batch sequencing, same
-        // watermark history, half the engine starts. (A no-data batch
-        // the engine may insert between the two only finalizes state
-        // earlier — same output rows either way.)
-        leasedQueryRun(s, base) {
-          pipe(unioned).writeStream
-            .format("parquet")
-            .option("path", outDir)
-            .option("checkpointLocation", ckDir)
+            .option("path", s"$base/out")
+            .option("checkpointLocation", s"$base/ck")
             .trigger(Trigger.ProcessingTime(0))
             .start()
         } { q =>
@@ -557,8 +506,8 @@ object Replay {
           q.stop()
         }
       }
+      s.read.parquet(s"$base/out")
     }
-    s.read.parquet(outDir)
   }
 
   /** s01: custom session state through the real streaming engine. */
@@ -1444,17 +1393,7 @@ object Replay {
                                   base: String): DataFrame = {
     pinRun(base) // resumable across passes: exempt from run retention
     val schema = StructType(Seq(StructField("doc_id", LongType)))
-    val feed = s.readStream.schema(schema).parquet(feedDir)
-    withReplayPartitions(s) {
-      leasedQueryRun(s, base) {
-        feed.writeStream.format("parquet")
-          .option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/ck")
-          .trigger(Trigger.AvailableNow())
-          .start()
-      } { q => q.awaitTermination() }
-    }
-    s.read.parquet(s"$base/out")
+    sinkRun(s, s.readStream.schema(schema).parquet(feedDir), base)
   }
 
   /** one AvailableNow drain pass of a (ni, ci) pair-key feed through
@@ -1479,22 +1418,12 @@ object Replay {
       StructField("ni", LongType), StructField("ci", LongType)))
     val feed = s14DedupPairs(as.readStream.schema(schema).parquet(feedDir))
     var finalState = -1L
-    withReplayPartitions(as, AdmissionPartitions) {
-      leasedQueryRun(as, base) {
-        feed.writeStream.format("parquet")
-          .option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/ck")
-          .trigger(Trigger.AvailableNow())
-          .start()
-      } { q =>
-        q.awaitTermination()
-        finalState = q.recentProgress.toSeq
-          .flatMap(p => Option(p.stateOperators).toSeq.flatten.map(_.numRowsTotal)
-            .map(n => (p.batchId, n)))
-          .sortBy(_._1).lastOption.map(_._2).getOrElse(-1L)
-      }
-    }
-    (as.read.parquet(s"$base/out"), finalState)
+    val out = sinkRun(as, feed, base, AdmissionPartitions, onDone = q =>
+      finalState = q.recentProgress.toSeq
+        .flatMap(p => Option(p.stateOperators).toSeq.flatten.map(_.numRowsTotal)
+          .map(n => (p.batchId, n)))
+        .sortBy(_._1).lastOption.map(_._2).getOrElse(-1L))
+    (out, finalState)
   }
 
   /** s16: the STREAMING CORPUS INCREMENT — p12's composition contract

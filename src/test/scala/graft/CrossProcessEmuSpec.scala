@@ -56,7 +56,7 @@ class CrossProcessEmuSpec extends AnyFunSuite with BeforeAndAfterAll {
     // phase 1: parent commits epochs 0-4 (with a local retry each)
     var parentWins = 0
     for (e <- 0L to 4L; _ <- 1 to 2)
-      if (KinesisEmu.putRecordsIdempotentPersisted(dir, stream, e, 0,
+      if (KinesisEmu.putRecordsPersisted(dir, stream, e.toString, 0,
         CrossProcessCommitter.recordsFor(e))) parentWins += 1
     assert(parentWins == 5, "exactly one local win per epoch")
 
@@ -65,7 +65,7 @@ class CrossProcessEmuSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the parent on 5-12, 3 attempts per epoch on each side
     val child = spawnChild(dir, stream, "0", "12", "3")
     for (e <- 5L to 12L; _ <- 1 to 3)
-      if (KinesisEmu.putRecordsIdempotentPersisted(dir, stream, e, 0,
+      if (KinesisEmu.putRecordsPersisted(dir, stream, e.toString, 0,
         CrossProcessCommitter.recordsFor(e))) parentWins += 1
     val out = await(child)
     val childWins = "CHILD_DONE wins=(\\d+)".r.findFirstMatchIn(out)
@@ -93,7 +93,7 @@ class CrossProcessEmuSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("orphaned attempt files (crash between stage and token) are invisible and swept") {
     val dir = Files.createTempDirectory("graft_xproc_orphan").toString
     FileEmuStore.createStream(dir, "o", numShards = 1)
-    assert(KinesisEmu.putRecordsIdempotentPersisted(dir, "o", 0, 0,
+    assert(KinesisEmu.putRecordsPersisted(dir, "o", "0", 0,
       CrossProcessCommitter.recordsFor(0)))
     // fabricate a crash residue: a visible attempt for epoch 99 whose
     // token was never created
@@ -111,6 +111,29 @@ class CrossProcessEmuSpec extends AnyFunSuite with BeforeAndAfterAll {
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 3600L * 1000))
     FileEmuStore.sweepOrphans(dir, "o")
     assert(!Files.exists(orphan))
+  }
+
+  test("the durable put rejects an over-limit batch like the in-memory put: no token, no data") {
+    val dir = Files.createTempDirectory("graft_xproc_limit").toString
+    FileEmuStore.createStream(dir, "lim", numShards = 2)
+    KinesisEmu.createStream("lim-mem", shards = 2)
+    // one record over the 1 MiB record limit among valid ones
+    val batch = CrossProcessCommitter.recordsFor(0) :+ graft.ingest.KinesisRecord(
+      "big", new Array[Byte](graft.ingest.Limits.RecordSizeLimit))
+    try {
+      val inMemory = intercept[IllegalArgumentException] {
+        KinesisEmu.putRecords("lim-mem", batch)
+      }
+      val durable = intercept[IllegalArgumentException] {
+        KinesisEmu.putRecordsPersisted(dir, "lim", "0", 0, batch)
+      }
+      assert(durable.getMessage.contains("ValidationException"))
+      assert(durable.getMessage == inMemory.getMessage)
+      assert(!FileEmuStore.isCommitted(dir, "lim", "0", 0))
+      assert(Files.list(Paths.get(dir, "lim", "commits")).count() == 0, "no token")
+      assert(Files.list(Paths.get(dir, "lim", "data")).count() == 0, "no data file")
+      assert(KinesisEmu.stream("lim-mem").get.allRecords.isEmpty)
+    } finally KinesisEmu.deleteStream("lim-mem")
   }
 
   test("Spark streaming sink commits epochs through the durable protocol (persistDir option)") {
@@ -140,7 +163,7 @@ class CrossProcessEmuSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a late cross-process retry of an already-committed epoch is a no-op
     val epochs = FileEmuStore.loadCommitted(dir, "sps").map(_.key).distinct
     assert(epochs.nonEmpty)
-    assert(!KinesisEmu.putRecordsIdempotentPersisted(dir, "sps", epochs.head.toLong, 0,
+    assert(!KinesisEmu.putRecordsPersisted(dir, "sps", epochs.head, 0,
       CrossProcessCommitter.recordsFor(0)))
     assert(KinesisEmu.loadPersisted(dir, "sps").allRecords.size == recs.size)
   }
@@ -176,7 +199,7 @@ class CrossProcessEmuSpec extends AnyFunSuite with BeforeAndAfterAll {
     val writeIds = FileEmuStore.loadCommitted(dir, "bat")
       .map(_.key).filter(_.startsWith("b")).distinct
     assert(writeIds.size == 2, s"expected 2 batch writeIds, got $writeIds")
-    assert(!KinesisEmu.putRecordsBatchPersisted(dir, "bat", writeIds.head, 0,
+    assert(!KinesisEmu.putRecordsPersisted(dir, "bat", writeIds.head, 0,
       CrossProcessCommitter.recordsFor(0)))
     assert(KinesisEmu.loadPersisted(dir, "bat").allRecords.size == after2.size)
   }
@@ -195,7 +218,7 @@ class CrossProcessEmuSpec extends AnyFunSuite with BeforeAndAfterAll {
           def run(): Unit = {
             barrier.await() // all threads hit the token race together
             for (e <- 0L until epochs.toLong)
-              if (KinesisEmu.putRecordsIdempotentPersisted(dir, "race", e, 0,
+              if (KinesisEmu.putRecordsPersisted(dir, "race", e.toString, 0,
                 CrossProcessCommitter.recordsFor(e))) wins.incrementAndGet()
           }
         })
@@ -216,13 +239,13 @@ class CrossProcessEmuSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = Files.createTempDirectory("graft_xproc_compact").toString
     FileEmuStore.createStream(dir, "cp", numShards = 2)
     for (e <- 0L until 20L)
-      assert(KinesisEmu.putRecordsIdempotentPersisted(dir, "cp", e, 0,
+      assert(KinesisEmu.putRecordsPersisted(dir, "cp", e.toString, 0,
         CrossProcessCommitter.recordsFor(e)))
     // a second partition, and a legitimately EMPTY committed batch
     // (Spark emits empty partitions routinely)
-    assert(FileEmuStore.commitEpoch(dir, "cp", 7L, 1,
+    assert(FileEmuStore.commit(dir, "cp", "7", 1,
       CrossProcessCommitter.recordsFor(107L), 42L))
-    assert(FileEmuStore.commitEpoch(dir, "cp", 20L, 0, Seq.empty, 0L))
+    assert(FileEmuStore.commit(dir, "cp", "20", 0, Seq.empty, 0L))
     def snapshot() = FileEmuStore.loadCommitted(dir, "cp").map(b =>
       (b.key, b.partition, b.records.map { case (k, d, ts) => (k, d.toSeq, ts) }))
     val before = snapshot()
@@ -256,7 +279,7 @@ class CrossProcessEmuSpec extends AnyFunSuite with BeforeAndAfterAll {
     // exactly-once SURVIVES token deletion — in-process and from a real
     // second JVM: the child retries every compacted epoch (all must
     // no-op via segment coverage) and appends 21-25
-    assert(!KinesisEmu.putRecordsIdempotentPersisted(dir, "cp", 3L, 0,
+    assert(!KinesisEmu.putRecordsPersisted(dir, "cp", "3", 0,
       CrossProcessCommitter.recordsFor(3)))
     val out = await(spawnChild(dir, "cp", "0", "25", "1"))
     val childWins = "CHILD_DONE wins=(\\d+)".r.findFirstMatchIn(out)
@@ -273,7 +296,7 @@ class CrossProcessEmuSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // retention horizon: a token younger than the horizon is NOT folded
     // and stays readable alongside the segment
-    assert(KinesisEmu.putRecordsIdempotentPersisted(dir, "cp", 99L, 0,
+    assert(KinesisEmu.putRecordsPersisted(dir, "cp", "99", 0,
       CrossProcessCommitter.recordsFor(99)))
     assert(FileEmuStore.compact(dir, "cp", minAgeMillis = 3600L * 1000) == 0)
     assert(count("commits", ".token") == 1)
@@ -300,7 +323,7 @@ class CrossProcessEmuSpec extends AnyFunSuite with BeforeAndAfterAll {
             val part = rnd.nextInt(2)
             val recs =
               if (rnd.nextBoolean()) CrossProcessCommitter.recordsFor(nextEpoch) else Seq.empty
-            assert(FileEmuStore.commitEpoch(dir, "pr", nextEpoch, part, recs, step.toLong))
+            assert(FileEmuStore.commit(dir, "pr", nextEpoch.toString, part, recs, step.toLong))
             model((nextEpoch.toString, part)) = recs.map(r => (r.partitionKey, r.data.toSeq, step.toLong))
             nextEpoch += 1
           case 6 | 7 if model.nonEmpty => // retry of a committed epoch — must no-op

@@ -162,17 +162,14 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(msg.get.contains("huge"), s"worst block not named: ${msg.get}")
     assert(Dedup.jaccardCapWarning(Seq(("ok", cap)).toDF("bk", "bn")).isEmpty,
       "at-cap block must NOT trip the census")
-    // strict conf: the kernel must throw during planning, not run over-cap
+    // strict mode: the kernel must throw during planning, not run over-cap
     val feats = s.range(cap + 1)
       .select(lit("huge").as("src"), col("id"), array().cast("array<string>").as("fs"))
       .as[(String, Long, Array[String])]
-    s.conf.set("spark.graft.jaccard.strict", "true")
-    try {
-      val ex = intercept[IllegalStateException] {
-        Dedup.blockedJaccardTyped(s, feats, 0.5)
-      }
-      assert(ex.getMessage.contains("JaccardMaxSalts"))
-    } finally s.conf.unset("spark.graft.jaccard.strict")
+    val ex = intercept[IllegalStateException] {
+      Dedup.blockedJaccardTyped(s, feats, 0.5, strict = true)
+    }
+    assert(ex.getMessage.contains("JaccardMaxSalts"))
   }
 
   test("property: connectedComponents == union-find on random graphs") {

@@ -27,6 +27,29 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
       (64L * 1024 * 1024).toString)
   }
 
+  test("every spark.graft conf read in src/main has a README runbook row, and no other key does") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    def lines(p: Path): Seq[String] = Files.readAllLines(p).asScala.toSeq
+    val literal = "\"spark\\.graft\\.([A-Za-z0-9_.]+)\"".r
+    val walk = Files.walk(Paths.get("src/main"))
+    val read = try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap(lines)
+      .filterNot { l =>
+        val t = l.trim
+        t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+      }
+      .flatMap(l => literal.findAllMatchIn(l).map(_.group(1)))
+      .toSet
+    finally walk.close()
+    val row = "^\\| `spark\\.graft\\.([A-Za-z0-9_.]+)` \\|".r
+    val documented = lines(Paths.get("README.md"))
+      .flatMap(l => row.findFirstMatchIn(l).map(_.group(1))).toSet
+    assert(read.nonEmpty)
+    assert(read == documented, s"read without a row: ${read -- documented}; " +
+      s"row without a read: ${documented -- read}")
+  }
+
   test("a Rail sample of q03 at sf0.001 dumps a stage table and the final plan") {
     val sf = "/root/testdata/sf0.001"
     val (name, fn) = SparkEntry.queries.find(_._1.startsWith("q03")).get

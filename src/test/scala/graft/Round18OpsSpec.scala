@@ -178,7 +178,7 @@ class Round18OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def mkStore(name: String, payload: String): String = {
       val d = s"$root/$name"
       FileEmuStore.createStream(d, "s", numShards = 1)
-      assert(FileEmuStore.commitEpoch(d, "s", 0L, 0,
+      assert(FileEmuStore.commit(d, "s", "0", 0,
         Seq(KinesisRecord("k", payload.getBytes("UTF-8"))), 1L))
       d
     }

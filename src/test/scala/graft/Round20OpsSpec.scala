@@ -125,12 +125,13 @@ class Round20OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     val P = graft.ops.Pipeline
     val viaBroadcast = P.p13(s, sf).collect().map(_.toSeq).toSeq
-    s.conf.set("spark.graft.p13.broadcastMaxRows", "0")
-    try {
-      val viaWindow = P.p13(s, sf).collect().map(_.toSeq).toSeq
-      assert(viaWindow === viaBroadcast,
-        "the two repair plans must ship identical orders")
-    } finally s.conf.unset("spark.graft.p13.broadcastMaxRows")
+    // p13's own takedown feed, with the broadcast cap at 0
+    val feed = graft.core.Tables.documents(s, sf).select(col("doc_id"))
+      .where(col("doc_id") % graft.ops.Dedup.IncrementalMod === P.TakedownRem)
+    val viaWindow = P.p13Over(s, sf, feed, "p13", broadcastMaxRows = 0)
+      .collect().map(_.toSeq).toSeq
+    assert(viaWindow === viaBroadcast,
+      "the two repair plans must ship identical orders")
   }
 
   test("s14 arrival side: a round-robin exchange to defaultParallelism " +

@@ -134,13 +134,13 @@ class Round7OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (i + 1000L) -> (f ^ (1L << rnd.nextInt(60)) ^ (1L << rnd.nextInt(60)))
     }
     val all = base ++ dups
-    val fps = all.toDF("id", "fp").repartition(4)
+    val fps = all.toDF("id", "fp0").repartition(4)
     val brute = for {
       (ia, fa) <- all; (ib, fb) <- all
       if ia < ib
     } yield (ia, ib, java.lang.Long.bitCount(fa ^ fb))
     for (maxH <- Seq(0, 3, 6, 14)) {
-      val got = Dedup.hammingSelfJoin(fps, 60, maxH)
+      val got = Dedup.hammingSelfJoin(fps, Seq(60), maxH)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2).toInt)).toSet
       val want = brute.filter(_._3 <= maxH).toSet
       assert(got == want, s"maxH=$maxH: got ${got.size} want ${want.size}")
@@ -252,7 +252,7 @@ class Round7OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     } yield (ia, ib,
       java.lang.Long.bitCount(a0 ^ b0) + java.lang.Long.bitCount(a1 ^ b1))
     for (maxH <- Seq(0, 2, 14)) {
-      val got = Dedup.hammingSelfJoinWide(fps, Seq(60, 60), maxH)
+      val got = Dedup.hammingSelfJoin(fps, Seq(60, 60), maxH)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2).toInt)).toSet
       val want = brute.filter(_._3 <= maxH).toSet
       assert(got == want, s"maxH=$maxH: got ${got.size} want ${want.size}")
@@ -263,18 +263,18 @@ class Round7OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions._
     val s = spark
     import s.implicits._
-    val fps = Seq((1L, 2L)).toDF("id", "fp")
+    val fps = Seq((1L, 2L)).toDF("id", "fp0")
     // maxH+1 > bits would yield zero-width chunks (mask 0 -> one giant
     // bucket -> silent O(n^2) join); the guard must reject it
-    intercept[IllegalArgumentException] { Dedup.hammingSelfJoin(fps, 4, 4) }
-    intercept[IllegalArgumentException] { Dedup.hammingSelfJoin(fps, 65, 1) }
+    intercept[IllegalArgumentException] { Dedup.hammingSelfJoin(fps, Seq(4), 4) }
+    intercept[IllegalArgumentException] { Dedup.hammingSelfJoin(fps, Seq(65), 1) }
     val wide = Seq((1L, 2L, 3L)).toDF("id", "fp0", "fp1")
-    intercept[IllegalArgumentException] { Dedup.hammingSelfJoinWide(wide, Seq(60, 64), 1) }
-    intercept[IllegalArgumentException] { Dedup.hammingSelfJoinWide(wide, Seq(2, 2), 4) }
+    intercept[IllegalArgumentException] { Dedup.hammingSelfJoin(wide, Seq(60, 65), 1) }
+    intercept[IllegalArgumentException] { Dedup.hammingSelfJoin(wide, Seq(2, 2), 4) }
     // bits=64, maxH=0: a single full-width chunk — the (1L<<64)-1 wrap
     // would mask to 0; the explicit mask keeps exact equality
-    val full = Seq((1L, -1L), (2L, -1L), (3L, 0L)).toDF("id", "fp")
-    val got = Dedup.hammingSelfJoin(full, 64, 0)
+    val full = Seq((1L, -1L), (2L, -1L), (3L, 0L)).toDF("id", "fp0")
+    val got = Dedup.hammingSelfJoin(full, Seq(64), 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((1L, 2L)))
   }

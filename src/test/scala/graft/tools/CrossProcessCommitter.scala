@@ -24,10 +24,10 @@ object CrossProcessCommitter {
     val Array(dir, stream, from, to, reps) = args
     var wins = 0
     for (e <- from.toLong to to.toLong; _ <- 1 to reps.toInt)
-      if (KinesisEmu.putRecordsIdempotentPersisted(dir, stream, e, 0, recordsFor(e)))
+      if (KinesisEmu.putRecordsPersisted(dir, stream, e.toString, 0, recordsFor(e)))
         wins += 1
     // parseable by the parent; FileEmuStore state is the real assertion
     println(s"CHILD_DONE wins=$wins committed=${
-      (from.toLong to to.toLong).count(e => FileEmuStore.isCommitted(dir, stream, e, 0))}")
+      (from.toLong to to.toLong).count(e => FileEmuStore.isCommitted(dir, stream, e.toString, 0))}")
   }
 }
