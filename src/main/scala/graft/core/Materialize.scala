@@ -128,13 +128,8 @@ object Materialize {
     val lines = Option(listingCache.get(key))
       .collect { case (t, sig, ls) if now - t < ttl && sig == rootSig => ls }
       .getOrElse {
-        val files = scala.collection.mutable.ArrayBuffer.empty[String]
-        val it = fs.listFiles(root, true)
-        while (it.hasNext) {
-          val f = it.next()
-          files += s"${f.getPath}|${f.getLen}|${f.getModificationTime}"
-        }
-        val ls = files.sorted.toSeq
+        val ls = filesUnder(fs, root)
+          .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}").toSeq.sorted
         listingCache.put(key, (now, rootSig, ls))
         ls
       }
@@ -248,13 +243,8 @@ object Materialize {
 
   private def hasDataFiles(fs: org.apache.hadoop.fs.FileSystem,
                            outPath: org.apache.hadoop.fs.Path): Boolean =
-    try {
-      val it = fs.listFiles(outPath, true)
-      var found = false
-      while (!found && it.hasNext)
-        if (it.next().getPath.getName != "_SUCCESS") found = true
-      found
-    } catch { case scala.util.control.NonFatal(_) => false }
+    try filesUnder(fs, outPath).exists(_.getPath.getName != "_SUCCESS")
+    catch { case scala.util.control.NonFatal(_) => false }
 
   /** CONSUMED-ARTIFACT LEDGER (round 19): every published-table read
     * that goes through [[readTable]]/[[readOrCompute]] appends its
@@ -797,15 +787,20 @@ object Materialize {
   /** Recursive (path, len, mtime) listing — the byte-untouched
     * snapshot both retention sweeps compare pins against. */
   private def fileStatusList(fs: org.apache.hadoop.fs.FileSystem,
-                             p: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      buf += ((f.getPath.toString, f.getLen, f.getModificationTime))
+                             p: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] =
+    filesUnder(fs, p).map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      .toSeq.sortBy(_._1)
+
+  /** The files under `p`, recursively and lazily (a file lists itself;
+    * a missing `p` throws FileNotFoundException). Plain `listStatus`
+    * rather than `listFiles`: the LocatedFileStatus that `listFiles`
+    * builds reads owner and permission, which on a local file system
+    * without the Hadoop native library starts one `ls -ld` per file. */
+  private def filesUnder(fs: org.apache.hadoop.fs.FileSystem,
+                         p: org.apache.hadoop.fs.Path): Iterator[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(p).iterator.flatMap { st =>
+      if (st.isDirectory) filesUnder(fs, st.getPath) else Iterator.single(st)
     }
-    buf.sortBy(_._1).toSeq
-  }
 
   /** Delete `.inprogress-*` siblings older than the staleness horizon
     * (default one hour; `spark.graft.mat.sweepAgeMs` overrides) —

@@ -231,34 +231,38 @@ object Replay {
     *
     * Checkpoint FILE CHECKSUMS are also scoped off here (round 22):
     * Spark 4.1's ChecksumCheckpointFileManager doubles every
-    * offset/commit/state-delta file op and, on a local filesystem
-    * without the Hadoop native library, its permission/chmod calls FORK
-    * A SHELL per file (thread dumps: ChecksumCheckpointFileManager
-    * threads pinned in hadoop.util.Shell.runCommand through the whole
-    * replay window) — hundreds of process forks per replay of
-    * single-use scratch whose durability class is shuffle files, not
-    * published artifacts (it is written, read back in the same call,
-    * and retention-swept; on the default tmpfs root a corruption the
-    * checksum would catch cannot outlive the run that made it).
-    * `spark.graft.replay.checkpointChecksum=true` restores the Spark
-    * default for a deployment that points spark.graft.replay.root at a
-    * durable store and wants end-to-end checkpoint integrity there.
-    * Result-neutral by construction (file-manager wrapper only). */
+    * offset/commit/state-delta file op. That scratch is written, read
+    * back in the same call and retention-swept; on the default tmpfs
+    * root a corruption the checksum would catch cannot outlive the run
+    * that made it. `spark.graft.replay.checkpointChecksum=true` restores
+    * the Spark default for a deployment that points
+    * spark.graft.replay.root at a durable store and wants end-to-end
+    * checkpoint integrity there.
+    *
+    * The checkpoint FILE MANAGER is scoped to [[LocalCheckpointFileManager]]
+    * for the run: Spark's default starts child processes for every
+    * checkpoint file on a host without the Hadoop native library.
+    * Metadata logs and state stores (the admission drains' RocksDB
+    * changelogs too) resolve the class through the session's hadoop
+    * conf; a manager class the deployment already set is left
+    * untouched. Spark's checksum wrapper sits on top of either manager.
+    * Every key is restored (or unset) afterwards. Result-neutral by
+    * construction (file-manager choice only). */
   private def withReplayPartitions[T](s: SparkSession, n: Int = 8)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val ck = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
     val wantCk = s.conf.getOption("spark.graft.replay.checkpointChecksum")
       .exists(_.trim.equalsIgnoreCase("true"))
-    val prev = s.conf.get(key)
-    val prevCk = s.conf.getOption(ck)
-    s.conf.set(key, n.toString)
-    s.conf.set(ck, wantCk.toString)
-    try body finally {
-      s.conf.set(key, prev)
-      prevCk match {
-        case Some(v) => s.conf.set(ck, v)
-        case None => s.conf.unset(ck)
-      }
+    val fm = LocalCheckpointFileManager.ClassKey
+    val deploymentFm = s.conf.getOption(fm).isDefined ||
+      s.sparkContext.hadoopConfiguration.get(fm) != null
+    val scoped = Seq(
+      "spark.sql.shuffle.partitions" -> n.toString,
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> wantCk.toString) ++
+      (if (deploymentFm) Nil else Seq(fm -> classOf[LocalCheckpointFileManager].getName))
+    val prev = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
+    scoped.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -409,9 +413,9 @@ object Replay {
     * the sink — the only code that starts an AvailableNow sink query.
     * A later call on the same base resumes the checkpoint and drains
     * only what arrived since. `onDone` sees the finished query. */
-  private def sinkRun(s: SparkSession, df: DataFrame, base: String,
-                      partitions: Int = 8,
-                      onDone: StreamingQuery => Unit = _ => ()): DataFrame = {
+  private[graft] def sinkRun(s: SparkSession, df: DataFrame, base: String,
+                             partitions: Int = 8,
+                             onDone: StreamingQuery => Unit = _ => ()): DataFrame = {
     withReplayPartitions(s, partitions) {
       leasedQueryRun(s, base) {
         df.writeStream.format("parquet")
