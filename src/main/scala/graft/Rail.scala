@@ -23,7 +23,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * sample's stage table (Bench's [[Bench.StageRecorder]]) and the
   * executed plan of the timed count itself, so AQE's final plan is what
   * the file shows. One JSON line per sample goes to stdout:
-  * {"rail":{"q",...,"sec","load1m","load1m_end","pub","dump"}}.
+  * {"rail":{"q",...,"sec","load1m","load1m_end","pub","compiles","compile_ms","dump"}},
+  * where `compiles`/`compile_ms` count the Janino compiles (and their
+  * time) the sample triggered — read once each side of the timed region.
   */
 object Rail {
 
@@ -64,6 +66,14 @@ object Rail {
 
   private def r3(v: Double): Double = math.round(v * 1000) / 1000.0
 
+  /** JVM-wide Janino compiles so far and their total time in ms: Spark
+    * counts compiles in `CodegenMetrics` and sums their nanoseconds in
+    * `CodeGenerator.compileTime` (the histogram keeps no sum). A sample
+    * that compiles nothing ran entirely on cached generated classes. */
+  def codegen(): (Long, Double) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e6)
+
   /** One timed sample of `name`; writes its dump to `dump` and returns
     * the rail JSON line. */
   def sample(spark: SparkSession, probe: Probe, name: String,
@@ -72,15 +82,20 @@ object Rail {
     probe.reset()
     val load0 = Bench.loadAvg
     val pub0 = graft.core.Materialize.publishCount
+    val (compiles0, compileMs0) = codegen()
     spark.sparkContext.setJobDescription(s"rail:$name")
     val t0 = System.nanoTime()
     val rows = fn(spark, sfDir).count()
     val secs = (System.nanoTime() - t0) / 1e9
+    val (compiles1, compileMs1) = codegen()
+    val compiles = compiles1 - compiles0
+    val compileMs = r3(compileMs1 - compileMs0)
     val load1 = Bench.loadAvg
     val pub = graft.core.Materialize.publishCount - pub0
     val (stages, qe) = probe.read()
     val cpus = spark.sparkContext.defaultParallelism
-    val text = s"== $name rows=$rows sec=${r3(secs)} sf=$sfDir cpus=$cpus ==\n" +
+    val text = s"== $name rows=$rows sec=${r3(secs)} sf=$sfDir cpus=$cpus " +
+      s"compiles=$compiles compile_ms=$compileMs ==\n" +
       s"== Stages (${stages.size}) ==\n" +
       stages.sortBy(_.id).map(_.json + "\n").mkString +
       qe.fold("== no count plan observed ==\n")(_.explainString(FormattedMode)) + "\n"
@@ -89,6 +104,7 @@ object Rail {
       text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     s"""{"rail":{"q":"$name","sec":${r3(secs)},""" +
       s""""load1m":${r3(load0)},"load1m_end":${r3(load1)},"pub":$pub,""" +
+      s""""compiles":$compiles,"compile_ms":$compileMs,""" +
       s""""cpus":$cpus,"sf":"$sfDir","dump":"${dump.getPath}"}}"""
   }
 

@@ -6,7 +6,10 @@ import org.apache.spark.sql.SparkSession
   * CLI, every test suite and every diagnostic tool plan with the same
   * planner under the same conf table:
   *
-  *  - `GraftExtensions` (the shipped SQL functions and plan rules);
+  *  - `GraftExtensions` (the shipped SQL functions and plan rules), which
+  *    also defaults `spark.sql.codegen.cache.maxEntries` to 1000 before
+  *    the first SparkContext starts, so generated code is compiled once
+  *    per JVM rather than once per pass (`GraftExtensions.CodegenCacheEntries`);
   *  - `local[cpus]`, one shuffle partition per core;
   *  - UTC session time zone;
   *  - Spark UI off;

@@ -31,9 +31,13 @@ object KinesisEmu {
 
   final case class PutResult(shardId: String, sequenceNumber: Long)
 
+  /** One shard's log. A record's sequence number is its index in the
+    * log: both are assigned under the log lock, so a reader that sees
+    * `latestSequence` sees every record up to it. */
   final class Shard(val shardId: String) {
-    private val seq = new AtomicLong(0L)
     private[KinesisEmu] val log = new ArrayBuffer[StoredRecord]()
+    // log.size, published after each append — guarded by `log` for writes
+    @volatile private var size = 0L
     // rate window: (epoch second, records, bytes) — guarded by `log`
     private var winSec = Long.MinValue
     private var winRecs = 0L
@@ -50,14 +54,19 @@ object KinesisEmu {
         else { winRecs += 1; winBytes += bytes; true }
       }
 
-    def append(key: String, data: Array[Byte], clockNanos: Long): PutResult = {
-      val s = seq.getAndIncrement()
-      val rec = StoredRecord(shardId, s, key, data, clockNanos)
-      log.synchronized { log += rec }
-      PutResult(shardId, s)
-    }
+    def append(key: String, data: Array[Byte], clockNanos: Long): PutResult =
+      log.synchronized {
+        val s = size
+        log += StoredRecord(shardId, s, key, data, clockNanos)
+        size = s + 1
+        PutResult(shardId, s)
+      }
     def records: Seq[StoredRecord] = log.synchronized { log.toVector }
-    def latestSequence: Long = seq.get() - 1
+    /** The records with sequence numbers in `[from, until)`, in order. */
+    def slice(from: Long, until: Long): Seq[StoredRecord] = log.synchronized {
+      log.slice(math.max(0L, from).toInt, math.min(until, size).toInt).toVector
+    }
+    def latestSequence: Long = size - 1
   }
 
   final class Stream(val name: String, val numShards: Int) {

@@ -28,9 +28,14 @@ import graft.functions.{CosineSimilarity, NonZeroVector}
   *    equi-joins with exact recall (graft.ops.Dedup.hammingSelfJoin
   *    is the hand-written kernel d03 and m03 call; both share
   *    `Pigeonhole`'s chunk layout).
+  *
+  * It also sizes Spark's compiled-class cache before the session's
+  * SparkContext exists; see [[GraftExtensions.CodegenCacheEntries]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
+    System.getProperties.putIfAbsent(
+      GraftExtensions.CodegenCacheKey, GraftExtensions.CodegenCacheEntries.toString)
     e.injectFunction((
       new FunctionIdentifier("cosine_similarity"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),
@@ -60,6 +65,27 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => HammingJoinRule)
     e.injectPlannerStrategy(_ => TopKStrategy)
   }
+}
+
+object GraftExtensions {
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** Default for [[CodegenCacheKey]] (Spark's is 100). Spark keeps every
+    * class Janino compiles in ONE JVM-wide cache, sized once when
+    * `CodeGenerator` first runs from this static conf. A graft working
+    * set is larger than 100 sources (the perfbench mix generates ~190),
+    * and Guava splits the cache into 4 LRU segments of `maxEntries/4`,
+    * so at 100 each pass evicted and recompiled what the last pass had
+    * compiled, and C2 then recompiled every freshly loaded class.
+    *
+    * It is set as a JVM system property, and only if absent:
+    * `Builder.withExtensions` runs `apply` at once, before `build()`
+    * creates the `SparkConf` that reads `spark.*` system properties, so
+    * the first SparkContext (and with it the cache) sees it. A value
+    * from `.config`, `--conf` or `-D` still wins. Sessions that load
+    * graft through `spark.sql.extensions` apply it after their
+    * SparkContext exists and must set the conf themselves. */
+  val CodegenCacheEntries = 1000
 }
 
 /** cosine_similarity(x, x) == 1.0 for any non-degenerate x; fold the

@@ -313,15 +313,16 @@ class KinesisEmuScan(stream: String, persistDir: Option[String] = None,
 }
 
 /** Executor-side view of a durable stream: (re)load the shared
-  * directory into this JVM's emu registry when the reader needs
-  * sequences the current view does not hold — a remote executor starts
-  * empty and hydrates here. Synchronized: one reload serves all
-  * partitions of a micro-batch. */
+  * directory into this JVM's emu registry when the current view lacks
+  * the stream or any shard's records below its offset in `need` — a
+  * remote executor starts empty and hydrates here. Synchronized: one
+  * reload serves all partitions of a micro-batch. */
 object DurableStreamView {
-  def ensure(dir: String, stream: String, needUntil: Long): Unit = synchronized {
-    val have = KinesisEmu.stream(stream)
-      .map(_.shards.map(_.latestSequence + 1).sum).getOrElse(-1L)
-    if (have < needUntil) KinesisEmu.loadPersisted(dir, stream)
+  def ensure(dir: String, stream: String, need: Map[String, Long]): Unit = synchronized {
+    val stale = KinesisEmu.stream(stream).forall { st =>
+      st.shards.exists(sh => sh.latestSequence + 1 < need.getOrElse(sh.shardId, 0L))
+    }
+    if (stale) KinesisEmu.loadPersisted(dir, stream)
   }
 }
 
@@ -332,18 +333,28 @@ class KinesisEmuMicroBatchStream(stream: String, persistDir: Option[String] = No
   import org.apache.spark.sql.connector.read.streaming.{
     CompositeReadLimit, ReadLimit, ReadMaxBytes, ReadMaxRows}
 
-  private def shards = {
-    // durable streams: refresh the driver's view so cross-process
-    // commits made since the last trigger become visible offsets
-    persistDir.foreach(d => KinesisEmu.loadPersisted(d, stream))
+  /** This JVM's view of the stream's shards, hydrated from a durable
+    * stream's directory only where it lacks offsets in `need`. */
+  private def view(need: Map[String, Long] = Map.empty): Seq[KinesisEmu.Shard] = {
+    persistDir.foreach(d => DurableStreamView.ensure(d, stream, need))
     KinesisEmu.stream(stream)
       .getOrElse(throw new IllegalArgumentException(s"stream $stream not found")).shards
   }
 
-  override def initialOffset(): Offset =
-    ShardOffsets(shards.map(s => s.shardId -> 0L).toMap)
-  override def latestOffset(): Offset =
+  /** The view after reloading a durable stream, so cross-process
+    * commits made since the last trigger become visible offsets. Only
+    * `latestOffset` refreshes: once per trigger. */
+  private def refreshed: Seq[KinesisEmu.Shard] = {
+    persistDir.foreach(d => KinesisEmu.loadPersisted(d, stream))
+    view()
+  }
+
+  private def head(shards: Seq[KinesisEmu.Shard]): ShardOffsets =
     ShardOffsets(shards.map(s => s.shardId -> (s.latestSequence + 1)).toMap)
+
+  override def initialOffset(): Offset =
+    ShardOffsets(view().map(s => s.shardId -> 0L).toMap)
+  override def latestOffset(): Offset = head(refreshed)
   override def deserializeOffset(json: String): Offset = ShardOffsets.parse(json)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -362,8 +373,9 @@ class KinesisEmuMicroBatchStream(stream: String, persistDir: Option[String] = No
     }
   }
 
-  /** the true shard head, for progress/lag reporting — never capped. */
-  override def reportLatestOffset(): Offset = latestOffset()
+  /** the true shard head as of this trigger's `latestOffset`, for
+    * progress/lag reporting — never capped. */
+  override def reportLatestOffset(): Offset = head(view())
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     def capsOf(l: ReadLimit): (Option[Long], Option[Long]) = l match {
@@ -378,7 +390,7 @@ class KinesisEmuMicroBatchStream(stream: String, persistDir: Option[String] = No
     if (rowCap.isEmpty && byteCap.isEmpty) latestOffset()
     else {
       val from = start.asInstanceOf[ShardOffsets].next
-      ShardOffsets(cappedAdvance(from, rowCap, byteCap))
+      ShardOffsets(cappedAdvance(refreshed, from, rowCap, byteCap))
     }
   }
 
@@ -391,8 +403,8 @@ class KinesisEmuMicroBatchStream(stream: String, persistDir: Option[String] = No
     * source's maxBytesPerTrigger behaves the same way). The byte walk
     * touches only the records it admits (plus the emu's per-shard
     * snapshot); a row-only cap is pure offset arithmetic. */
-  private def cappedAdvance(from: Map[String, Long], rowCap: Option[Long],
-                            byteCap: Option[Long]): Map[String, Long] = {
+  private def cappedAdvance(shards: Seq[KinesisEmu.Shard], from: Map[String, Long],
+                            rowCap: Option[Long], byteCap: Option[Long]): Map[String, Long] = {
     val snap = shards.sortBy(_.shardId)
     val avail = snap.map(sh => sh.shardId ->
       math.max(0L, sh.latestSequence + 1 - from.getOrElse(sh.shardId, 0L))).toMap
@@ -420,9 +432,7 @@ class KinesisEmuMicroBatchStream(stream: String, persistDir: Option[String] = No
         // round-robin global byte budget over the row-allocated ranges
         val its = snap.map { sh =>
           val f = from.getOrElse(sh.shardId, 0L)
-          sh.shardId -> sh.records.iterator
-            .filter(r => r.sequenceNumber >= f &&
-              r.sequenceNumber < f + rowAlloc(sh.shardId))
+          sh.shardId -> sh.slice(f, f + rowAlloc(sh.shardId)).iterator
         }.toMap
         val taken = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
         var bytesLeft = budget
@@ -449,7 +459,7 @@ class KinesisEmuMicroBatchStream(stream: String, persistDir: Option[String] = No
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[ShardOffsets].next
     val e = end.asInstanceOf[ShardOffsets].next
-    shards.map { sh =>
+    view(e).map { sh =>
       KinesisEmuInputPartition(stream, sh.shardId,
         s.getOrElse(sh.shardId, 0L), e.getOrElse(sh.shardId, 0L),
         persistDir): InputPartition
@@ -475,11 +485,9 @@ class KinesisEmuPartitionReader(p: KinesisEmuInputPartition)
     extends PartitionReader[InternalRow] {
   // durable streams: hydrate this JVM (no-op when the view already
   // covers the requested range — always true in local mode)
-  p.persistDir.foreach(d => DurableStreamView.ensure(d, p.stream, p.until))
+  p.persistDir.foreach(d => DurableStreamView.ensure(d, p.stream, Map(p.shardId -> p.until)))
   private val recs = KinesisEmu.stream(p.stream).get.shards
-    .find(_.shardId == p.shardId).get.records
-    .filter(r => r.sequenceNumber >= p.from && r.sequenceNumber < p.until)
-    .sortBy(_.sequenceNumber).iterator
+    .find(_.shardId == p.shardId).get.slice(p.from, p.until).iterator
   private var cur: KinesisEmu.StoredRecord = _
 
   override def next(): Boolean = { if (recs.hasNext) { cur = recs.next(); true } else false }

@@ -58,11 +58,32 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
     val probe = new Rail.Probe(Seq(spark))
     val line = try Rail.sample(spark, probe, name, fn, sf, dump) finally probe.close()
     assert(line.startsWith("""{"rail":{"q":"""") && line.contains(dump.getPath), line)
+    assert(""""compiles":\d+,"compile_ms":[0-9.]+,""".r.findFirstIn(line).nonEmpty, line)
     val text = new String(java.nio.file.Files.readAllBytes(dump.toPath),
       java.nio.charset.StandardCharsets.UTF_8)
     val nStages = """== Stages \((\d+)\) ==""".r.findFirstMatchIn(text).map(_.group(1).toInt)
     assert(nStages.exists(_ > 0), text)
     assert(text.contains("\"wall_ms\":"), text)
     assert(text.contains("isFinalPlan=true") && !text.contains("isFinalPlan=false"), text)
+  }
+
+  test("a Session keeps its generated code: a third round of five entries compiles nothing") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      graft.plans.GraftExtensions.CodegenCacheEntries.toString)
+    val sf = java.nio.file.Paths.get("perfbench/data/sf0.001").toAbsolutePath.toString
+    val entries = Seq("q03", "d02", "d03", "a02", "t12")
+      .map(p => SparkEntry.queries.find(_._1.startsWith(p)).get._2)
+    // the bench protocol: storage cleared after every entry, so each
+    // round plans the same queries over the same cache state
+    def round(): Long = {
+      val c0 = Rail.codegen()._1
+      entries.foreach { fn =>
+        fn(spark, sf).count()
+        Bench.cleanStorage(spark)
+      }
+      Rail.codegen()._1 - c0
+    }
+    val compiled = Seq.fill(3)(round())
+    assert(compiled(2) == 0, s"compiles per round: $compiled")
   }
 }
