@@ -7,9 +7,11 @@ import org.apache.spark.sql.SparkSession
   * planner under the same conf table:
   *
   *  - `GraftExtensions` (the shipped SQL functions and plan rules), which
-  *    also defaults `spark.sql.codegen.cache.maxEntries` to 1000 before
-  *    the first SparkContext starts, so generated code is compiled once
-  *    per JVM rather than once per pass (`GraftExtensions.CodegenCacheEntries`);
+  *    also installs the JVM-wide engine defaults before the first
+  *    SparkContext starts (`GraftExtensions.Defaults`): a codegen cache
+  *    of 1000, `LocalCheckpointFileManager` for every streaming
+  *    checkpoint, and artifact isolation off, so generated code is
+  *    compiled once per JVM rather than once per pass or query;
   *  - `local[cpus]`, one shuffle partition per core;
   *  - UTC session time zone;
   *  - Spark UI off;

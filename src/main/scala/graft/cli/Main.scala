@@ -8,10 +8,11 @@ import graft.sink.KinesisWriter
   *   ingest <stream> [-p <partitionKey>]   # stdin -> buffered writer -> stream
   *   query <name> [sfDir]                  # run a declared query, print it
   *
-  * The ingest path composes the same stack as `NewFastWriter`
-  * (`kinesis/kinesis.go:49-57`): 4 MiB buffer, chunk/batch, final flush
-  * that drains everything (improving on reference quirk (b), SURVEY.md
-  * §2a). Exit code 1 with `err:` on failure, like the reference.
+  * The ingest path is `NewFastWriter`'s stack (`kinesis/kinesis.go:49-57`)
+  * minus its 1 s ticker and drop stage: 4 MiB size-only buffer,
+  * chunk/batch, final flush that drains everything (improving on
+  * reference quirk (b), SURVEY.md §2a). Exit code 1 with `err:` on
+  * failure, like the reference.
   */
 object Main {
   def main(args: Array[String]): Unit = args.toList match {

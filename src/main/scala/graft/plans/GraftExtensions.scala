@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 
 import graft.functions.{CosineSimilarity, NonZeroVector}
+import graft.streaming.LocalCheckpointFileManager
 
 /** SparkSessionExtensions entry point:
   *
@@ -29,13 +30,12 @@ import graft.functions.{CosineSimilarity, NonZeroVector}
   *    is the hand-written kernel d03 and m03 call; both share
   *    `Pigeonhole`'s chunk layout).
   *
-  * It also sizes Spark's compiled-class cache before the session's
-  * SparkContext exists; see [[GraftExtensions.CodegenCacheEntries]].
+  * It also installs the JVM-wide engine defaults before the session's
+  * SparkContext exists; see [[GraftExtensions.Defaults]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    System.getProperties.putIfAbsent(
-      GraftExtensions.CodegenCacheKey, GraftExtensions.CodegenCacheEntries.toString)
+    GraftExtensions.Defaults.foreach { case (k, v) => System.getProperties.putIfAbsent(k, v) }
     e.injectFunction((
       new FunctionIdentifier("cosine_similarity"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),
@@ -68,24 +68,32 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
-
-  /** Default for [[CodegenCacheKey]] (Spark's is 100). Spark keeps every
-    * class Janino compiles in ONE JVM-wide cache, sized once when
-    * `CodeGenerator` first runs from this static conf. A graft working
-    * set is larger than 100 sources (the perfbench mix generates ~190),
-    * and Guava splits the cache into 4 LRU segments of `maxEntries/4`,
-    * so at 100 each pass evicted and recompiled what the last pass had
-    * compiled, and C2 then recompiled every freshly loaded class.
+  /** JVM-wide engine defaults, each put as a system property, only if
+    * absent. `Builder.withExtensions` runs `apply` at once, before
+    * `build()` creates the `SparkConf` that reads `spark.*` system
+    * properties, so the first SparkContext, and every session conf it
+    * seeds, sees them. A value from `.config`, `--conf` or `-D` still
+    * wins. Sessions that load graft through `spark.sql.extensions`
+    * apply it after their SparkContext exists and must set all three
+    * themselves.
     *
-    * It is set as a JVM system property, and only if absent:
-    * `Builder.withExtensions` runs `apply` at once, before `build()`
-    * creates the `SparkConf` that reads `spark.*` system properties, so
-    * the first SparkContext (and with it the cache) sees it. A value
-    * from `.config`, `--conf` or `-D` still wins. Sessions that load
-    * graft through `spark.sql.extensions` apply it after their
-    * SparkContext exists and must set the conf themselves. */
-  val CodegenCacheEntries = 1000
+    *  - codegen cache 1000 (Spark's is 100): Spark keeps every class
+    *    Janino compiles in ONE JVM-wide cache, sized once from this
+    *    static conf. The perfbench mix generates ~190 sources, and Guava
+    *    splits the cache into 4 LRU segments of `maxEntries/4`, so at 100
+    *    each pass recompiled what the last pass had compiled.
+    *  - the java.nio checkpoint manager: Spark's default starts child
+    *    processes for every checkpoint file on a host without the Hadoop
+    *    native library. Non-`file:` paths still go to Spark's default.
+    *  - artifact isolation off: the cache above is keyed on the context
+    *    classloader, and with isolation each session (every streaming
+    *    query runs on a clone) gets its own, so each query recompiled
+    *    its sources. Off, `addArtifact` jars and files are visible to
+    *    every session; graft adds none. */
+  val Defaults: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> "1000",
+    LocalCheckpointFileManager.ClassKey -> classOf[LocalCheckpointFileManager].getName,
+    "spark.sql.artifact.isolation.enabled" -> "false")
 }
 
 /** cosine_similarity(x, x) == 1.0 for any non-degenerate x; fold the

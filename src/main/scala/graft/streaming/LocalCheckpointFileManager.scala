@@ -20,10 +20,10 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * native library starts a `chmod` per create and `readlink`s per
   * rename: five child processes for every offset-log, commit-log and
   * state-store file a micro-batch writes. This one makes the same calls
-  * as plain system calls. [[Replay]] sets it for every replay run
-  * (`spark.sql.streaming.checkpointFileManagerClass`, see
-  * `withReplayPartitions`); metadata logs and state stores resolve it
-  * through the session's hadoop conf.
+  * as plain system calls. `GraftExtensions` makes it the JVM-wide
+  * default (`spark.sql.streaming.checkpointFileManagerClass`, see
+  * `GraftExtensions.Defaults`); metadata logs and state stores resolve
+  * it through the session's hadoop conf.
   *
   * Contract, as FileContext's:
   *  - `createAtomic` writes a sibling `.<name>.<uuid>.tmp`, named like

@@ -238,26 +238,13 @@ object Replay {
     * the Spark default for a deployment that points
     * spark.graft.replay.root at a durable store and wants end-to-end
     * checkpoint integrity there.
-    *
-    * The checkpoint FILE MANAGER is scoped to [[LocalCheckpointFileManager]]
-    * for the run: Spark's default starts child processes for every
-    * checkpoint file on a host without the Hadoop native library.
-    * Metadata logs and state stores (the admission drains' RocksDB
-    * changelogs too) resolve the class through the session's hadoop
-    * conf; a manager class the deployment already set is left
-    * untouched. Spark's checksum wrapper sits on top of either manager.
-    * Every key is restored (or unset) afterwards. Result-neutral by
-    * construction (file-manager choice only). */
+    * Both keys are restored (or unset) afterwards. */
   private def withReplayPartitions[T](s: SparkSession, n: Int = 8)(body: => T): T = {
     val wantCk = s.conf.getOption("spark.graft.replay.checkpointChecksum")
       .exists(_.trim.equalsIgnoreCase("true"))
-    val fm = LocalCheckpointFileManager.ClassKey
-    val deploymentFm = s.conf.getOption(fm).isDefined ||
-      s.sparkContext.hadoopConfiguration.get(fm) != null
     val scoped = Seq(
       "spark.sql.shuffle.partitions" -> n.toString,
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> wantCk.toString) ++
-      (if (deploymentFm) Nil else Seq(fm -> classOf[LocalCheckpointFileManager].getName))
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> wantCk.toString)
     val prev = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
     scoped.foreach { case (k, v) => s.conf.set(k, v) }
     try body finally prev.foreach {
@@ -1234,14 +1221,16 @@ object Replay {
     * repeated (ni,ci) can ONLY arise from multi-band collisions of ONE
     * arrival doc, and streamArrivalBandRows emits all of a doc's band
     * rows from one flatMap over one input row — so every repeat lands
-    * in the SAME micro-batch, where current_timestamp() (the batch
-    * timestamp, constant within a micro-batch) gives them one event
-    * time: any positive delay covers them, and state older than the
-    * watermark horizon is evicted instead of kept for the life of the
-    * stream (Round16OpsSpec drains a two-batch feed and pins the
-    * eviction). */
+    * in the SAME micro-batch, whose eviction uses the previous
+    * batch's watermark: any positive delay covers them, and state older
+    * than the watermark horizon is evicted instead of kept for the life
+    * of the stream (Round16OpsSpec drains a two-batch feed and pins the
+    * eviction). The event time is the wall clock through a UDF, not
+    * current_timestamp(): streaming inlines the batch timestamp into
+    * generated code as a literal, so every micro-batch recompiled. */
+  private val wallClock = udf(() => java.time.Instant.now()).asNondeterministic()
   private[graft] def s14DedupPairs(df: DataFrame): DataFrame = df
-    .withColumn("arrival_ts", current_timestamp())
+    .withColumn("arrival_ts", wallClock())
     .transform(StreamDedup.dedupWithinWatermark(_, Seq("ni", "ci"),
       "arrival_ts", "10 seconds"))
     .drop("arrival_ts")

@@ -17,7 +17,7 @@ import graft.streaming.{LocalCheckpointFileManager, Replay => R}
 /** [[LocalCheckpointFileManager]] against Spark's default
   * (FileContext-based) manager: one scripted sequence with identical
   * outcomes, checkpoints that resume across the two in both directions,
-  * and the replay runs' set/restore of the manager class. */
+  * and the JVM-wide default that makes it every graft session's manager. */
 class CheckpointFileManagerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark: SparkSession = Session(4)
@@ -155,11 +155,12 @@ class CheckpointFileManagerSpec extends AnyFunSuite with BeforeAndAfterAll {
       def arrive(ks: Seq[Long]): Unit =
         ks.map(k => (k, s"v$k")).toDF("k", "v").coalesce(1).write.mode("append").parquet(src)
       def pass(manager: String): Seq[(Long, String)] = {
+        val prev = as.conf.getOption(Key)
         as.conf.set(Key, manager) // a deployment-set class: sinkRun leaves it alone
         try R.sinkRun(as, as.readStream.schema("k LONG, v STRING").parquet(src)
             .dropDuplicates("k"), base, partitions = 2)
           .as[(Long, String)].collect().toSeq.sorted
-        finally as.conf.unset(Key)
+        finally prev.fold(as.conf.unset(Key))(as.conf.set(Key, _))
       }
       arrive(1L to 20L)
       pass(first)
@@ -174,28 +175,44 @@ class CheckpointFileManagerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(drain(SparkDefault, Ours) == expected)
   }
 
-  test("a replay run scopes the manager class: set for the run, unset or restored after") {
+  test("a session that only installs GraftExtensions gets the defaults: replays write " +
+      "no .crc, and a class the session's .config names is kept for the run") {
     import spark.implicits._
     val src = Files.createTempDirectory("graft-ckfm-scope").resolve("in").toString
     Seq(1L, 2L, 3L).toDF("k").write.parquet(src)
-    def run(): (Option[String], Int) = {
+    /** a session built as perfbench builds its own: the extension plus
+      * the caller's settings, none of Session's conf table */
+    def bare(settings: (String, String)*): SparkSession = {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      try settings.foldLeft(SparkSession.builder()
+          .withExtensions(new graft.plans.GraftExtensions).master("local[4]")) {
+          case (b, (k, v)) => b.config(k, v)
+        }.getOrCreate()
+      finally {
+        SparkSession.setDefaultSession(spark)
+        SparkSession.setActiveSession(spark)
+      }
+    }
+    def run(s: SparkSession): (Option[String], Int) = {
       var during: Option[String] = None
-      val base = R.runBase(spark, "ckfm-scope")
-      val n = R.sinkRun(spark, spark.readStream.schema("k LONG").parquet(src), base,
-        onDone = _ => during = spark.conf.getOption(Key)).count().toInt
+      val base = R.runBase(s, "ckfm-scope")
+      val n = R.sinkRun(s, s.readStream.schema("k LONG").parquet(src), base,
+        onDone = _ => during = s.conf.getOption(Key)).count().toInt
       assert(n == 3)
       (during, hadoopCrcs(s"$base/ck").size)
     }
-    assert(spark.conf.getOption(Key).isEmpty)
-    val (during, crcs) = run()
+    val plain = bare()
+    assert(plain ne spark)
+    assert(plain.conf.getOption(Key).contains(Ours))
+    assert(plain.conf.getOption("spark.sql.artifact.isolation.enabled").contains("false"))
+    val (during, crcs) = run(plain)
     assert(during.contains(Ours) && crcs == 0)
-    assert(spark.conf.getOption(Key).isEmpty)
-    spark.conf.set(Key, SparkDefault)
-    try {
-      val (kept, crcsDefault) = run()
-      assert(kept.contains(SparkDefault) && crcsDefault > 0)
-      assert(spark.conf.getOption(Key).contains(SparkDefault))
-    } finally spark.conf.unset(Key)
+    assert(plain.conf.getOption(Key).contains(Ours))
+    val configured = bare(Key -> SparkDefault)
+    val (kept, crcsDefault) = run(configured)
+    assert(kept.contains(SparkDefault) && crcsDefault > 0)
+    assert(configured.conf.getOption(Key).contains(SparkDefault))
   }
 
   test("s14 with spark.graft.replay.checkpointChecksum=true is row-identical to the default") {

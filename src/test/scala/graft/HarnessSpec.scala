@@ -48,6 +48,10 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(read.nonEmpty)
     assert(read == documented, s"read without a row: ${read -- documented}; " +
       s"row without a read: ${documented -- read}")
+    // the JVM-wide engine defaults GraftExtensions installs are named too
+    val readme = lines(Paths.get("README.md")).mkString("\n")
+    val unnamed = graft.plans.GraftExtensions.Defaults.keySet.filterNot(k => readme.contains(s"`$k`"))
+    assert(unnamed.isEmpty, s"JVM-wide defaults README does not name: $unnamed")
   }
 
   test("a Rail sample of q03 at sf0.001 dumps a stage table and the final plan") {
@@ -69,21 +73,64 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a Session keeps its generated code: a third round of five entries compiles nothing") {
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
-      graft.plans.GraftExtensions.CodegenCacheEntries.toString)
+      graft.plans.GraftExtensions.Defaults("spark.sql.codegen.cache.maxEntries"))
     val sf = java.nio.file.Paths.get("perfbench/data/sf0.001").toAbsolutePath.toString
     val entries = Seq("q03", "d02", "d03", "a02", "t12")
       .map(p => SparkEntry.queries.find(_._1.startsWith(p)).get._2)
     // the bench protocol: storage cleared after every entry, so each
     // round plans the same queries over the same cache state
-    def round(): Long = {
-      val c0 = Rail.codegen()._1
-      entries.foreach { fn =>
-        fn(spark, sf).count()
-        Bench.cleanStorage(spark)
-      }
-      Rail.codegen()._1 - c0
+    val compiled = compilesPerRound(entries.foreach { fn =>
+      fn(spark, sf).count()
+      Bench.cleanStorage(spark)
+    })
+    assert(compiled(2) == 0, s"compiles per round: $compiled")
+  }
+
+  /** Janino compiles across three rounds of `body`, storage cleared
+    * after each. Streaming queries run on cloned sessions, and Spark's
+    * class cache is keyed on the context classloader, so they only keep
+    * their generated code when every session shares one loader. */
+  private def compilesPerRound(body: => Unit): Seq[Long] = Seq.fill(3) {
+    val c0 = Rail.codegen()._1
+    body
+    Bench.cleanStorage(spark)
+    Rail.codegen()._1 - c0
+  }
+
+  test("a Session keeps streaming generated code: a third s14 compiles nothing") {
+    val sf = java.nio.file.Paths.get("perfbench/data/sf0.001").toAbsolutePath.toString
+    val compiled = compilesPerRound(assert(graft.streaming.Replay.s14(spark, sf).count() > 0))
+    assert(compiled(2) == 0, s"compiles per round: $compiled")
+  }
+
+  test("a Session keeps streaming generated code: a third kinesis-emu micro-batch read " +
+      "(readStream -> foreachBatch) compiles nothing") {
+    import graft.emu.KinesisEmu
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.functions.col
+    val ck = java.nio.file.Files.createTempDirectory("graft-harness-emu")
+    var n = 0
+    def read(): Unit = {
+      n += 1
+      val stream = s"harness-codegen-$n"
+      KinesisEmu.createStream(stream, 2)
+      try {
+        KinesisEmu.putRecords(stream, (0 until 50).map(i =>
+          graft.ingest.KinesisRecord(s"k$i", s"line $i".getBytes("UTF-8"))))
+        val rows = new java.util.concurrent.atomic.AtomicLong
+        val q = spark.readStream.format("kinesis-emu").option("stream", stream).load()
+          .select(col("shardId"), col("sequenceNumber"), col("data"), col("arrivalTs"))
+          .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
+            rows.addAndGet(b.collect().count((r: Row) => r.getAs[Array[Byte]](2).nonEmpty))
+            ()
+          }
+          .option("checkpointLocation", ck.resolve(stream).toString)
+          .start()
+        try q.processAllAvailable() finally q.stop()
+        assert(rows.get == 50)
+      } finally KinesisEmu.deleteStream(stream)
     }
-    val compiled = Seq.fill(3)(round())
+    val compiled = compilesPerRound(read())
     assert(compiled(2) == 0, s"compiles per round: $compiled")
   }
 }
