@@ -9,10 +9,11 @@ import graft.sink.KinesisWriter
   *   query <name> [sfDir]                  # run a declared query, print it
   *
   * The ingest path is `NewFastWriter`'s stack (`kinesis/kinesis.go:49-57`)
-  * minus its 1 s ticker and drop stage: 4 MiB size-only buffer,
-  * chunk/batch, final flush that drains everything (improving on
-  * reference quirk (b), SURVEY.md §2a). Exit code 1 with `err:` on
-  * failure, like the reference.
+  * as `KinesisWriter.FastWriter`: 4 MiB buffer flushed when full and
+  * every 1 s, depth-4 drop-on-full queue, one drain thread doing
+  * chunk/batch/PutRecords, and a final flush that drains everything
+  * (improving on reference quirk (b), SURVEY.md §2a). Exit code 1 with
+  * `err:` on failure, like the reference.
   */
 object Main {
   def main(args: Array[String]): Unit = args.toList match {
@@ -25,19 +26,15 @@ object Main {
       }
       try {
         KinesisEmu.createStream(stream, shards = 4)
-        val cfg = KinesisWriter.Config(stream, key)
-        var delivered = 0L
-        val flusher = new KinesisWriter.Flusher(cfg, unit => {
-          KinesisWriter.write(cfg, unit); delivered += unit.length
-        })
+        val w = new KinesisWriter.FastWriter(KinesisWriter.Config(stream, key))
         val buf = new Array[Byte](64 * 1024)
-        Iterator.continually(System.in.read(buf, 0, buf.length))
+        try Iterator.continually(System.in.read(buf, 0, buf.length))
           .takeWhile(_ >= 0)
-          .foreach(n => if (n > 0) flusher.write(buf.slice(0, n)))
-        flusher.flush() // graceful-shutdown final flush (main.go:48)
+          .foreach(n => w.write(buf, 0, n))
+        finally w.close() // graceful-shutdown final flush (main.go:48), queue drained
         val st = KinesisEmu.stream(stream).get
         val recs = st.allRecords
-        println(s"delivered=${delivered}B records=${recs.size} " +
+        println(s"delivered=${w.delivered}B dropped=${w.dropped}B records=${recs.size} " +
           s"shards=${st.shards.count(_.records.nonEmpty)} stream=$stream key=$key")
       } catch {
         case e: Throwable => System.err.println(s"err: ${e.getMessage}"); sys.exit(1)
@@ -89,25 +86,22 @@ object Main {
 
     case "bench-sink" :: rest =>
       // reference bench parity (bench/main.go): synthetic offered load
-      // through the FastWriter-equivalent stack; report throughput
-      // (this path has no drop stage). Default: 1 KiB payloads, 20 MiB
-      // total (200x the reference's per-second offered load).
+      // through the same FastWriter as `ingest`; report throughput and
+      // the drop balance (delivered + dropped = bytes offered). Default:
+      // 1 KiB payloads, 20 MiB total (200x the reference's per-second
+      // offered load).
       val totalBytes = rest.headOption.map(_.toLong).getOrElse(20L * 1024 * 1024)
       val payload = Array.fill(1024)(7.toByte)
       KinesisEmu.createStream("bench", shards = 4)
-      val cfg = KinesisWriter.Config("bench", "bench-key")
-      var delivered = 0L
-      val flusher = new KinesisWriter.Flusher(cfg, unit => {
-        KinesisWriter.write(cfg, unit); delivered += unit.length
-      })
+      val w = new KinesisWriter.FastWriter(KinesisWriter.Config("bench", "bench-key"))
       val t0 = System.nanoTime()
-      var sent = 0L
-      while (sent < totalBytes) { flusher.write(payload); sent += payload.length }
-      flusher.flush()
+      try while (w.offered < totalBytes) w.write(payload)
+      finally w.close()
       val secs = (System.nanoTime() - t0) / 1e9
       val recs = KinesisEmu.stream("bench").get.allRecords
-      println(f"""{"metric":"sink_throughput","bytes":$sent,"secs":$secs%.3f,""" +
-        f""""mib_per_sec":${sent / 1024.0 / 1024.0 / secs}%.1f,""" +
+      println(f"""{"metric":"sink_throughput","bytes":${w.offered},""" +
+        s""""delivered":${w.delivered},"dropped":${w.dropped},""" +
+        f""""secs":$secs%.3f,"mib_per_sec":${w.offered / 1024.0 / 1024.0 / secs}%.1f,""" +
         s""""records":${recs.size}}""")
 
     case _ =>

@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -128,6 +130,164 @@ class IngestSpec extends AnyFunSuite {
     // drain keeps up: nothing drops
     val (acc2, drop2, _) = DropPolicy.decide(Seq.fill(100)(1L), 4, drainPerOffer = 1.0)
     assert(acc2.size == 100 && drop2.isEmpty)
+  }
+
+  // --- FastWriter: the reference's NewFastWriter stack (kinesis.go:37-57) ---
+
+  private def emuBytes(stream: String = "t"): Long =
+    KinesisEmu.stream(stream).map(_.allRecords.map(_.data.length.toLong).sum).getOrElse(0L)
+
+  /** Every PutRecords waits for the returned `release` latch; the
+    * `entered` latch opens once the drain thread is held inside one. */
+  private def holdPuts(): (CountDownLatch, CountDownLatch) = {
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    KinesisEmu.failureInjector = (_, _) => { entered.countDown(); release.await(); Seq.empty }
+    (entered, release)
+  }
+
+  private def ingestThreads(): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith("graft-ingest-")).map(_.getName)
+  }
+
+  test("FastWriter: trickled input becomes readable within ~1.5 s without EOF (1 s ticker)") {
+    withStream() {
+      val w = new KinesisWriter.FastWriter(KinesisWriter.Config("t", "key"), onDrop = _ => ())
+      try {
+        // <1 KiB every 100 ms for 2.5 s: a 4 MiB size flush never fires
+        val line = Array.fill(900)('x'.toByte)
+        val writtenAt = scala.collection.mutable.ArrayBuffer[Long]()
+        val lag = scala.collection.mutable.ArrayBuffer[Long]()
+        val t0 = System.nanoTime()
+        while (System.nanoTime() - t0 < 2500000000L) {
+          w.write(line); writtenAt += System.nanoTime()
+          val until = System.nanoTime() + 100000000L
+          while (System.nanoTime() < until) {
+            val visibleLines = (emuBytes() / line.length).toInt
+            while (lag.size < visibleLines) lag += (System.nanoTime() - writtenAt(lag.size)) / 1000000L
+            Thread.sleep(5)
+          }
+        }
+        assert(lag.size >= 10, s"only ${lag.size} of ${writtenAt.size} lines visible before EOF")
+        assert(lag.max <= 1500L, s"per-line visibility lag ms: $lag")
+      } finally w.close()
+      assert(w.dropped == 0L && w.delivered == w.offered && emuBytes() == w.offered)
+    }
+  }
+
+  test("FastWriter: a drain slower than the offer drops whole flush units; delivered + dropped = offered") {
+    withStream() {
+      // every PutRecords takes 200 ms; no failures. One 64 KiB unit is one
+      // put, so the drain moves 5 units/s against an offer of ~1000/s.
+      KinesisEmu.failureInjector = (_, _) => { Thread.sleep(200); Seq.empty }
+      val unitBytes = 64 * 1024
+      // the ticker is pushed out so every unit is a full size flush
+      val cfg = KinesisWriter.Config("t", "key", bufferSize = unitBytes, flushIntervalMs = 60000L)
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      val w = new KinesisWriter.FastWriter(cfg, onDrop = b => seen.add(b))
+      val payload = Array.fill(1024)(3.toByte)
+      (1 to 20 * 64).foreach(_ => w.write(payload)) // 20 units
+      w.close()
+      import scala.jdk.CollectionConverters._
+      val drops = seen.asScala.toSeq
+      assert(drops.nonEmpty && drops.size < 20, s"dropped units: ${drops.size}")
+      assert(drops.forall(_ == unitBytes.toLong), s"drops must be whole flush units: $drops")
+      assert(drops.sum == w.dropped)
+      assert(w.offered == 20L * unitBytes)
+      assert(w.delivered + w.dropped == w.offered)
+      assert(emuBytes() == w.delivered && w.delivered % unitBytes == 0)
+    }
+  }
+
+  test("FastWriter without an onDrop reads DropPolicy.onDrop at drop time") {
+    withStream() {
+      val (entered, release) = holdPuts()
+      val cfg = KinesisWriter.Config("t", "key", bufferSize = 100, queueDepth = 1,
+        flushIntervalMs = 60000L)
+      val w = new KinesisWriter.FastWriter(cfg)
+      val seen = scala.collection.mutable.ArrayBuffer[Long]()
+      val prev = DropPolicy.onDrop
+      DropPolicy.onDrop = seen += _ // assigned after the writer was built
+      try {
+        w.write(Array.fill(100)(1.toByte)) // taken by the blocked drain
+        assert(entered.await(10, TimeUnit.SECONDS))
+        w.write(Array.fill(100)(1.toByte)) // fills the depth-1 queue
+        w.write(Array.fill(100)(1.toByte)) // dropped
+        assert(seen == Seq(100L) && w.dropped == 100L)
+      } finally { DropPolicy.onDrop = prev; release.countDown(); w.close() }
+      assert(w.delivered == 200L && emuBytes() == 200L)
+    }
+  }
+
+  test("FastWriter: a drain error sticks; write and close() rethrow it, close() within bounded time") {
+    withStream() {
+      val (entered, release) = holdPuts()
+      val cfg = KinesisWriter.Config("t", "key", bufferSize = 100, flushIntervalMs = 60000L)
+      val w = new KinesisWriter.FastWriter(cfg, onDrop = _ => ())
+      val unit = Array.fill(100)(1.toByte)
+      w.write(unit) // in flight: the drain holds it inside PutRecords
+      assert(entered.await(10, TimeUnit.SECONDS))
+      (1 to cfg.queueDepth).foreach(_ => w.write(unit)) // queue full
+      w.write(Array.fill(10)(1.toByte)) // buffered
+      KinesisEmu.deleteStream("t") // the next put fails: ResourceNotFoundException
+      release.countDown()
+      // the drain dies on unit 2; a later write must throw, never block
+      val deadline = System.nanoTime() + 10000000000L
+      val fromWrite = Iterator.continually(
+        scala.util.Try { w.write(Array.fill(10)(1.toByte)); Thread.sleep(5) })
+        .dropWhile(r => r.isSuccess && System.nanoTime() < deadline).next()
+      assert(fromWrite.failed.toOption.exists(_.getMessage.contains("ResourceNotFoundException")))
+      // close() flushes into the queue and must not wait on the dead drain
+      val fromClose = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val closer = new Thread(() =>
+        try w.close() catch { case t: Throwable => fromClose.set(t) })
+      closer.setDaemon(true) // a regression must fail the test, not hang the JVM
+      val t0 = System.nanoTime()
+      closer.start(); closer.join(10000L)
+      assert(!closer.isAlive, "close() blocked on a dead drain")
+      assert((System.nanoTime() - t0) / 1000000L < 5000L)
+      assert(fromClose.get != null && fromClose.get.getMessage.contains("ResourceNotFoundException"))
+      assert(w.delivered == 100L) // only the unit in flight when the stream went
+      assert(intercept[IllegalArgumentException](w.close()).getMessage.contains("ResourceNotFoundException"))
+      assert(ingestThreads().isEmpty)
+    }
+  }
+
+  test("FastWriter: close() stops its ticker and drain threads (five writers leave none)") {
+    withStream() {
+      (1 to 5).foreach { i =>
+        val w = new KinesisWriter.FastWriter(KinesisWriter.Config("t", s"k$i"), onDrop = _ => ())
+        assert(ingestThreads().size == 2, ingestThreads())
+        w.write(Array.fill(10)(i.toByte))
+        w.close()
+      }
+      assert(ingestThreads().isEmpty, ingestThreads())
+      assert(emuBytes() == 50L)
+    }
+  }
+
+  test("CLI ingest and bench-sink go through FastWriter and report dropped bytes") {
+    KinesisEmu.reset()
+    try {
+      val payload = Array.tabulate(300000)(i => ('a' + i % 26).toByte)
+      val out = new java.io.ByteArrayOutputStream()
+      val prevIn = System.in
+      System.setIn(new java.io.ByteArrayInputStream(payload))
+      try Console.withOut(out)(graft.cli.Main.main(Array("ingest", "cli-t", "-p", "k")))
+      finally System.setIn(prevIn)
+      assert(out.toString.trim.startsWith("delivered=300000B dropped=0B records=1 "), out.toString)
+      assert(KinesisEmu.stream("cli-t").get.allRecords.head.data.sameElements(payload))
+
+      val json = new java.io.ByteArrayOutputStream()
+      Console.withOut(json)(graft.cli.Main.main(Array("bench-sink", (8L * 1024 * 1024).toString)))
+      def field(k: String): Long = s""""$k":(\\d+)""".r.findFirstMatchIn(json.toString).get.group(1).toLong
+      assert(field("bytes") == 8L * 1024 * 1024, json.toString)
+      assert(field("delivered") + field("dropped") == field("bytes"), json.toString)
+      assert(emuBytes("bench") == field("delivered"))
+      assert(ingestThreads().isEmpty)
+    } finally KinesisEmu.reset()
   }
 
   // --- ScalaCheck properties (FIXTURES.md §1) ---

@@ -45,18 +45,30 @@ class ReferenceQuirksSpec extends AnyFunSuite {
   test("quirk (b) divergence: final flush drains EVERYTHING (no queued-data loss at exit)") {
     // reference: exit-time Flush() drains bufio only; up to queue*4MiB of
     // accepted flush units can vanish (main.go:48, kinesis.go:99-133).
-    // Here: Flusher.flush + the writer's drain deliver every accepted unit.
+    // Here: FastWriter.close() flushes the buffer into a FULL queue by
+    // blocking instead of dropping, then drains every accepted unit.
     withStream() {
-      val cfg = KinesisWriter.Config("t", "k", bufferSize = 64)
-      var delivered = 0L
-      val flusher = new KinesisWriter.Flusher(cfg, u => {
-        KinesisWriter.write(cfg, u); delivered += u.length
-      })
-      val payload = Array.fill(1000)(7.toByte)
-      flusher.write(payload)
-      flusher.flush()
-      assert(delivered == 1000L)
-      assert(KinesisEmu.stream("t").get.allRecords.map(_.data.length).sum == 1000)
+      val entered = new java.util.concurrent.CountDownLatch(1)
+      val release = new java.util.concurrent.CountDownLatch(1)
+      KinesisEmu.failureInjector = (_, _) => {
+        entered.countDown(); release.await(); Seq.empty
+      }
+      val cfg = KinesisWriter.Config("t", "k", bufferSize = 64, flushIntervalMs = 60000L)
+      var drops = 0
+      val w = new KinesisWriter.FastWriter(cfg, onDrop = _ => drops += 1)
+      val unit = Array.fill(64)(7.toByte)
+      w.write(unit) // unit 1: taken by the drain, which blocks in PutRecords
+      assert(entered.await(10, java.util.concurrent.TimeUnit.SECONDS))
+      (1 to cfg.queueDepth).foreach(_ => w.write(unit)) // the queue is now full
+      w.write(Array.fill(40)(7.toByte)) // buffered, below the size flush
+      val releaser = new Thread(() => { Thread.sleep(200); release.countDown() })
+      releaser.start()
+      w.close() // blocks on the full queue until the drain moves
+      releaser.join()
+      val total = 64L * (1 + cfg.queueDepth) + 40L
+      assert(drops == 0 && w.dropped == 0L)
+      assert(w.offered == total && w.delivered == total)
+      assert(KinesisEmu.stream("t").get.allRecords.map(_.data.length.toLong).sum == total)
     }
   }
 
