@@ -29,7 +29,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    a live reader;
   *  - failed writes clean their temp directory (try/finally), and every
   *    publish sweeps stale `.inprogress-*` siblings older than the
-  *    staleness horizon (1 h default, `spark.graft.mat.sweepAgeMs`)
+  *    staleness horizon ([[SweepAgeMs]], 1 h)
   *    — a crashed JVM cannot permanently orphan temp dirs;
   *  - generations do NOT accumulate forever: [[retentionSweep]] (round
   *    16) deletes a family's unpinned generations under structural
@@ -39,6 +39,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    generation (graft.ops.Governance.g01 is the gate-checked report).
   */
 object Materialize {
+
+  /** Listing-cache TTL of [[fingerprint]] (a backstop behind its
+    * freshness probe). */
+  val FingerprintTtlMs: Long = 2L * 60 * 1000
+  /** A publish lock older than this belongs to a crashed holder and is
+    * broken; must exceed the store's worst-case delete+rename+marker
+    * swap time. */
+  val LockStaleMs: Long = 10L * 60 * 1000
+  /** How long a losing publisher waits for the winner's table. */
+  val PublishWaitMs: Long = 30L * 60 * 1000
+  /** Age (newest-descendant mtime) past which crashed `.inprogress-*`
+    * temps and `.lockbreak-*` files are swept. */
+  val SweepAgeMs: Long = 60L * 60 * 1000
+  /** A generation another JVM published is never policy-swept younger
+    * than this (mixed-version sessions on shared storage). */
+  val SweepMinAgeMs: Long = 10L * 60 * 1000
 
   /** MD5 of the concatenated compiled bytecode of `classes` — the code
     * component of a cache key. List EVERY class whose behavior the
@@ -78,7 +94,7 @@ object Materialize {
     * does.
     *
     * The file listing is cached per (dir, table) with a SHORT TTL
-    * (120 s default; `spark.graft.mat.fingerprintTtlMs`): one query
+    * ([[FingerprintTtlMs]], 120 s): one query
     * legitimately fingerprints the same input several times (band table
     * + live view + compacted/appended/chain keys, all within seconds),
     * and on an object store each uncached call would be a full
@@ -105,9 +121,6 @@ object Materialize {
   def fingerprint(dir: String, table: String,
                   algo: String, salt: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    val ttl = SparkSession.getActiveSession
-      .flatMap(_.conf.getOption("spark.graft.mat.fingerprintTtlMs"))
-      .map(_.toLong).getOrElse(120000L)
     val key = s"$dir/$table.parquet"
     val now = System.currentTimeMillis()
     val root = new org.apache.hadoop.fs.Path(key)
@@ -126,7 +139,7 @@ object Materialize {
     // keys must keep addressing the artifacts published before the
     // cache existed)
     val lines = Option(listingCache.get(key))
-      .collect { case (t, sig, ls) if now - t < ttl && sig == rootSig => ls }
+      .collect { case (t, sig, ls) if now - t < FingerprintTtlMs && sig == rootSig => ls }
       .getOrElse {
         val ls = filesUnder(fs, root)
           .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}").toSeq.sorted
@@ -365,10 +378,9 @@ object Materialize {
     * permanently-"complete" MARKER-ONLY directory. With the lock, at
     * most one process is inside the swap window; everyone else waits
     * for completeness. A crashed lock holder is recovered by age — a
-    * waiter breaks locks older than `spark.graft.mat.lockStaleMs`
-    * (default 10 min; must exceed the store's worst-case
-    * delete+rename+marker time, which on a rename-by-copy store scales
-    * with table size) and retries with its OWN still-present temp (the
+    * waiter breaks locks older than [[LockStaleMs]] (10 min; must
+    * exceed the store's worst-case delete+rename+marker time, which on
+    * a rename-by-copy store scales with table size) and retries with its OWN still-present temp (the
     * temp is only cleaned after the publish resolves), so a winner
     * crash no longer strands the key unpublished. In-JVM callers are
     * additionally serialized on [[keyLock]] (reentrant from
@@ -377,8 +389,9 @@ object Materialize {
     * atomic the lock degrades to advisory; completeness is still
     * marker+data ([[exists]]), so the residual worst case is a wasted
     * duplicate publish of identical bytes, never a partial or
-    * marker-only read. */
-  def publish(s: SparkSession, kind: String, fp: String)
+    * marker-only read. A waiter gives up after `waitMs`. */
+  def publish(s: SparkSession, kind: String, fp: String,
+              waitMs: Long = PublishWaitMs)
              (compute: => DataFrame): DataFrame = {
     publishCalls.incrementAndGet()
     jvmPublished.add(s"$kind/$fp") // lifecycle ownership marker for sweepKeep
@@ -387,10 +400,6 @@ object Materialize {
     val success = new org.apache.hadoop.fs.Path(outPath, "_SUCCESS")
     val lock = new org.apache.hadoop.fs.Path(out + ".lock")
     val fs = outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def confMs(key: String, dflt: Long): Long =
-      s.conf.getOption(key).map(_.toLong).getOrElse(dflt)
-    val lockStaleMs = confMs("spark.graft.mat.lockStaleMs", 10L * 60 * 1000)
-    val waitMs = confMs("spark.graft.mat.publishWaitMs", 30L * 60 * 1000)
     sweepStale(fs, outPath.getParent)
     val tmp = new org.apache.hadoop.fs.Path(out +
       s".inprogress-${java.lang.ProcessHandle.current.pid}-${System.nanoTime}")
@@ -427,8 +436,8 @@ object Materialize {
               }
             } finally fs.delete(lock, false)
           } else if (lockMtime(fs, lock).exists(
-              _ < System.currentTimeMillis() - lockStaleMs)) {
-            breakStaleLock(fs, out, lock, lockStaleMs) // crashed holder: break and retry
+              _ < System.currentTimeMillis() - LockStaleMs)) {
+            breakStaleLock(fs, out, lock, LockStaleMs) // crashed holder: break and retry
           } else if (System.currentTimeMillis() > deadline) {
             throw new IllegalStateException(
               s"publish($kind/$fp): timed out after ${waitMs}ms waiting on $lock")
@@ -641,13 +650,11 @@ object Materialize {
     // both FOREIGN — not published by this JVM, whose own lifecycle
     // lines are free to reap their superseded generations immediately,
     // exactly as before — and YOUNG (dir mtime within
-    // `spark.graft.mat.sweepMinAgeMs`, default 10 min — the marker is
+    // [[SweepMinAgeMs]], 10 min — the marker is
     // created last, so the mtime is the publish completion time). A
     // foreign generation simply ages into eligibility: the leak-closing
     // property is preserved, delayed by at most the horizon.
-    val minAgeMs = s.conf.getOption("spark.graft.mat.sweepMinAgeMs")
-      .map(_.toLong).getOrElse(10L * 60 * 1000)
-    val cutoff = System.currentTimeMillis() - minAgeMs
+    val cutoff = System.currentTimeMillis() - SweepMinAgeMs
     val fs = new org.apache.hadoop.fs.Path(tablePath(s, kind, "x"))
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val deferred = gens.filterNot(pins.contains).filter { fp =>
@@ -658,7 +665,7 @@ object Materialize {
     }
     if (deferred.nonEmpty)
       System.err.println(s"[graft] retention: deferring ${deferred.size} " +
-        s"foreign generation(s) of $kind younger than ${minAgeMs}ms: " +
+        s"foreign generation(s) of $kind younger than ${SweepMinAgeMs}ms: " +
         deferred.mkString(","))
     val (_, swept) = retentionSweep(s, kind, pins ++ deferred)
     if (swept.nonEmpty)
@@ -702,11 +709,11 @@ object Materialize {
     *    protection window is the horizon, not "any age": a resumable
     *    checkpoint paused LONGER than the horizon between passes is
     *    reaped and its next drain restarts from scratch — a full
-    *    recompute, correct output. A deployment pausing drains longer
-    *    than the default 6 h raises `spark.graft.replay.sweepAgeMs`
-    *    to its real pause budget; a pin cannot protect a checkpoint
-    *    from ANOTHER process's sweep in any case, which is why the
-    *    cross-process protections are the age + lease guards below),
+    *    recompute, correct output (the replay root's horizon is
+    *    [[graft.streaming.Replay.RunSweepAgeMs]], 6 h). A pin cannot
+    *    protect a checkpoint from ANOTHER process's sweep in any case,
+    *    which is why the cross-process protections are the age + lease
+    *    guards below),
     *  - NOT holding a FRESH LEASE (`<dir>/.graft-lease` younger than
     *    `ageMs` — see [[LeaseFile]]; probed first, one getFileStatus,
     *    so a leased live run skips the descendant walk entirely), and
@@ -803,7 +810,7 @@ object Materialize {
     }
 
   /** Delete `.inprogress-*` siblings older than the staleness horizon
-    * (default one hour; `spark.graft.mat.sweepAgeMs` overrides) —
+    * ([[SweepAgeMs]], one hour) —
     * residue of crashed JVMs (this sweep is belt-and-braces on top of
     * the in-process try/finally). Staleness is judged by the NEWEST
     * mtime anywhere under the temp dir, not the top-level dir's: on
@@ -815,16 +822,13 @@ object Materialize {
     * open longer than the horizon advances nothing (HDFS stamps mtime
     * at create/close; an in-flight s3a multipart upload lists nothing
     * at all), so a deployment whose individual task files can take
-    * longer than an hour to write must raise `sweepAgeMs` above its
+    * longer than an hour to write needs [[SweepAgeMs]] above its
     * worst-case single-file write time. */
   private def sweepStale(fs: org.apache.hadoop.fs.FileSystem,
                          parent: org.apache.hadoop.fs.Path): Unit = {
     try {
       if (!fs.exists(parent)) return
-      val age = SparkSession.getActiveSession
-        .flatMap(_.conf.getOption("spark.graft.mat.sweepAgeMs"))
-        .map(_.toLong).getOrElse(60L * 60 * 1000)
-      val cutoff = System.currentTimeMillis() - age
+      val cutoff = System.currentTimeMillis() - SweepAgeMs
       fs.listStatus(parent).foreach { st =>
         if (st.isDirectory && st.getPath.getName.contains(".inprogress-") &&
             newestMtime(fs, st.getPath, st.getModificationTime) < cutoff)

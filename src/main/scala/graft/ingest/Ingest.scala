@@ -84,54 +84,17 @@ object RecordBatcher {
   }
 }
 
-/** Deterministic load-shedding policy, the reference's `DropWriter`
-  * (`kinesis/kinesis.go:108-155`) re-expressed without shared mutable
-  * state: the reference drops a flush unit when its bounded channel
-  * (queue) is full. Here the decision is made deterministically per
-  * epoch from (queueDepth, in-flight count), which keeps Spark's
-  * retried-epoch semantics stable (SURVEY.md §7.4).
-  */
-final case class DropStats(offered: Long, delivered: Long, dropped: Long, droppedBytes: Long) {
-  def +(o: DropStats): DropStats =
-    DropStats(offered + o.offered, delivered + o.delivered, dropped + o.dropped, droppedBytes + o.droppedBytes)
-}
-
+/** The drop hook of the reference's `DropWriter`
+  * (`kinesis/kinesis.go:108-155`). The drop stage itself is
+  * `graft.sink.KinesisWriter.FastWriter`'s bounded queue. */
 object DropPolicy {
   /** Injectable per-drop hook, CLI/default-stack parity with the
     * reference's `Dropped` variable (`kinesis/kinesis.go:151-155`): the
     * default writes `dropping N bytes` to stderr exactly as the
     * reference does (same text, no trailing newline). Replace for
-    * metrics-only behavior; the DSv2 sink additionally reports drops
-    * through SQL CustomSumMetrics + KinesisSinkStats regardless of this
-    * hook. */
+    * metrics-only behavior; a `FastWriter` built without its own
+    * `onDrop` reads this at drop time. */
   val DefaultOnDrop: Long => Unit =
     bytes => System.err.print(s"dropping $bytes bytes")
   @volatile var onDrop: Long => Unit = DefaultOnDrop
-
-  /** Given flush units (payload sizes) offered while `inFlight` units are
-    * pending and the queue holds `queueDepth`, return (acceptedIdx,
-    * droppedIdx). A unit is dropped iff the queue is full at offer time;
-    * accepted units occupy a slot until `drainPerOffer` slots free up per
-    * offer (models the drain goroutine's relative speed). */
-  def decide(unitSizes: Seq[Long], queueDepth: Int,
-             drainPerOffer: Double = 1.0): (Seq[Int], Seq[Int], DropStats) = {
-    require(queueDepth > 0)
-    val accepted = Seq.newBuilder[Int]
-    val dropped = Seq.newBuilder[Int]
-    var queued = 0.0
-    var stats = DropStats(0, 0, 0, 0)
-    unitSizes.zipWithIndex.foreach { case (sz, i) =>
-      queued = math.max(0.0, queued - drainPerOffer)
-      stats = stats.copy(offered = stats.offered + 1)
-      if (queued >= queueDepth) {
-        dropped += i
-        stats = stats.copy(dropped = stats.dropped + 1, droppedBytes = stats.droppedBytes + sz)
-        onDrop(sz)
-      } else {
-        accepted += i; queued += 1.0
-        stats = stats.copy(delivered = stats.delivered + 1)
-      }
-    }
-    (accepted.result(), dropped.result(), stats)
-  }
 }

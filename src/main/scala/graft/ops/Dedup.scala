@@ -463,19 +463,22 @@ object Dedup {
     *
     * HOT-BUCKET MITIGATION (round 17): before a cold build signs
     * anything, a slim census checks the largest exact-duplicate text
-    * cluster. Over [[hotBucketCapDocs]] (crawl boilerplate — c
-    * identical docs share EVERY band signature, so one bucket owes
-    * ~c²/2 verify pairs that the equal-size-proof size-ratio prune
-    * cannot cut), the build COLLAPSES exact duplicates to one
-    * representative before signing: the published table holds the
+    * cluster. Over `capDocs` ([[HotBucketCapDocs]] by default; crawl
+    * boilerplate — c identical docs share EVERY band signature, so one
+    * bucket owes ~c²/2 verify pairs that the equal-size-proof
+    * size-ratio prune cannot cut), the build COLLAPSES exact duplicates
+    * to one representative before signing: the published table holds the
     * representatives' rows (bucket pair volume bounded by
     * distinct-text cardinality), the membership table is published
     * alongside ([[bandMembers]]), and every consumer re-expands
     * answers to document level through it ([[expandPairs]] /
     * [[expandAdmissionPairs]] / [[bandRowsAt]]) — answers are
     * bit-identical to the uncollapsed kernel's, per the identical-text
-    * invariant on [[BandView]]. */
-  private[graft] def bandTable(s: SparkSession, d: String): DataFrame = {
+    * invariant on [[BandView]]. Consumers read whichever representation
+    * the cold build published, so a build under a small `capDocs`
+    * exercises the collapse at small corpus scale. */
+  private[graft] def bandTable(s: SparkSession, d: String,
+                               capDocs: Long = HotBucketCapDocs): DataFrame = {
     val fp = minhashFingerprint(s, d)
     val cold = !graft.core.Materialize.exists(s, sk("minhash", d), fp)
     if (cold) {
@@ -484,9 +487,9 @@ object Dedup {
       // only warn after the fact. One slim aggregate per cold build.
       val docs = documents(s, d)
       val maxC = maxExactClusterSize(docs)
-      if (maxC > hotBucketCapDocs(s)) {
+      if (maxC > capDocs) {
         System.err.println(s"[graft] minhash build: exact-duplicate " +
-          s"mega-cluster of $maxC docs exceeds the ${hotBucketCapDocs(s)}-doc " +
+          s"mega-cluster of $maxC docs exceeds the $capDocs-doc " +
           "bucket cap — collapsing exact duplicates to representatives " +
           "before signing (answers re-expanded through the membership table)")
         graft.core.Materialize.readOrCompute(s, sk("minhash-members", d), fp)(
@@ -508,39 +511,20 @@ object Dedup {
     // 2-row band keys — rarer, and not collapsible by an exact key;
     // surfaced for operator excision.
     if (cold)
-      hotBucketWarning(s, t).foreach(m => System.err.println(s"[graft] $m"))
+      hotBucketWarning(t).foreach(m => System.err.println(s"[graft] $m"))
     t
   }
-
-  /** docs-per-bucket ceiling before one LSH bucket's candidate volume
-    * (~c²/2 verify pairs) exceeds the suite's shared pair budget
-    * ([[JaccardPairBudget]] — √budget docs ⇒ ~budget/2 pairs).
-    * `spark.graft.dedup.hotBucketCapDocs` overrides — an operator
-    * tuning the collapse trigger to a deployment's verify budget (and
-    * the randomized property spec exercising the collapse at small
-    * corpus scale). The conf is read from the PASSED session (round-18
-    * ADVICE: getActiveSession is thread-local, so on a driver thread
-    * with no active session the override was silently ignored —
-    * answer-identical either way, but a tuning knob must not be
-    * thread-dependent). NOTE the cap is deliberately NOT part of the
-    * artifact fingerprint: both build modes produce answer-identical
-    * consumers, so a cap change re-keys nothing — it only steers which
-    * representation the next COLD build publishes. */
-  def hotBucketCapDocs(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.dedup.hotBucketCapDocs")
-      .map(_.toLong)
-      .getOrElse(math.sqrt(JaccardPairBudget.toDouble).toLong)
 
   /** Census check for LSH hot buckets — the d02-family analogue of
     * [[jaccardCapWarning]]: returns a warning naming the worst
     * (band, sig) bucket and the over-cap count when any bucket holds
-    * more than [[hotBucketCapDocs]] docs. Aggregate-only (three scalars
+    * more than [[HotBucketCapDocs]] docs. Aggregate-only (three scalars
     * reach the driver, never the census rows). Applies equally to the
     * simhash chunk buckets ([[hammingSelfJoin]]) — identical docs have
     * identical fingerprints — but runs here, on the declared scale
     * path's artifact, where every band consumer inherits it. */
-  def hotBucketWarning(s: SparkSession, bandRows: DataFrame): Option[String] = {
-    val cap = hotBucketCapDocs(s)
+  def hotBucketWarning(bandRows: DataFrame): Option[String] = {
+    val cap = HotBucketCapDocs
     val over = bandRows.groupBy(col("band"), col("sig"))
       .agg(count(lit(1)).as("c"))
       .where(col("c") > cap)
@@ -1459,6 +1443,16 @@ object Dedup {
     * pairwise intersects, and the fill bound keeps the total cell count
     * >= 2x the cluster parallelism even when blocks are small. */
   val JaccardPairBudget: Long = 4L * 1000 * 1000
+
+  /** docs-per-bucket ceiling before one LSH bucket's candidate volume
+    * (~c²/2 verify pairs) exceeds [[JaccardPairBudget]] (√budget docs ⇒
+    * ~budget/2 pairs): past it a cold [[bandTable]] build collapses
+    * exact duplicates. NOTE the cap is deliberately NOT part of the
+    * artifact fingerprint: both build modes produce answer-identical
+    * consumers, so a cap change re-keys nothing — it only steers which
+    * representation the next COLD build publishes. Declared after
+    * [[JaccardPairBudget]]: object vals initialize in order. */
+  val HotBucketCapDocs: Long = math.sqrt(JaccardPairBudget.toDouble).toLong
   val JaccardMaxSalts: Int = 256
 
   /** Salts for one block of `blockDocs` docs among `numBlocks` blocks on

@@ -18,14 +18,16 @@ import graft.ingest._
   * The DSv2 sink maps it onto Spark's execution model instead:
   *                   micro-batch trigger = the time-based flush;
   *                   `Flusher` = the size-based buffer;
-  *                   `DropPolicy` = deterministic per-epoch load shedding;
-  *                   `write()` = chunk -> batch -> emu PutRecords.
+  *                   `write()` = chunk -> batch -> emu PutRecords at
+  *                   task commit. It has no drop stage: its input is
+  *                   bounded by the trigger and source admission
+  *                   control, and its epoch commits are idempotent, so
+  *                   `FastWriter` is the only place data is dropped.
   *
   * Divergence from the reference, by design (SURVEY.md §7.4): a final
   * flush drains EVERYTHING (the reference can lose queued flushes at
   * clean exit, quirk (b)); errors are surfaced, not swallowed
-  * (quirk (a)); close() stops every thread it started (quirk (c));
-  * DSv2 drop decisions are deterministic under epoch retry.
+  * (quirk (a)); close() stops every thread it started (quirk (c)).
   */
 object KinesisWriter {
 

@@ -28,9 +28,10 @@ import graft.sink.KinesisWriter
   *   df.writeStream.format("kinesis-emu")...         // R3 time-flush = trigger
   *   spark.readStream.format("kinesis-emu").option("stream", s).load()
   *
-  * Write path per task: Flusher (R3 size-bound) -> DropPolicy (R4) ->
-  * chunk (R5) -> records (R6) -> batches (R7) -> emu PutRecords (R8),
-  * with drop metrics surfaced as DSv2 CustomMetrics (R13).
+  * Write path per task: Flusher (R3 size-bound) -> chunk (R5) ->
+  * records (R6) -> batches (R7) -> emu PutRecords (R8), with delivered
+  * records surfaced as a DSv2 CustomMetric. The sink sheds nothing: the
+  * reference's drop stage (R4, R13) is `KinesisWriter.FastWriter`'s.
   *
   * Read path: micro-batch offsets are per-shard sequence numbers — the
   * same offset model as the real service's shard iterators; each shard
@@ -79,8 +80,6 @@ class KinesisEmuTable(options: CaseInsensitiveStringMap) extends Table
 // ---------------------------------------------------------------- write
 
 final case class SinkConfig(streamName: String, partitionKey: String,
-                            bufferSize: Int, queueDepth: Int,
-                            dropOnBackpressure: Boolean, drainPerOffer: Double,
                             valueField: Int, keyField: Int,
                             persistDir: Option[String] = None,
                             writeId: String = "b0")
@@ -88,17 +87,20 @@ final case class SinkConfig(streamName: String, partitionKey: String,
 class KinesisEmuWriteBuilder(stream: String, options: CaseInsensitiveStringMap,
                              schema: StructType) extends WriteBuilder {
   override def build(): Write = {
-    // value column: 'value' or 'data' (BINARY or STRING); key column optional
+    // value column: 'value' or 'data' (BINARY or STRING); key column
+    // optional (STRING). Checked here, before any task starts: each
+    // task reads the columns with getBinary/getUTF8String.
     val valueIdx = schema.fieldNames.indexWhere(n => n == "value" || n == "data")
     require(valueIdx >= 0, s"input needs a 'value' or 'data' column, got ${schema.fieldNames.mkString(",")}")
+    val value = schema.fields(valueIdx)
+    require(value.dataType == BinaryType || value.dataType == StringType,
+      s"column '${value.name}' must be BINARY or STRING, got ${value.dataType.sql}")
     val keyIdx = schema.fieldNames.indexOf("partitionKey")
+    if (keyIdx >= 0) require(schema.fields(keyIdx).dataType == StringType,
+      s"column 'partitionKey' must be STRING, got ${schema.fields(keyIdx).dataType.sql}")
     val cfg = SinkConfig(
       streamName = stream,
       partitionKey = Option(options.get("partitionKey")).getOrElse("pk"),
-      bufferSize = options.getInt("bufferSize", 4 * 1024 * 1024), // FastWriter 4 MiB (kinesis.go:56)
-      queueDepth = options.getInt("queueDepth", 4),               // FastWriter queue (kinesis.go:52)
-      dropOnBackpressure = options.getBoolean("dropOnBackpressure", false),
-      drainPerOffer = options.getDouble("drainPerOffer", 1.0),
       valueField = valueIdx, keyField = keyIdx,
       // durable cross-process epoch commits (FileEmuStore layout). The
       // option rides the serialized SinkConfig to every executor JVM,
@@ -108,20 +110,13 @@ class KinesisEmuWriteBuilder(stream: String, options: CaseInsensitiveStringMap,
       // batch tasks commit under (writeId, partition), so retries of a
       // partition are exactly-once while separate jobs append
       writeId = "b" + java.util.UUID.randomUUID().toString.replace("-", ""))
-    val isString = schema.fields(valueIdx).dataType == StringType
-    new KinesisEmuWrite(cfg, isString)
+    new KinesisEmuWrite(cfg, value.dataType == StringType)
   }
 }
 
 // custom-metric classes must be TOP-LEVEL with zero-arg constructors:
 // the streaming progress reporter re-instantiates them reflectively
 // (anonymous classes capture the enclosing Write and fail there)
-class DroppedBytesMetric extends CustomSumMetric {
-  override def name = "droppedBytes"; override def description = "bytes shed by drop policy"
-}
-class DroppedUnitsMetric extends CustomSumMetric {
-  override def name = "droppedUnits"; override def description = "flush units shed by drop policy"
-}
 class DeliveredRecordsMetric extends CustomSumMetric {
   override def name = "deliveredRecords"; override def description = "records delivered to the stream"
 }
@@ -129,8 +124,7 @@ class DeliveredRecordsMetric extends CustomSumMetric {
 class KinesisEmuWrite(cfg: SinkConfig, valueIsString: Boolean) extends Write {
   override def toBatch: BatchWrite = new KinesisEmuBatchWrite(cfg, valueIsString)
   override def toStreaming: StreamingWrite = new KinesisEmuStreamingWrite(cfg, valueIsString)
-  override def supportedCustomMetrics(): Array[CustomMetric] = Array(
-    new DroppedBytesMetric, new DroppedUnitsMetric, new DeliveredRecordsMetric)
+  override def supportedCustomMetrics(): Array[CustomMetric] = Array(new DeliveredRecordsMetric)
 }
 
 class KinesisEmuBatchWrite(cfg: SinkConfig, valueIsString: Boolean) extends BatchWrite {
@@ -149,26 +143,20 @@ class KinesisEmuStreamingWrite(cfg: SinkConfig, valueIsString: Boolean) extends 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
 }
 
-/** Driver-side aggregation of per-task commit messages — the Spark
-  * analog of the reference's injectable `Dropped` hook
-  * (`kinesis/kinesis.go:153-155`, R13): totals per stream plus an
-  * injectable callback fired on every commit with the epoch's stats. */
+/** Job-level aggregation of per-task commit messages: delivered flush
+  * units (and keyed rows) per stream, plus an injectable callback fired
+  * on every commit with the epoch's totals. */
 object KinesisSinkStats {
-  final case class Totals(delivered: Long, dropped: Long, droppedBytes: Long)
+  final case class Totals(delivered: Long)
   private val totals = new java.util.concurrent.ConcurrentHashMap[String, Totals]()
   @volatile var onCommit: (String, Totals) => Unit = (_, _) => ()
 
   def record(stream: String, messages: Array[WriterCommitMessage]): Unit = {
-    val batch = messages.foldLeft(Totals(0, 0, 0)) {
-      case (t, KinesisCommit(d, dr, db)) =>
-        Totals(t.delivered + d, t.dropped + dr, t.droppedBytes + db)
-      case (t, _) => t
-    }
-    totals.merge(stream, batch, (a, b) =>
-      Totals(a.delivered + b.delivered, a.dropped + b.dropped, a.droppedBytes + b.droppedBytes))
+    val batch = Totals(messages.collect { case KinesisCommit(d) => d }.sum)
+    totals.merge(stream, batch, (a, b) => Totals(a.delivered + b.delivered))
     onCommit(stream, batch)
   }
-  def get(stream: String): Totals = totals.getOrDefault(stream, Totals(0, 0, 0))
+  def get(stream: String): Totals = totals.getOrDefault(stream, Totals(0))
   def reset(): Unit = { totals.clear(); onCommit = (_, _) => () }
 }
 
@@ -180,12 +168,12 @@ class KinesisEmuWriterFactory(cfg: SinkConfig, valueIsString: Boolean)
     new KinesisEmuDataWriter(cfg, valueIsString, partitionId, Some(epochId))
 }
 
-final case class KinesisCommit(delivered: Long, dropped: Long, droppedBytes: Long)
-    extends WriterCommitMessage
+final case class KinesisCommit(delivered: Long) extends WriterCommitMessage
 
-/** Per-task writer: buffers row payloads into flush units (R3), sheds
-  * load deterministically when configured (R4), chunks/batches/puts on
-  * flush (R5-R8). One instance per task — single-threaded by contract.
+/** Per-task writer: buffers row payloads into flush units (R3) and
+  * chunks/batches/puts them (R5-R8) at commit, or before a row with its
+  * own partition key. One instance per task — single-threaded by
+  * contract.
   *
   * Streaming epochs (`epoch` defined) deliver exactly-once: records are
   * staged locally and committed idempotently under the
@@ -209,9 +197,8 @@ class KinesisEmuDataWriter(cfg: SinkConfig, valueIsString: Boolean,
       resps.map(_.results.count(_.isRight)).sum.toLong
     }
 
-  private val writerCfg = KinesisWriter.Config(cfg.streamName, cfg.partitionKey,
-    bufferSize = cfg.bufferSize, queueDepth = cfg.queueDepth)
-  private var stats = DropStats(0, 0, 0, 0)
+  private val writerCfg = KinesisWriter.Config(cfg.streamName, cfg.partitionKey)
+  private var delivered = 0L // flush units and keyed rows
   private var deliveredRecords = 0L
   private val pendingUnits = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
   private val flusher = new KinesisWriter.Flusher(writerCfg, unit => pendingUnits += unit)
@@ -231,22 +218,12 @@ class KinesisEmuDataWriter(cfg: SinkConfig, valueIsString: Boolean,
 
   private def deliver(c: KinesisWriter.Config, payload: Array[Byte]): Unit = {
     deliveredRecords += sendPayload(c, payload)
-    stats = stats + DropStats(1, 1, 0, 0)
+    delivered += 1
   }
 
   private def drain(): Unit = {
-    if (pendingUnits.nonEmpty) {
-      if (cfg.dropOnBackpressure) {
-        val (accepted, _, s) = DropPolicy.decide(
-          pendingUnits.map(_.length.toLong).toSeq, cfg.queueDepth, cfg.drainPerOffer)
-        accepted.foreach(i => deliveredRecords += sendPayload(writerCfg, pendingUnits(i)))
-        stats = stats + s
-      } else {
-        pendingUnits.foreach(u => deliveredRecords += sendPayload(writerCfg, u))
-        stats = stats + DropStats(pendingUnits.size, pendingUnits.size, 0, 0)
-      }
-      pendingUnits.clear()
-    }
+    pendingUnits.foreach(deliver(writerCfg, _))
+    pendingUnits.clear()
   }
 
   override def commit(): WriterCommitMessage = {
@@ -259,19 +236,15 @@ class KinesisEmuDataWriter(cfg: SinkConfig, valueIsString: Boolean,
       case (None, None) => () // non-durable batch: records already sent
     }
     staged.clear()
-    KinesisCommit(stats.delivered, stats.dropped, stats.droppedBytes)
+    KinesisCommit(delivered)
   }
   override def abort(): Unit = pendingUnits.clear()
   override def close(): Unit = ()
 
-  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-    taskMetric("droppedBytes", stats.droppedBytes),
-    taskMetric("droppedUnits", stats.dropped),
-    taskMetric("deliveredRecords", deliveredRecords))
-  private def taskMetric(n: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
-    override def name(): String = n
-    override def value(): Long = v
-  }
+  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(new CustomTaskMetric {
+    override def name(): String = "deliveredRecords"
+    override def value(): Long = deliveredRecords
+  })
 }
 
 // ----------------------------------------------------------------- read

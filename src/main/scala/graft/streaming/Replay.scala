@@ -154,12 +154,9 @@ object Replay {
     * every replay entry. Retention (round 18): superseded run dirs —
     * a finished replay's checkpoint + sink tree — are reaped by the
     * same pin/age/in-progress mechanism the materialized generations
-    * get (`spark.graft.replay.sweepAgeMs`, default 6 h, judged by
-    * newest DESCENDANT mtime so a long-running live query is never
-    * swept out from under itself; active [[pinnedRuns]] survive at any
-    * age, byte-untouched). The conf is read from the PASSED session
-    * (the hotBucketCapDocs discipline — a tuning knob must not be
-    * thread-dependent). */
+    * get ([[RunSweepAgeMs]], judged by newest DESCENDANT mtime so a
+    * long-running live query is never swept out from under itself;
+    * active [[pinnedRuns]] survive at any age, byte-untouched). */
   private val lastRunSweepMs = new java.util.concurrent.atomic.AtomicLong(0)
   /** total runBase allocations this JVM (spec hook: proves batch-side
     * run dirs — p10/p11 — are allocated through the swept path). */
@@ -181,19 +178,21 @@ object Replay {
       if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_replay"
       else "/tmp/graft_replay")
 
+  /** Run-dir retention horizon: pins and leases protect a run dir
+    * within it; a drain paused longer restarts from scratch. */
+  val RunSweepAgeMs: Long = 6L * 60 * 60 * 1000
+
   private[graft] def runBase(s: SparkSession, name: String): String = {
     runBaseCalls.incrementAndGet()
     val root = replayRoot(s)
     new java.io.File(root).mkdirs()
-    val ageMs = s.conf.getOption("spark.graft.replay.sweepAgeMs")
-      .map(_.toLong).getOrElse(6L * 60 * 60 * 1000)
     // throttled: retention needs to run per SESSION, not per entry —
     // the sweep's root listing rides inside measured replay windows,
     // so at most one pass per tenth of the horizon per JVM
     val now = System.currentTimeMillis()
     val last = lastRunSweepMs.get
-    if (now - last > ageMs / 10 && lastRunSweepMs.compareAndSet(last, now)) {
-      try graft.core.Materialize.sweepRunRoot(root, activePins(ageMs), ageMs)
+    if (now - last > RunSweepAgeMs / 10 && lastRunSweepMs.compareAndSet(last, now)) {
+      try graft.core.Materialize.sweepRunRoot(root, activePins(RunSweepAgeMs), RunSweepAgeMs)
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[graft] replay run sweep skipped: ${e.getMessage}") }
     }
@@ -265,33 +264,19 @@ object Replay {
   private[graft] val AdmissionPartitions = 8
 
   /** FQCN of Spark's disk-backed state store provider (rocksdbjni ships
-    * in the Spark distribution). */
+    * in the Spark distribution): the state provider of every streaming
+    * ADMISSION-tier drain (round 18, closing round 17's one `weak`
+    * grade). s14-class stateful dedup holds PAIR-VOLUME state within
+    * the watermark window (round-17 sweep: 1.6M/6.5M/40.7M in-flight
+    * pair keys at 1x/2x/5x on the dup worst case), and the default
+    * in-memory HDFS provider keeps each partition's full key map ON
+    * HEAP — measured OOM (CANNOT_LOAD_STATE_STORE) at the 40M-key point
+    * where disk-backed RocksDB completes. The small KEY-volume stateful
+    * replays (sessionize/windows, state ~ key cardinality, flat in the
+    * dup sweep) stay on the in-memory default — per-micro-batch RocksDB
+    * commit overhead buys them nothing. */
   private[graft] val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** SHIPPED state-store-provider decision for the streaming ADMISSION
-    * tier (round 18, closing round 17's one `weak` grade): s14-class
-    * stateful dedup holds PAIR-VOLUME state within the watermark window
-    * (round-17 sweep: 1.6M/6.5M/40.7M in-flight pair keys at 1x/2x/5x on
-    * the dup worst case), and the default in-memory HDFS provider keeps
-    * each partition's full key map ON HEAP — measured OOM
-    * (CANNOT_LOAD_STATE_STORE) at the 40M-key point where disk-backed
-    * RocksDB completes. That decision now ships in the session config
-    * rather than a test-harness env knob: admission-tier queries run
-    * under RocksDB BY DEFAULT; `spark.graft.stream.stateProvider`
-    * overrides (`memory` = session default provider, for the
-    * small-window continuous case; `rocksdb` = force). The small
-    * KEY-volume stateful replays (sessionize/windows, state ~ key
-    * cardinality, flat in the dup sweep) stay on the in-memory default
-    * — per-micro-batch RocksDB commit overhead buys them nothing.
-    * Returns what `tier` resolved to, for the selection spec. */
-  private[graft] def admissionStateProvider(s: SparkSession): Option[String] =
-    s.conf.getOption("spark.graft.stream.stateProvider").getOrElse("auto") match {
-      case "memory" => None
-      case "rocksdb" | "auto" => Some(RocksDbProvider)
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.stream.stateProvider=$other (want auto|rocksdb|memory)")
-    }
 
   /** CHILD SESSION for an admission-tier drain (round 19, closing the
     * round-18 documented session-inheritance low STRUCTURALLY): the
@@ -303,9 +288,9 @@ object Replay {
     * unrelated streaming query started on the PARENT while the drain
     * is in flight. The parent's runtime-set graft/tuning knobs are
     * copied across explicitly — `newSession` starts from the static
-    * SparkConf, so a runtime `conf.set` on the parent (mat dir, sweep
-    * horizons, hotBucketCapDocs, shuffle partitions) would otherwise
-    * silently reset to defaults mid-drain. One-session rule: every
+    * SparkConf, so a runtime `conf.set` on the parent (mat dir, replay
+    * root, shuffle partitions) would otherwise silently reset to
+    * defaults mid-drain. One-session rule: every
     * DataFrame in the drain must come from the returned session; the
     * post-drain batch REPORT may run on either (it reads the sink
     * parquet). */
@@ -327,15 +312,14 @@ object Replay {
     * atomic (one lock around the whole snapshot sync, including the
     * stale-key unsets), so overlapping drains of one parent see
     * identical conf as long as the parent's knobs don't change BETWEEN
-    * their acquisitions; mutating a knob (or the provider opt-out) on
-    * the parent while another drain of the same parent is mid-flight
-    * propagates to the shared child at the next acquisition and can
+    * their acquisitions; mutating a knob on the parent while another
+    * drain of the same parent is mid-flight propagates to the shared
+    * child at the next acquisition and can
     * reach the in-flight drain's not-yet-planned stages — the
     * visibility a runtime knob normally has, but different from the
     * pre-cache one-private-session-per-drain behavior. A caller that
     * needs a drain pinned against concurrent knob churn should read
-    * the knob once at plan construction (the hotBucketCapDocs
-    * discipline) or serialize its drains. */
+    * the knob once at plan construction or serialize its drains. */
   private val admissionChildren =
     new java.util.WeakHashMap[SparkSession, (SparkSession, scala.collection.mutable.Set[String])]()
   private[graft] def admissionSession(parent: SparkSession): SparkSession =
@@ -365,15 +349,9 @@ object Replay {
             k == "spark.sql.session.timeZone" ||
             k == "spark.sql.legacy.parquet.nanosAsLong") desired(k) = v
       }
-      admissionStateProvider(parent).foreach { cls =>
-        desired("spark.sql.streaming.stateStore.providerClass") = cls
-        desired(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled") =
-          "true"
-        // (an explicit `memory` opt-out simply omits the provider keys
-        // from `desired`; the removed-key sweep below then unsets any
-        // pin a previous acquisition left on the cached child)
-      }
+      desired("spark.sql.streaming.stateStore.providerClass") = RocksDbProvider
+      desired("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled") =
+        "true"
       (applied -- desired.keySet).foreach { k =>
         child.conf.unset(k); applied -= k
       }
@@ -1154,13 +1132,11 @@ object Replay {
     * the state is PAIR-VOLUME-sized (round-17 sweep: 1.6M / 6.5M /
     * 40.7M keys at 1x/2x/5x on the id-offset dup worst case — each
     * arrival matches every standing copy), so this entry RUNS UNDER THE
-    * DISK-BACKED RocksDB provider by default since round 18
-    * ([[admissionStateProvider]] — the in-memory HDFS provider holds
-    * each partition's full key map on heap and OOMs at the measured
-    * 40M-key point where RocksDB completes; BASELINE.md s14 state
-    * rail). `spark.graft.stream.stateProvider=memory` opts a
-    * small-window continuous deployment back out. A collapsed
-    * corpus build shrinks the same state k-fold for exact-dup mass:
+    * DISK-BACKED RocksDB provider since round 18 ([[RocksDbProvider]]
+    * — the in-memory HDFS provider holds each partition's full key map
+    * on heap and OOMs at the measured 40M-key point where RocksDB
+    * completes; BASELINE.md s14 state rail). A collapsed corpus build
+    * shrinks the same state k-fold for exact-dup mass:
     * candidate keys are per REPRESENTATIVE, expansion happens at
     * read-back. */
   /** s14's arrival-side source: the day-1 census cut at the scan, the

@@ -154,13 +154,10 @@ class CrossProcessMatSpec extends AnyFunSuite with BeforeAndAfterAll {
       // temp cleaned, the holder's lock untouched — then recovery once
       // the holder releases
       Files.writeString(lockOf("s2"), "")
-      spark.conf.set("spark.graft.mat.publishWaitMs", "800")
-      try {
-        intercept[IllegalStateException] {
-          graft.core.Materialize.readOrCompute(spark, kind, "s2")(
-            (1 to 3).toDF("k"))
-        }
-      } finally spark.conf.unset("spark.graft.mat.publishWaitMs")
+      intercept[IllegalStateException] {
+        graft.core.Materialize.publish(spark, kind, "s2", waitMs = 800L)(
+          (1 to 3).toDF("k"))
+      }
       assert(Files.exists(lockOf("s2")), "a LIVE holder's lock must not be stolen")
       assert(residue(mat, kind) == Seq("s2.lock"), s"${residue(mat, kind)}")
       Files.delete(lockOf("s2"))

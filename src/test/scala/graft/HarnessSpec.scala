@@ -27,12 +27,19 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
       (64L * 1024 * 1024).toString)
   }
 
-  test("every spark.graft conf read in src/main has a README runbook row, and no other key does") {
-    import java.nio.file.{Files, Path, Paths}
+  private def lines(p: java.nio.file.Path): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    def lines(p: Path): Seq[String] = Files.readAllLines(p).asScala.toSeq
-    val literal = "\"spark\\.graft\\.([A-Za-z0-9_.]+)\"".r
-    val walk = Files.walk(Paths.get("src/main"))
+    java.nio.file.Files.readAllLines(p).asScala.toSeq
+  }
+
+  /** Each `literal` (group 1) on a code line of the .scala files under
+    * `root` has a README row matching `row` (group 1), and each such
+    * row has a read. */
+  private def assertRowPerRead(root: String, literal: scala.util.matching.Regex,
+                               row: scala.util.matching.Regex): Unit = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(Paths.get(root))
     val read = try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
       .flatMap(lines)
       .filterNot { l =>
@@ -42,16 +49,27 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
       .flatMap(l => literal.findAllMatchIn(l).map(_.group(1)))
       .toSet
     finally walk.close()
-    val row = "^\\| `spark\\.graft\\.([A-Za-z0-9_.]+)` \\|".r
     val documented = lines(Paths.get("README.md"))
       .flatMap(l => row.findFirstMatchIn(l).map(_.group(1))).toSet
     assert(read.nonEmpty)
     assert(read == documented, s"read without a row: ${read -- documented}; " +
       s"row without a read: ${documented -- read}")
+  }
+
+  test("every spark.graft conf read in src/main has a README runbook row, and no other key does") {
+    assertRowPerRead("src/main", "\"spark\\.graft\\.([A-Za-z0-9_.]+)\"".r,
+      "^\\| `spark\\.graft\\.([A-Za-z0-9_.]+)` \\|".r)
     // the JVM-wide engine defaults GraftExtensions installs are named too
-    val readme = lines(Paths.get("README.md")).mkString("\n")
+    val readme = lines(java.nio.file.Paths.get("README.md")).mkString("\n")
     val unnamed = graft.plans.GraftExtensions.Defaults.keySet.filterNot(k => readme.contains(s"`$k`"))
     assert(unnamed.isEmpty, s"JVM-wide defaults README does not name: $unnamed")
+  }
+
+  test("every kinesis-emu option read in src/main has a README options row, and no other option does") {
+    // CaseInsensitiveStringMap reads: get / getInt / getLong / getDouble / getBoolean
+    assertRowPerRead("src/main/scala/graft/sources",
+      "\\.get(?:Int|Long|Double|Boolean)?\\(\"([^\"]+)\"".r,
+      "^\\| `([A-Za-z]+)` \\| (?:source|sink|source, sink) \\|".r)
   }
 
   test("a Rail sample of q03 at sf0.001 dumps a stage table and the final plan") {

@@ -121,17 +121,6 @@ class IngestSpec extends AnyFunSuite {
     }
   }
 
-  test("drop policy: queue-full drops, stats add up (kinesis.go:137-149 semantics)") {
-    // drain slower than offers: with queueDepth 2 and no draining, only
-    // the first 2 units are accepted
-    val (acc, drop, stats) = DropPolicy.decide(Seq(10L, 20L, 30L, 40L), 2, drainPerOffer = 0.0)
-    assert(acc == Seq(0, 1) && drop == Seq(2, 3))
-    assert(stats == DropStats(4, 2, 2, 70L))
-    // drain keeps up: nothing drops
-    val (acc2, drop2, _) = DropPolicy.decide(Seq.fill(100)(1L), 4, drainPerOffer = 1.0)
-    assert(acc2.size == 100 && drop2.isEmpty)
-  }
-
   // --- FastWriter: the reference's NewFastWriter stack (kinesis.go:37-57) ---
 
   private def emuBytes(stream: String = "t"): Long =
@@ -144,6 +133,42 @@ class IngestSpec extends AnyFunSuite {
     val release = new CountDownLatch(1)
     KinesisEmu.failureInjector = (_, _) => { entered.countDown(); release.await(); Seq.empty }
     (entered, release)
+  }
+
+  /** A FastWriter whose ticker never fires within a test, so each
+    * `unit` call offers exactly one flush unit; drops land in `drops`. */
+  private def unitWriter(queueDepth: Int): (KinesisWriter.FastWriter, Array[Byte] => Unit,
+                                            java.util.concurrent.ConcurrentLinkedQueue[Long]) = {
+    val drops = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val w = new KinesisWriter.FastWriter(KinesisWriter.Config("t", "key",
+      queueDepth = queueDepth, flushIntervalMs = 60000L), onDrop = b => drops.add(b))
+    (w, p => { w.write(p); w.flush() }, drops)
+  }
+
+  test("drop policy: queue-full drops, stats add up (kinesis.go:137-149 semantics)") {
+    withStream() {
+      // drain held inside its first put: with queueDepth 2, only the
+      // next 2 units are accepted
+      val (entered, release) = holdPuts()
+      val (w, unit, drops) = unitWriter(queueDepth = 2)
+      try {
+        unit(Array.fill(1)(0.toByte)) // taken by the drain, which blocks
+        assert(entered.await(10, TimeUnit.SECONDS))
+        Seq(10, 20, 30, 40).foreach(n => unit(Array.fill(n)(1.toByte)))
+        import scala.jdk.CollectionConverters._
+        assert(drops.asScala.toSeq == Seq(30L, 40L))
+      } finally { release.countDown(); w.close() }
+      assert((w.offered, w.delivered, w.dropped) == ((101L, 31L, 70L)))
+    }
+    withStream() {
+      // drain keeps up (each unit offered once the last one is out): nothing drops
+      val (w, unit, drops) = unitWriter(queueDepth = 4)
+      try (1 to 100).foreach { i =>
+        unit(Array.fill(1)(1.toByte))
+        while (w.delivered < i) Thread.sleep(1)
+      } finally w.close()
+      assert(drops.isEmpty && w.delivered == 100L && emuBytes() == 100L)
+    }
   }
 
   private def ingestThreads(): Seq[String] = {
@@ -317,12 +342,19 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("property: delivered + dropped == offered") {
-    forAll(Gen.zip(Gen.listOf(Gen.choose(1L, 100L)), Gen.choose(1, 8))) {
-      case (sizes: List[Long], depth: Int) =>
-        val (acc, drop, stats) = DropPolicy.decide(sizes, depth, drainPerOffer = 0.5)
-        assert(acc.size + drop.size == sizes.size)
-        assert(stats.delivered + stats.dropped == stats.offered)
-        assert((acc ++ drop).sorted == sizes.indices)
+    // each case starts (and joins) a writer's two threads: few cases
+    forAll(Gen.zip(Gen.listOf(Gen.choose(1, 100)), Gen.choose(1, 8)), trials = 12) {
+      case (sizes: List[Int], depth: Int) => withStream() {
+        // a drain slowed to one put per ms against an unthrottled offer
+        KinesisEmu.failureInjector = (_, _) => { Thread.sleep(1); Seq.empty }
+        val (w, unit, drops) = unitWriter(depth)
+        try sizes.foreach(n => unit(Array.fill(n)(1.toByte))) finally w.close()
+        import scala.jdk.CollectionConverters._
+        val delivered = KinesisEmu.stream("t").get.allRecords.map(_.data.length)
+        assert(delivered.size + drops.size == sizes.size)
+        assert(w.delivered + w.dropped == w.offered && w.offered == sizes.sum.toLong)
+        assert((delivered.map(_.toLong) ++ drops.asScala).sorted == sizes.map(_.toLong).sorted)
+      }
     }
   }
 

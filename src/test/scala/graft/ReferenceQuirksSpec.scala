@@ -72,12 +72,33 @@ class ReferenceQuirksSpec extends AnyFunSuite {
     }
   }
 
+  /** Offers ten `unitBytes` flush units (line-sized writes that fill
+    * the buffer exactly) to a depth-2 FastWriter whose drain is held
+    * inside its first PutRecords, then releases the drain and closes. */
+  private def tenUnitsAgainstHeldDrain(unitBytes: Int,
+                                       onDrop: Option[Long => Unit]): KinesisWriter.FastWriter = {
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    KinesisEmu.failureInjector = (_, _) => { entered.countDown(); release.await(); Seq.empty }
+    val cfg = KinesisWriter.Config("t", "k", bufferSize = unitBytes, queueDepth = 2,
+      flushIntervalMs = 60000L)
+    val w = onDrop.fold(new KinesisWriter.FastWriter(cfg))(new KinesisWriter.FastWriter(cfg, _))
+    val line = Array.fill(unitBytes / 4)(7.toByte)
+    try {
+      (1 to 4).foreach(_ => w.write(line)) // unit 1: taken by the drain
+      assert(entered.await(10, java.util.concurrent.TimeUnit.SECONDS))
+      (1 to 4 * 9).foreach(_ => w.write(line))
+    } finally { release.countDown(); w.close() }
+    w
+  }
+
   test("drop granularity: load shedding discards whole flush units (BASELINE.md row 'drop granularity')") {
     val unit = 4096L
-    val (_, dropped, stats) =
-      DropPolicy.decide(Seq.fill(10)(unit), queueDepth = 2, drainPerOffer = 0.0)
-    assert(dropped.nonEmpty)
-    assert(stats.droppedBytes % unit == 0L, "drops must be whole flush units")
+    withStream() {
+      val w = tenUnitsAgainstHeldDrain(unit.toInt, onDrop = Some(_ => ()))
+      assert(w.dropped > 0L)
+      assert(w.dropped % unit == 0L, "drops must be whole flush units")
+    }
   }
 
   test("default Dropped hook parity: per-drop 'dropping N bytes' to stderr (kinesis.go:151-155)") {
@@ -85,10 +106,9 @@ class ReferenceQuirksSpec extends AnyFunSuite {
     val seen = scala.collection.mutable.ArrayBuffer[Long]()
     val prev = DropPolicy.onDrop
     DropPolicy.onDrop = seen += _
-    try {
-      val (_, dropped, _) =
-        DropPolicy.decide(Seq.fill(10)(100L), queueDepth = 2, drainPerOffer = 0.0)
-      assert(seen.size == dropped.size && seen.forall(_ == 100L))
+    try withStream() {
+      val w = tenUnitsAgainstHeldDrain(100, onDrop = None) // the default hook
+      assert(seen.nonEmpty && seen.size == w.dropped / 100 && seen.forall(_ == 100L))
     } finally DropPolicy.onDrop = prev
     // and the DEFAULT hook writes the reference's exact stderr message
     // (fmt.Fprintf(os.Stderr, "dropping %d bytes", len(p)) — no newline)

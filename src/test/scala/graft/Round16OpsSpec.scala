@@ -550,7 +550,7 @@ class Round16OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("hot-bucket census: an exact-duplicate mega-cluster over the cap " +
     "fires the warning from real signatures; a distinct corpus stays silent") {
     import spark.implicits._
-    val cap = graft.ops.Dedup.hotBucketCapDocs(spark)
+    val cap = graft.ops.Dedup.HotBucketCapDocs
     assert(cap === 2000L, "cap is sqrt(JaccardPairBudget) = sqrt(4e6)")
 
     // (cap+1) exact duplicates: identical text => identical MinHash in
@@ -559,7 +559,7 @@ class Round16OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val boiler = (1L to cap + 1).map(i => (i, "the quick brown fox cookie banner"))
     val filler = (1L to 20L).map(i => (i + 100000L, s"unique doc $i with words w$i x$i"))
     val hot = graft.ops.Dedup.bandRowsFor(spark, (boiler ++ filler).toDF("doc_id", "text"))
-    val warn = graft.ops.Dedup.hotBucketWarning(spark, hot)
+    val warn = graft.ops.Dedup.hotBucketWarning(hot)
     assert(warn.isDefined, "over-cap bucket must warn")
     assert(warn.get.contains("8 LSH bucket(s)"),
       s"all 8 bands of the duplicate cluster are hot: ${warn.get}")
@@ -568,7 +568,7 @@ class Round16OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // below the cap (exactly cap duplicates): silent — the budget holds.
     val atCap = graft.ops.Dedup.bandRowsFor(spark,
       (1L to cap).map(i => (i, "the quick brown fox cookie banner")).toDF("doc_id", "text"))
-    assert(graft.ops.Dedup.hotBucketWarning(spark, atCap).isEmpty,
+    assert(graft.ops.Dedup.hotBucketWarning(atCap).isEmpty,
       "a bucket at exactly the cap is within the pair budget")
   }
 

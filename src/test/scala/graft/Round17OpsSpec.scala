@@ -151,7 +151,7 @@ class Round17OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def plantedMegaCorpus(): (String, Long) = {
     val s = spark
     import s.implicits._
-    val cap = graft.ops.Dedup.hotBucketCapDocs(spark)
+    val cap = graft.ops.Dedup.HotBucketCapDocs
     val boiler = (1L to cap + 1).map(i => (i, "the quick brown fox cookie banner"))
     val tombCluster = Seq(3000003L, 3000013L, 3000023L, 3000033L)
       .map(i => (i, "terms of service apply to everything"))
@@ -189,7 +189,7 @@ class Round17OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val nCand = cand.count()
       assert(nCand < 100, s"collapsed candidate volume must be tiny, got $nCand")
       // the round-16 tripwire stays SILENT on the collapsed build
-      assert(D.hotBucketWarning(spark, view.rows).isEmpty,
+      assert(D.hotBucketWarning(view.rows).isEmpty,
         "no hot bucket may survive the collapse")
       // d02 == the uncollapsed kernel, bit for bit (including the
       // c(c−1)/2 within-cluster pairs at jaccard 1.0)
@@ -369,60 +369,59 @@ class Round17OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     "kernels, across seeds") {
     val s = spark
     import s.implicits._
-    // spark.graft.dedup.hotBucketCapDocs steers only which
-    // REPRESENTATION a cold build publishes — the property under test
-    // is that the answer is invariant to it
-    spark.conf.set("spark.graft.dedup.hotBucketCapDocs", "3")
-    try {
-      val D = graft.ops.Dedup
-      val rnd = new scala.util.Random(1701)
-      val words = Array("alpha", "beta", "gamma", "delta", "eps", "zeta",
-        "eta", "theta", "iota", "kappa", "lambda", "mu")
-      for (trial <- 1 to 5) {
-        withMatDir {
-          // 6-10 distinct texts; each cloned into a cluster of 1..8 docs
-          // (at least one cluster past the cap of 3); ids spread across
-          // every census residue so tombstoned/arrival members arise
-          val nTexts = 6 + rnd.nextInt(5)
-          var nextId = 0L
-          val docs = (0 until nTexts).flatMap { t =>
-            val text = Array.fill(3 + rnd.nextInt(5))(
-              words(rnd.nextInt(words.length))).mkString(" ")
-            val size = if (t == 0) 4 + rnd.nextInt(5) else 1 + rnd.nextInt(8)
-            (0 until size).map { _ =>
-              nextId += 1 + rnd.nextInt(3)
-              (nextId, text)
-            }
+    // the collapse cap steers only which REPRESENTATION a cold build
+    // publishes — the property under test is that the answer is
+    // invariant to it. Each trial's cold build runs under a cap of 3;
+    // d02 and d16 then consume the published collapsed build.
+    val D = graft.ops.Dedup
+    val rnd = new scala.util.Random(1701)
+    val words = Array("alpha", "beta", "gamma", "delta", "eps", "zeta",
+      "eta", "theta", "iota", "kappa", "lambda", "mu")
+    for (trial <- 1 to 5) {
+      withMatDir {
+        // 6-10 distinct texts; each cloned into a cluster of 1..8 docs
+        // (at least one cluster past the cap of 3); ids spread across
+        // every census residue so tombstoned/arrival members arise
+        val nTexts = 6 + rnd.nextInt(5)
+        var nextId = 0L
+        val docs = (0 until nTexts).flatMap { t =>
+          val text = Array.fill(3 + rnd.nextInt(5))(
+            words(rnd.nextInt(words.length))).mkString(" ")
+          val size = if (t == 0) 4 + rnd.nextInt(5) else 1 + rnd.nextInt(8)
+          (0 until size).map { _ =>
+            nextId += 1 + rnd.nextInt(3)
+            (nextId, text)
           }
-          val dir = java.nio.file.Files
-            .createTempDirectory(s"graft-r17-prop$trial").toString
-          docs.toDF("doc_id", "text").coalesce(1)
-            .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-          val docsDF = spark.read.parquet(s"$dir/documents.parquet")
-          assert(D.bandView(spark, dir).members.isDefined,
-            s"trial $trial: the cap-3 census must trip (cluster >= 4 planted)")
-          // d02 == uncollapsed kernel
-          val got = D.d02(spark, dir)
-          val ref = D.neardupPairsOver(spark,
-            D.BandView(D.bandRowsFor(spark, docsDF), None))
-          assert(got.exceptAll(ref).count() == 0L &&
-            ref.exceptAll(got).count() == 0L,
-            s"trial $trial: collapsed d02 != uncollapsed kernel")
-          // d16 == uncollapsed admission
-          val mod = D.IncrementalMod
-          val arrivals = docsDF.where(col("doc_id") % mod === D.IncrementalRem)
-          val corpusDocs = docsDF.where(col("doc_id") % mod =!= D.IncrementalRem &&
-            col("doc_id") % mod =!= D.TombstoneRem)
-          val refAdm = D.admissionReportOver(spark,
-            D.bandRowsFor(spark, arrivals),
-            D.BandView(D.bandRowsFor(spark, corpusDocs), None))
-            .collect().map(_.toSeq).toSeq
-          val gotAdm = D.d16(spark, dir).collect().map(_.toSeq).toSeq
-          assert(gotAdm == refAdm,
-            s"trial $trial: collapsed d16 != uncollapsed admission")
         }
+        val dir = java.nio.file.Files
+          .createTempDirectory(s"graft-r17-prop$trial").toString
+        docs.toDF("doc_id", "text").coalesce(1)
+          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+        val docsDF = spark.read.parquet(s"$dir/documents.parquet")
+        D.bandTable(spark, dir, capDocs = 3)
+        assert(D.bandView(spark, dir).members.isDefined,
+          s"trial $trial: the cap-3 census must trip (cluster >= 4 planted)")
+        // d02 == uncollapsed kernel
+        val got = D.d02(spark, dir)
+        val ref = D.neardupPairsOver(spark,
+          D.BandView(D.bandRowsFor(spark, docsDF), None))
+        assert(got.exceptAll(ref).count() == 0L &&
+          ref.exceptAll(got).count() == 0L,
+          s"trial $trial: collapsed d02 != uncollapsed kernel")
+        // d16 == uncollapsed admission
+        val mod = D.IncrementalMod
+        val arrivals = docsDF.where(col("doc_id") % mod === D.IncrementalRem)
+        val corpusDocs = docsDF.where(col("doc_id") % mod =!= D.IncrementalRem &&
+          col("doc_id") % mod =!= D.TombstoneRem)
+        val refAdm = D.admissionReportOver(spark,
+          D.bandRowsFor(spark, arrivals),
+          D.BandView(D.bandRowsFor(spark, corpusDocs), None))
+          .collect().map(_.toSeq).toSeq
+        val gotAdm = D.d16(spark, dir).collect().map(_.toSeq).toSeq
+        assert(gotAdm == refAdm,
+          s"trial $trial: collapsed d16 != uncollapsed admission")
       }
-    } finally spark.conf.unset("spark.graft.dedup.hotBucketCapDocs")
+    }
   }
 
   // ---- s14 delivery contract: read-back idempotence (order 6) ----

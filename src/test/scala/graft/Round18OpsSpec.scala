@@ -7,10 +7,8 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Round-18 operational-hardening invariants (the round-17 verdict's
   * orders + the ADVICE items):
-  *  - the streaming ADMISSION tier ships its state-provider decision:
-  *    RocksDB by default (the measured x5 OOM point completes on
-  *    defaults), `spark.graft.stream.stateProvider` overrides, and the
-  *    choice is pinned into the query's checkpoint;
+  *  - the streaming ADMISSION tier runs under RocksDB (the measured
+  *    x5 OOM point completes), pinned into the query's checkpoint;
   *  - the fingerprint listing-cache staleness window is CLOSED by a
   *    root-status freshness probe (asserted where the old tests lived:
   *    DedupSpec / Round16OpsSpec);
@@ -55,25 +53,12 @@ class Round18OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val _ = name
   }
 
-  // ---- order 1: shipped state-provider decision for the admission tier
+  // ---- order 1: the admission tier's state provider
 
-  test("admission tier: RocksDB provider by default, overrides honored, " +
-    "choice pinned into the checkpoint, conf restored after the drain") {
+  test("admission tier: a drain pins RocksDB in its checkpoint, session conf untouched") {
     val R = graft.streaming.Replay
-    assert(R.admissionStateProvider(spark) === Some(R.RocksDbProvider),
-      "default (no conf) must resolve the disk-backed provider")
-    try {
-      spark.conf.set("spark.graft.stream.stateProvider", "memory")
-      assert(R.admissionStateProvider(spark).isEmpty,
-        "memory override must fall back to the session default provider")
-      spark.conf.set("spark.graft.stream.stateProvider", "rocksdb")
-      assert(R.admissionStateProvider(spark) === Some(R.RocksDbProvider))
-      spark.conf.set("spark.graft.stream.stateProvider", "bogus")
-      intercept[IllegalArgumentException](R.admissionStateProvider(spark))
-    } finally spark.conf.unset("spark.graft.stream.stateProvider")
-
-    // a REAL drain on defaults: the checkpoint's offset metadata must
-    // name the RocksDB provider (that metadata is what a restarted
+    // a REAL drain: the checkpoint's offset metadata must name the
+    // RocksDB provider (that metadata is what a restarted
     // query obeys, so this pins the shipped config end to end), the
     // drained answer stays exact, and the session conf is restored
     val root = java.nio.file.Files.createTempDirectory("graft-r18-prov").toString
@@ -96,19 +81,6 @@ class Round18OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!spark.conf.getOption(providerKey).exists(
       _.contains("RocksDB")),
       "the session-wide provider stays the in-memory default")
-
-    // memory override on a FRESH checkpoint: the default in-memory
-    // provider is pinned instead — the small-window continuous case
-    try {
-      spark.conf.set("spark.graft.stream.stateProvider", "memory")
-      val base2 = s"$root/run-mem"
-      val (out2, _) = R.s14DedupDrain(spark, feedDir, base2)
-      assert(out2.count() === 100L)
-      val off2 = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$base2/ck/offsets/0")), "UTF-8")
-      assert(!off2.contains("RocksDBStateStoreProvider"),
-        "memory override must leave the session default provider in charge")
-    } finally spark.conf.unset("spark.graft.stream.stateProvider")
   }
 
   // ---- order 3: retention for non-materialized state (run dirs)

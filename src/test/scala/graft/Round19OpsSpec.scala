@@ -528,12 +528,12 @@ class Round19OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     "in-memory default; graft knobs are inherited") {
     val R = graft.streaming.Replay
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set("spark.graft.dedup.hotBucketCapDocs", "123")
+    spark.conf.set("spark.graft.replay.checkpointChecksum", "123")
     val as = try R.admissionSession(spark)
-      finally spark.conf.unset("spark.graft.dedup.hotBucketCapDocs")
+      finally spark.conf.unset("spark.graft.replay.checkpointChecksum")
     assert(as.conf.get(providerKey).contains("RocksDB"),
       "the child session must carry the shipped disk-backed provider")
-    assert(as.conf.get("spark.graft.dedup.hotBucketCapDocs") === "123",
+    assert(as.conf.get("spark.graft.replay.checkpointChecksum") === "123",
       "runtime-set graft knobs must survive into the child")
     assert(!spark.conf.getOption(providerKey).exists(_.contains("RocksDB")),
       "the parent session must never see the provider conf")

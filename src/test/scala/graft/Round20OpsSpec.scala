@@ -153,20 +153,20 @@ class Round20OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val c1 = R.admissionSession(spark)
     val c2 = R.admissionSession(spark)
     assert(c1 eq c2, "two drains on one parent must share one child session")
-    spark.conf.set("spark.graft.dedup.hotBucketCapDocs", "456")
+    spark.conf.set("spark.graft.replay.checkpointChecksum", "456")
     try {
       val c3 = R.admissionSession(spark)
       assert(c3 eq c1)
-      assert(c3.conf.get("spark.graft.dedup.hotBucketCapDocs") === "456",
+      assert(c3.conf.get("spark.graft.replay.checkpointChecksum") === "456",
         "re-acquisition must re-copy runtime-set knobs from the parent")
-    } finally spark.conf.unset("spark.graft.dedup.hotBucketCapDocs")
+    } finally spark.conf.unset("spark.graft.replay.checkpointChecksum")
     // stale-key sweep (the round-20 self-review finding): once the
     // parent UNSETS a knob, the next acquisition must clear it from
     // the shared child too — a re-copy that only adds would pin the
     // stale value for the life of the cache, where the pre-cache
     // fresh-newSession semantics reverted it to the default
     val c4 = R.admissionSession(spark)
-    assert(c4.conf.getOption("spark.graft.dedup.hotBucketCapDocs").isEmpty,
+    assert(c4.conf.getOption("spark.graft.replay.checkpointChecksum").isEmpty,
       "a knob unset on the parent must leave the cached child")
   }
 

@@ -29,17 +29,14 @@ object SweepDup {
   def main(args: Array[String]): Unit = {
     // State provider is SHIPPED CONFIG since round 18: the admission
     // tier (s14-class pair-volume state) selects the disk-backed
-    // RocksDB provider by itself (Replay.admissionStateProvider) —
+    // RocksDB provider by itself (Replay.admissionSession) —
     // the x5 sweep point (~40M in-flight pair keys, which OOMs the
     // in-memory HDFS provider) completes on defaults, no knob needed.
-    // SWEEP_STATE_PROVIDER remains for experiments: `rocksdb` forces
-    // the disk-backed provider on EVERY stateful entry; `memory`
-    // opts the admission tier back onto the session default (the
-    // config that reproduces the round-17 OOM measurement).
+    // SWEEP_STATE_PROVIDER=rocksdb remains for experiments: it forces
+    // the disk-backed provider on EVERY stateful entry.
     val spark = graft.Session(32, sys.env.get("SWEEP_STATE_PROVIDER").toSeq.flatMap {
       case "rocksdb" => Seq("spark.sql.streaming.stateStore.providerClass" ->
         graft.streaming.Replay.RocksDbProvider)
-      case "memory" => Seq("spark.graft.stream.stateProvider" -> "memory")
       case _ => Nil
     }: _*)
     spark.sparkContext.setLogLevel("ERROR")
