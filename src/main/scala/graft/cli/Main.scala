@@ -54,15 +54,12 @@ object Main {
 
     case "stream" :: rest =>
       // end-to-end streaming pipeline: rate source -> 10s tumbling
-      // window counts -> kinesis-emu sink, with the commit-stats hook
-      // reporting each epoch. Runs for N seconds (default 12).
+      // window counts -> kinesis-emu sink. Runs for N seconds (default 12).
       val seconds = rest.headOption.map(_.toInt).getOrElse(12)
       val spark = graft.Session(4)
       spark.sparkContext.setLogLevel("ERROR")
       import org.apache.spark.sql.functions._
       KinesisEmu.createStream("pipeline", shards = 2)
-      graft.sources.KinesisSinkStats.onCommit = (stream, t) =>
-        println(s"[epoch] stream=$stream delivered=${t.delivered}")
       val src = spark.readStream.format("rate").option("rowsPerSecond", "100").load()
         .withWatermark("timestamp", "2 seconds")
         .groupBy(window(col("timestamp"), "5 seconds"))

@@ -337,15 +337,4 @@ object KinesisEmu {
       }
     }
   }
-
-  /** Dump a stream's per-shard durable log as a DataFrame (the Kafka-like
-    * relational view, SURVEY.md §1.2) — the batch-read counterpart of the
-    * DSv2 streaming source, for ad-hoc inspection and replay. */
-  def toDataFrame(spark: org.apache.spark.sql.SparkSession, streamName: String): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val recs = stream(streamName).map(_.allRecords).getOrElse(Seq.empty)
-    recs.map(r => (r.partitionKey, r.data, r.sequenceNumber, r.shardId,
-        new java.sql.Timestamp(r.arrivalNanos / 1000000L)))
-      .toDF("partitionKey", "data", "sequenceNumber", "shardId", "arrivalTs")
-  }
 }

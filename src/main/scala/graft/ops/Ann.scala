@@ -1348,11 +1348,8 @@ object Ann {
   /** generation 1: the FULL corpus (standing + arrived rows) encoded
     * under the STALE codebooks — the serving index of the a15 world
     * (standing index built pre-append + shard appended under frozen
-    * codebooks), published under its own fingerprint. */
-  private[graft] def a17StaleIndex(s: SparkSession, d: String): DataFrame =
-    a17StaleIndexFor(s, d, a17StaleCodebookIds(s, d))
-
-  /** ids threaded from the caller: [[a17StaleServe]] derives the model
+    * codebooks), published under its own fingerprint. The codebook ids
+    * are threaded from the caller: [[a17StaleServe]] derives the model
     * once and passes it to both the index build and the probe side —
     * deriving it independently here would run the corpus
     * scan-sort-limit job twice per gen-1 serve (round-14 review). */
@@ -1377,7 +1374,7 @@ object Ann {
 
   /** a17: RETRAIN -> REPUBLISH -> CUTOVER — the refresh that completes
     * the index lifecycle (a13 build / a15 append / a16 delete): the
-    * serving index is the STALE generation ([[a17StaleIndex]] —
+    * serving index is the STALE generation ([[a17StaleIndexFor]] —
     * codebooks trained before the census arrivals existed, the state
     * a15 leaves behind), and when the post-training arrival fraction
     * exceeds [[RetrainAppendThreshold]], the operator retrains the

@@ -622,8 +622,8 @@ object Dedup {
     // full band-key vectors on every collision row, and at the 8×2
     // recall shape that array carriage measured 14.6 s for 10.3 M
     // candidates at sf0.1 where the 16-byte-row distinct shuffle of the
-    // same 45 M collisions measures 2.6 s (test-side graft.tools.D02Prof,
-    // round 9) — the collision stream is ~4× the candidate set, so
+    // same 45 M collisions measures 2.6 s (a round-9 measurement of
+    // d02's phases) — the collision stream is ~4× the candidate set, so
     // shuffling it slim beats materializing 2×numBands keys per row
     // in-stage. At scale the distinct's exchange volume is
     // collisions × 16 B, map-side combined within each band partition.
@@ -1294,8 +1294,9 @@ object Dedup {
     // publishes both label artifacts (cold-marked via the publish
     // counter, exactly like d02's band table), every later run is a
     // parquet read of the live labels + the size join. The CC kernel
-    // itself stays measurable on demand (test-side graft.tools.D07Rounds,
-    // and any corpus/code change re-keys the fingerprint and re-runs it).
+    // itself stays measurable on demand (`graft.Rail d07` dumps its
+    // stages, DedupSpec asserts its round count via `lastCcRounds`, and
+    // any corpus/code change re-keys the fingerprint and re-runs it).
     // liveCcLabels -> computeAndMaterializeLiveLabels -> ccLabels
     // guarantees the full-corpus table is built before the repair
     // needs it; pair INPUT comes from the materialized pair table —

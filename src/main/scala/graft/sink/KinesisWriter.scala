@@ -47,6 +47,17 @@ object KinesisWriter {
       .map(b => KinesisEmu.putRecords(cfg.streamName, b))
   }
 
+  /** [[write]], failing on any record PutRecords did not write (the
+    * reference ignores per-record failures, quirk (a)). Returns the
+    * number of records written. */
+  def writeAll(cfg: Config, payload: Array[Byte]): Int = {
+    val resps = write(cfg, payload)
+    val failed = resps.map(_.failedCount).sum
+    if (failed > 0)
+      throw new IllegalStateException(s"PutRecords partial failure: $failed records not written")
+    resps.map(_.results.size).sum
+  }
+
   /** Size-bounded buffer (reference `BufferedWriter` minus the ticker:
     * `FastWriter` adds one, the DSv2 sink uses the micro-batch trigger
     * as its time bound). Not thread-safe by design: one instance per
@@ -97,9 +108,7 @@ object KinesisWriter {
     private val drainThread = FastWriter.start(s"graft-ingest-drain-$id", failure) {
       var unit = queue.take()
       while (unit ne FastWriter.EndOfInput) {
-        val failed = KinesisWriter.write(cfg, unit).map(_.failedCount).sum
-        if (failed > 0)
-          throw new IllegalStateException(s"PutRecords partial failure: $failed records not written")
+        KinesisWriter.writeAll(cfg, unit)
         deliveredBytes.addAndGet(unit.length)
         unit = queue.take()
       }

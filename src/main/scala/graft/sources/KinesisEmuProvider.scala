@@ -144,20 +144,16 @@ class KinesisEmuStreamingWrite(cfg: SinkConfig, valueIsString: Boolean) extends 
 }
 
 /** Job-level aggregation of per-task commit messages: delivered flush
-  * units (and keyed rows) per stream, plus an injectable callback fired
-  * on every commit with the epoch's totals. */
+  * units (and keyed rows) per stream. */
 object KinesisSinkStats {
   final case class Totals(delivered: Long)
   private val totals = new java.util.concurrent.ConcurrentHashMap[String, Totals]()
-  @volatile var onCommit: (String, Totals) => Unit = (_, _) => ()
 
   def record(stream: String, messages: Array[WriterCommitMessage]): Unit = {
     val batch = Totals(messages.collect { case KinesisCommit(d) => d }.sum)
     totals.merge(stream, batch, (a, b) => Totals(a.delivered + b.delivered))
-    onCommit(stream, batch)
   }
   def get(stream: String): Totals = totals.getOrDefault(stream, Totals(0))
-  def reset(): Unit = { totals.clear(); onCommit = (_, _) => () }
 }
 
 class KinesisEmuWriterFactory(cfg: SinkConfig, valueIsString: Boolean)
@@ -186,15 +182,15 @@ class KinesisEmuDataWriter(cfg: SinkConfig, valueIsString: Boolean,
   private val staged = scala.collection.mutable.ArrayBuffer[KinesisRecord]()
 
   /** Stage when the task commits transactionally — streaming epochs
-    * AND durable batch writes (persistDir) — else send now. */
+    * AND durable batch writes (persistDir) — else send now, failing the
+    * task on any record PutRecords did not write. */
   private def sendPayload(c: KinesisWriter.Config, payload: Array[Byte]): Long =
     if (epoch.isDefined || cfg.persistDir.isDefined) {
       val recs = RecordChunker.toRecords(c.partitionKey, payload, c.recordSizeLimit)
       staged ++= recs
       recs.size.toLong
     } else {
-      val resps = KinesisWriter.write(c, payload)
-      resps.map(_.results.count(_.isRight)).sum.toLong
+      KinesisWriter.writeAll(c, payload).toLong
     }
 
   private val writerCfg = KinesisWriter.Config(cfg.streamName, cfg.partitionKey)

@@ -6,18 +6,12 @@ import org.apache.spark.sql.functions._
 /** Streaming deduplication — the streaming form of the batch exact-dedup
   * operator (TextSim.q23 / Dedup.d01): keep the FIRST arrival per key.
   *
-  * Two state policies, the same trade-off every streaming dedup at
-  * 100 TB faces:
-  *
-  *  - [[dedupWithinWatermark]] (the scale path): state for a key is
-  *    dropped once the event-time watermark passes it, so state size is
-  *    bounded by the watermark horizon, not stream history. A duplicate
-  *    arriving after its key's state expired is re-emitted — the
-  *    documented, bounded-memory semantics of Spark's
-  *    `dropDuplicatesWithinWatermark`.
-  *  - [[dedupExact]]: global exactness with unbounded state — correct on
-  *    any replay but state grows with distinct keys forever; only for
-  *    bounded key domains.
+  * [[dedupWithinWatermark]] bounds state: state for a key is
+  * dropped once the event-time watermark passes it, so state size is
+  * bounded by the watermark horizon, not stream history. A duplicate
+  * arriving after its key's state expired is re-emitted — the
+  * documented, bounded-memory semantics of Spark's
+  * `dropDuplicatesWithinWatermark`.
   *
   * Rows are emitted immediately on first sight (append mode, no
   * watermark wait), so a horizon covering the full replay makes
@@ -33,10 +27,6 @@ object StreamDedup {
     events
       .withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark(keyCols)
-
-  /** Unbounded-state exact streaming dedup (bounded key domains only). */
-  def dedupExact(events: DataFrame, keyCols: Seq[String]): DataFrame =
-    events.dropDuplicates(keyCols)
 
   /** Batch reference: first row per key by (ts, event_id) arrival order
     * — what a replay of the stream in timestamp order must produce. */

@@ -212,6 +212,23 @@ class CrossProcessEmuSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     val wins = new java.util.concurrent.atomic.AtomicInteger(0)
     val barrier = new java.util.concurrent.CyclicBarrier(threads)
+    // readers load the log during the race: a loser renames its attempt
+    // file to a visible name before it loses, then deletes it, so a file
+    // a reader listed can vanish before it is opened — loadCommitted
+    // retries the load, and no read may fail or see a partial batch
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val bad = new java.util.concurrent.atomic.AtomicReference[String](null)
+    val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val readers = (1 to 3).map(_ => new Thread(() => {
+      while ((!stop.get || reads.get == 0) && bad.get == null) {
+        try {
+          val sizes = FileEmuStore.loadCommitted(dir, "race").map(_.records.size)
+          if (sizes.exists(_ != 5)) bad.compareAndSet(null, s"batch sizes $sizes")
+          reads.incrementAndGet()
+        } catch { case e: Throwable => bad.compareAndSet(null, e.toString) }
+      }
+    }))
+    readers.foreach(_.start())
     try {
       val futs = (0 until threads).map { _ =>
         pool.submit(new Runnable {
@@ -224,7 +241,9 @@ class CrossProcessEmuSpec extends AnyFunSuite with BeforeAndAfterAll {
         })
       }
       futs.foreach(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally pool.shutdown()
+    } finally { pool.shutdown(); stop.set(true); readers.foreach(_.join()) }
+    assert(bad.get == null, s"concurrent reader failed: ${bad.get}")
+    assert(reads.get > 0)
     assert(wins.get() == epochs, s"expected $epochs wins, got ${wins.get()}")
     val batches = FileEmuStore.loadCommitted(dir, "race")
     assert(batches.size == epochs)
@@ -235,80 +254,7 @@ class CrossProcessEmuSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bins.length == epochs, s"${bins.length} attempt files for $epochs tokens")
   }
 
-  test("compaction folds the log into one bounded segment; reads byte-identical even mid-compaction") {
-    val dir = Files.createTempDirectory("graft_xproc_compact").toString
-    FileEmuStore.createStream(dir, "cp", numShards = 2)
-    for (e <- 0L until 20L)
-      assert(KinesisEmu.putRecordsPersisted(dir, "cp", e.toString, 0,
-        CrossProcessCommitter.recordsFor(e)))
-    // a second partition, and a legitimately EMPTY committed batch
-    // (Spark emits empty partitions routinely)
-    assert(FileEmuStore.commit(dir, "cp", "7", 1,
-      CrossProcessCommitter.recordsFor(107L), 42L))
-    assert(FileEmuStore.commit(dir, "cp", "20", 0, Seq.empty, 0L))
-    def snapshot() = FileEmuStore.loadCommitted(dir, "cp").map(b =>
-      (b.key, b.partition, b.records.map { case (k, d, ts) => (k, d.toSeq, ts) }))
-    val before = snapshot()
-    assert(before.size == 22)
-
-    // compact-while-reading: 4 readers hammer loadCommitted during the
-    // fold; every read must equal the pre-compaction snapshot exactly
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val bad = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val readers = (1 to 4).map(_ => new Thread(() => {
-      while (!stop.get && bad.get == null) {
-        try { if (snapshot() != before) bad.compareAndSet(null, "read diverged mid-compaction") }
-        catch { case e: Throwable => bad.compareAndSet(null, e.toString) }
-      }
-    }))
-    readers.foreach(_.start())
-    val folded =
-      try FileEmuStore.compact(dir, "cp")
-      finally { stop.set(true); readers.foreach(_.join()) }
-    assert(bad.get == null, s"concurrent reader failed: ${bad.get}")
-    assert(folded == 22)
-    assert(snapshot() == before, "post-compaction read must be byte-identical")
-
-    // the directory is bounded: 1 segment, zero tokens, zero attempt files
-    def count(sub: String, suffix: String) =
-      Files.list(Paths.get(dir, "cp", sub)).toArray.map(_.toString).count(_.endsWith(suffix))
-    assert(count("segments", ".seg") == 1)
-    assert(count("commits", ".token") == 0)
-    assert(count("data", ".bin") == 0)
-
-    // exactly-once SURVIVES token deletion — in-process and from a real
-    // second JVM: the child retries every compacted epoch (all must
-    // no-op via segment coverage) and appends 21-25
-    assert(!KinesisEmu.putRecordsPersisted(dir, "cp", "3", 0,
-      CrossProcessCommitter.recordsFor(3)))
-    val out = await(spawnChild(dir, "cp", "0", "25", "1"))
-    val childWins = "CHILD_DONE wins=(\\d+)".r.findFirstMatchIn(out)
-      .map(_.group(1).toInt).getOrElse(fail(s"no summary in: $out"))
-    assert(childWins == 5, s"child must win ONLY the 5 new epochs: $out")
-    val after = snapshot()
-    assert(after.size == 27)
-    assert(after.take(22) == before, "compacted prefix stable as the stream grows")
-
-    // a second compact folds the new head and re-merges into ONE segment
-    assert(FileEmuStore.compact(dir, "cp") == 5)
-    assert(snapshot() == after)
-    assert(count("segments", ".seg") == 1)
-
-    // retention horizon: a token younger than the horizon is NOT folded
-    // and stays readable alongside the segment
-    assert(KinesisEmu.putRecordsPersisted(dir, "cp", "99", 0,
-      CrossProcessCommitter.recordsFor(99)))
-    assert(FileEmuStore.compact(dir, "cp", minAgeMillis = 3600L * 1000) == 0)
-    assert(count("commits", ".token") == 1)
-    assert(snapshot().size == 28)
-
-    // the full replay still assigns dense per-shard sequences
-    KinesisEmu.loadPersisted(dir, "cp").shards.foreach { sh =>
-      assert(sh.records.map(_.sequenceNumber) == (0L until sh.records.size.toLong))
-    }
-  }
-
-  test("property: random commit/retry/compact/sweep interleavings preserve the replay exactly") {
+  test("property: random commit/retry/sweep interleavings preserve the replay") {
     val rnd = new scala.util.Random(42)
     for (trial <- 1 to 4) {
       val dir = Files.createTempDirectory(s"graft_xproc_prop$trial").toString
@@ -330,10 +276,7 @@ class CrossProcessEmuSpec extends AnyFunSuite with BeforeAndAfterAll {
             val (k, p) = model.keySet.toSeq(rnd.nextInt(model.size))
             assert(!FileEmuStore.commit(dir, "pr", k, p,
               CrossProcessCommitter.recordsFor(999L), 0L),
-              s"re-commit of compacted/committed ($k, $p) won at step $step")
-          case 8 => // compact, sometimes behind a horizon that skips everything
-            FileEmuStore.compact(dir, "pr",
-              if (rnd.nextBoolean()) 0L else 3600L * 1000)
+              s"re-commit of committed ($k, $p) won at step $step")
           case _ =>
             FileEmuStore.sweepOrphans(dir, "pr", maxAgeMillis = 0L)
         }

@@ -32,23 +32,29 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.readAllLines(p).asScala.toSeq
   }
 
+  /** The non-comment lines of each .scala file under `root`. */
+  private def codeLines(root: String): Map[java.nio.file.Path, Seq[String]] = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(Paths.get(root))
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => p -> lines(p).filterNot { l =>
+        val t = l.trim
+        t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+      })
+      .toMap
+    finally walk.close()
+  }
+
   /** Each `literal` (group 1) on a code line of the .scala files under
     * `root` has a README row matching `row` (group 1), and each such
     * row has a read. */
   private def assertRowPerRead(root: String, literal: scala.util.matching.Regex,
                                row: scala.util.matching.Regex): Unit = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val walk = Files.walk(Paths.get(root))
-    val read = try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
-      .flatMap(lines)
-      .filterNot { l =>
-        val t = l.trim
-        t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
-      }
+    import java.nio.file.Paths
+    val read = codeLines(root).values.flatten
       .flatMap(l => literal.findAllMatchIn(l).map(_.group(1)))
       .toSet
-    finally walk.close()
     val documented = lines(Paths.get("README.md"))
       .flatMap(l => row.findFirstMatchIn(l).map(_.group(1))).toSet
     assert(read.nonEmpty)
@@ -70,6 +76,40 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertRowPerRead("src/main/scala/graft/sources",
       "\\.get(?:Int|Long|Double|Boolean)?\\(\"([^\"]+)\"".r,
       "^\\| `([A-Za-z]+)` \\| (?:source|sink|source, sink) \\|".r)
+  }
+
+  test("every def in src/main has a caller in src/main or perfbench, or is an allowlisted spec hook") {
+    // called only from specs: test hooks and the batch references the
+    // streaming specs compare against
+    val specOnly = Set("a06CandidateVolume", "a06WithCodebooks", "a11ShortlistDf",
+      "a17RetrainOver", "batchFirstPerKey", "batchFlags", "batchReference",
+      "batchSessions", "batchTumbling", "d02Internals", "fingerprintCacheClear",
+      "kmeansPoints", "liveBandTable", "p12BaseShardTotals", "readMarker",
+      "readsSince", "s12DrainInto", "slidingWindow")
+    val main = codeLines("src/main/scala")
+    val callers = main ++ codeLines("perfbench/src")
+    val defined = main.toSeq.flatMap { case (file, ls) =>
+      ls.filterNot(_.contains("override"))
+        .flatMap(l => "\\bdef\\s+([A-Za-z_][A-Za-z0-9_]*)".r.findAllMatchIn(l).map(_.group(1) -> file))
+    }.groupMap(_._1)(_._2)
+    // in its own file any mention is a call; elsewhere only a call-shaped
+    // one (`.name`, `name(`, `name[`), so an unrelated local of the same
+    // name does not count
+    val uncalled = defined.filterNot { case (name, files) =>
+      val q = java.util.regex.Pattern.quote(name)
+      val defLine = s"\\bdef\\s+$q\\b".r
+      val mention = s"\\b$q\\b".r
+      val call = s"(\\.$q\\b|\\b$q\\s*[(\\[])".r
+      callers.exists { case (file, ls) =>
+        val use = if (files.contains(file)) mention else call
+        ls.exists(l => use.findFirstIn(l).isDefined && defLine.findFirstIn(l).isEmpty)
+      }
+    }.keySet
+    assert(uncalled -- specOnly == Set.empty, "defs with no caller outside the specs")
+    assert(specOnly -- uncalled == Set.empty, "allowlisted defs that have a caller in src/main")
+    val tests = codeLines("src/test").values.flatten.toSeq
+    val stale = specOnly.filterNot(n => tests.exists(s"\\b$n\\b".r.findFirstIn(_).isDefined))
+    assert(stale.isEmpty, "allowlisted defs no spec calls")
   }
 
   test("a Rail sample of q03 at sf0.001 dumps a stage table and the final plan") {

@@ -383,18 +383,4 @@ class IngestSpec extends AnyFunSuite {
     }
   }
 
-  test("emu durable log dumps as the Kafka-like relational view") {
-    withStream(shards = 2) {
-      (0 until 10).foreach(i => KinesisWriter.write(
-        KinesisWriter.Config("t", s"k$i"), Array.fill(4)(i.toByte)))
-      val spark = Session(4)
-      val df = KinesisEmu.toDataFrame(spark, "t")
-      assert(df.columns.toSeq ==
-        Seq("partitionKey", "data", "sequenceNumber", "shardId", "arrivalTs"))
-      assert(df.count() == 10)
-      val path = s"/tmp/graft_emu_dump_${System.nanoTime()}"
-      df.write.partitionBy("shardId").parquet(path)
-      assert(spark.read.parquet(path).count() == 10)
-    }
-  }
 }

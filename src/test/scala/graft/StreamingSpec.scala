@@ -165,6 +165,20 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(KinesisEmu.stream("typed").get.allRecords.isEmpty)
   }
 
+  test("S5e: a batch write to the kinesis-emu sink fails when PutRecords drops a record") {
+    KinesisEmu.reset()
+    KinesisEmu.createStream("lossy", shards = 1)
+    KinesisEmu.failureInjector = (_, _) => Seq(KinesisEmu.PerRecordFailure(0, "Throttling"))
+    val s = spark
+    import s.implicits._
+    val e = try intercept[Exception](Seq(("a", "k1"), ("b", "k2")).toDF("data", "partitionKey")
+      .write.format("kinesis-emu").option("stream", "lossy").mode("append").save())
+    finally KinesisEmu.failureInjector = (_, _) => Seq.empty
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null &&
+      m.contains("PutRecords partial failure: 1 records not written")), e.toString)
+  }
+
   test("S3b: flatMapGroupsWithState sessionization equals session_window") {
     val s = spark
     import s.implicits._
