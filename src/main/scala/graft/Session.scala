@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * CLI, every test suite and every diagnostic tool plan with the same
   * planner under the same conf table:
   *
-  *  - `GraftExtensions` (the shipped SQL functions and plan rules), which
+  *  - `GraftExtensions` (the top-k rewrite rule and strategy), which
   *    also installs the JVM-wide engine defaults before the first
   *    SparkContext starts (`GraftExtensions.Defaults`): a codegen cache
   *    of 1000, `LocalCheckpointFileManager` for every streaming

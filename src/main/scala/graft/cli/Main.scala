@@ -77,8 +77,7 @@ object Main {
       q.stop()
       val recs = KinesisEmu.stream("pipeline").get.allRecords
       recs.sortBy(_.sequenceNumber).foreach(r => println("  window-record: " + new String(r.data)))
-      val t = graft.sources.KinesisSinkStats.get("pipeline")
-      println(s"done: windows=${recs.size} delivered=${t.delivered}")
+      println(s"done: windows=${recs.size}")
       spark.stop()
 
     case "bench-sink" :: rest =>

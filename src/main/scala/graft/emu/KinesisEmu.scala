@@ -120,13 +120,16 @@ object KinesisEmu {
 
   def stream(name: String): Option[Stream] = Option(streams.get(name))
 
-  def deleteStream(name: String): Unit = streams.remove(name)
+  /** Drops the stream and its commit tokens, so a stream recreated
+    * under the same name starts again at epoch 0. */
+  def deleteStream(name: String): Unit = {
+    streams.remove(name)
+    tokens.remove(name)
+  }
 
   def reset(): Unit = {
     streams.clear()
-    committedEpochs.clear()
-    epochLocks.clear()
-    maxSeenEpoch.set(Long.MinValue)
+    tokens.clear()
     failureInjector = (_, _) => Seq.empty
     clock = () => epochClockNanos()
     enforceShardRates = false
@@ -157,15 +160,22 @@ object KinesisEmu {
     })
   }
 
-  private val committedEpochs = ConcurrentHashMap.newKeySet[String]()
-  private val epochLocks = new ConcurrentHashMap[String, Object]()
+  /** One stream's exactly-once state: the committed (epoch, partition)
+    * tokens, a lock per token, and the newest committed epoch, which
+    * sets the stream's eviction horizon. */
+  private final class Tokens {
+    val committed = ConcurrentHashMap.newKeySet[(Long, Int)]()
+    val locks = new ConcurrentHashMap[(Long, Int), Object]()
+    val maxSeenEpoch = new AtomicLong(Long.MinValue)
+  }
+  private val tokens = new ConcurrentHashMap[String, Tokens]()
 
   /** Commit tokens older than this many epochs behind the newest one
-    * seen are evicted (the lock/token maps would otherwise grow without
-    * bound on long-running streams). Spark only replays epochs at or
-    * after its last checkpoint, far inside this horizon. */
+    * committed on the same stream are evicted (the token set would
+    * otherwise grow without bound on long-running streams). Spark only
+    * replays epochs at or after its last checkpoint, far inside this
+    * horizon. */
   val EpochRetention = 1000L
-  private val maxSeenEpoch = new AtomicLong(Long.MinValue)
 
   /** Idempotent PutRecords for streaming epochs: the same
     * (stream, epoch, partition) token commits at most once, so Spark's
@@ -186,9 +196,10 @@ object KinesisEmu {
   def putRecordsIdempotent(streamName: String, epochId: Long, partitionId: Int,
                            records: Seq[KinesisRecord]): Boolean = {
     val token = s"$streamName/$epochId/$partitionId"
-    val lock = epochLocks.computeIfAbsent(token, _ => new Object)
-    val committed = lock.synchronized {
-      if (committedEpochs.contains(token)) false // already committed
+    val st = tokens.computeIfAbsent(streamName, _ => new Tokens)
+    val key = (epochId, partitionId)
+    val committed = st.locks.computeIfAbsent(key, _ => new Object).synchronized {
+      if (st.committed.contains(key)) false // already committed
       else {
         if (records.nonEmpty) {
           // phase 1: stage — validate and route, no shard log mutation.
@@ -201,11 +212,11 @@ object KinesisEmu {
           val now = clock()
           staged.foreach { case (shard, r) => shard.append(r.partitionKey, r.data, now) }
         }
-        committedEpochs.add(token)
+        st.committed.add(key)
         true
       }
     }
-    if (committed) evictOldEpochs(epochId)
+    if (committed) evictOldEpochs(st, epochId)
     committed
   }
 
@@ -313,28 +324,21 @@ object KinesisEmu {
     st
   }
 
-  /** Evict commit tokens/locks more than [[EpochRetention]] epochs
-    * behind the newest committed epoch. Amortized: the sweep only runs
-    * when the horizon advances. */
-  private def evictOldEpochs(epochId: Long): Unit = {
-    val prev = maxSeenEpoch.getAndUpdate(m => math.max(m, epochId))
+  /** Evict the stream's commit tokens more than [[EpochRetention]]
+    * epochs behind its newest committed epoch. Amortized: the sweep
+    * only runs when the stream's horizon advances. */
+  private def evictOldEpochs(st: Tokens, epochId: Long): Unit = {
+    val prev = st.maxSeenEpoch.getAndUpdate(m => math.max(m, epochId))
     if (epochId > prev && prev != Long.MinValue) {
-      val horizon = maxSeenEpoch.get() - EpochRetention
-      if (horizon > Long.MinValue + EpochRetention) {
-        def epochOf(token: String): Long = {
-          val parts = token.split('/')
-          if (parts.length >= 2) parts(parts.length - 2).toLongOption.getOrElse(Long.MaxValue)
-          else Long.MaxValue
-        }
-        committedEpochs.removeIf(t => epochOf(t) < horizon)
-        // epochLocks entries are deliberately NOT evicted: removing a
-        // lock object another thread currently holds inside
-        // putRecordsIdempotent would let a concurrent retry
-        // computeIfAbsent a FRESH lock for the same token and enter the
-        // critical section in parallel — a duplicate-append race. Each
-        // entry is a token string + bare Object (~100 bytes); unbounded
-        // only in total epochs ever seen, which an emulator can afford.
-      }
+      val horizon = st.maxSeenEpoch.get() - EpochRetention
+      if (horizon > Long.MinValue + EpochRetention) st.committed.removeIf(_._1 < horizon)
+      // lock entries are deliberately NOT evicted: removing a lock
+      // object another thread currently holds inside
+      // putRecordsIdempotent would let a concurrent retry
+      // computeIfAbsent a FRESH lock for the same token and enter the
+      // critical section in parallel — a duplicate-append race. Each
+      // entry is a key + bare Object (~100 bytes); unbounded only in
+      // total epochs a stream has seen, which an emulator can afford.
     }
   }
 }

@@ -6,70 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
-/** Native Catalyst expression: cosine similarity of two FLOAT vectors,
-  * with full whole-stage codegen (`doGenCode` emits a fused primitive
-  * loop — no boxing, no UDF serialization, stays inside the generated
-  * stage). This is the preferred extension point for scalar math per
-  * the build contract: built-in functions > native Expression > Scala
-  * UDF.
-  *
-  * Accumulation is sequential (index 0..n-1) in both the interpreted
-  * and generated paths, so results are deterministic and identical
-  * between them.
-  */
-case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "cosine_similarity"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-    while (i < n) {
-      val xv = x.getFloat(i).toDouble
-      val yv = y.getFloat(i).toDouble
-      dot += xv * yv; nx += xv * xv; ny += yv * yv; i += 1
-    }
-    if (nx == 0.0 || ny == 0.0) 0.0 else dot / math.sqrt(nx * ny)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $nx = 0.0, $ny = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xv = (double) $a.getFloat($i);
-         |  double $yv = (double) $b.getFloat($i);
-         |  $dot += $xv * $yv; $nx += $xv * $xv; $ny += $yv * $yv;
-         |}
-         |${ev.value} = ($nx == 0.0 || $ny == 0.0) ? 0.0 : $dot / java.lang.Math.sqrt($nx * $ny);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object CosineSimilarity {
-  /** Column-API entry point. */
-  def cosine_similarity(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftInterop.column(
-      CosineSimilarity(org.apache.spark.sql.GraftInterop.expression(a),
-        org.apache.spark.sql.GraftInterop.expression(b)))
-
-  /** Column-API entry point for the quantized-integer variant. */
+  /** Column-API entry point for [[QuantizedCosineSimilarity]]. */
   def quantized_cosine(a: Column, b: Column): Column =
     org.apache.spark.sql.GraftInterop.column(
       QuantizedCosineSimilarity(org.apache.spark.sql.GraftInterop.expression(a),
@@ -83,9 +21,10 @@ object CosineSimilarity {
   * sequence a SQL engine runs for
   * `CAST(dot AS DOUBLE)/SQRT(CAST(n1 AS DOUBLE)*CAST(n2 AS DOUBLE))`,
   * so results are bit-exact across engines (unlike float accumulation,
-  * where summation order matters). Same codegen shape as
-  * [[CosineSimilarity]]: a fused primitive loop inside the generated
-  * stage.
+  * where summation order matters). A native Catalyst expression with
+  * full whole-stage codegen: `doGenCode` emits a fused primitive loop
+  * (no boxing, no UDF serialization) inside the generated stage, and
+  * the interpreted path accumulates in the same order.
   */
 case class QuantizedCosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {

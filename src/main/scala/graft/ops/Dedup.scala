@@ -723,12 +723,41 @@ object Dedup {
     * verifies. Replaces the round-1 all-pairs theta join (a
     * BroadcastNestedLoop, O(n^2) at any scale) with one hash shuffle of
     * 7 rows/doc; recall is exact, not probabilistic. */
-  val SimhashChunks: Seq[(Int, Int, Int)] =
-    graft.plans.Pigeonhole.chunkLayout(SimhashBits, HammingMax + 1)
+  val SimhashChunks: Seq[(Int, Int, Int)] = chunkLayout(SimhashBits, HammingMax + 1)
+
+  /** (idx, bit offset, width) for `bits` split into `n` chunks; the
+    * first `bits % n` chunks get one more bit. */
+  private def chunkLayout(bits: Int, n: Int): Seq[(Int, Int, Int)] = {
+    val base = bits / n
+    val extra = bits % n
+    val widths = Seq.tabulate(n)(i => if (i < extra) base + 1 else base)
+    widths.scanLeft(0)(_ + _).zip(widths).zipWithIndex.map {
+      case ((off, w), idx) => (idx, off, w)
+    }
+  }
+
+  /** All-ones mask of `w` low bits. `(1L << 64) - 1` is NOT it — JVM
+    * shift counts are mod 64, so it evaluates to 0 and a one-chunk
+    * 64-bit layout would degenerate into a constant-key cross join. */
+  private def mask(w: Int): Long = if (w >= 64) -1L else (1L << w) - 1
+
+  /** The pieces of chunk [off, off+w) over words of widths `wordBits`,
+    * as (word, shift right, width, shift left): the chunk value is the
+    * OR over pieces of `((word >> right) & mask(width)) << left`. A
+    * chunk inside one word has one piece with left = 0; a chunk that
+    * straddles a word boundary has two. Arithmetic shift right is safe:
+    * the mask strips any sign-extension bits. */
+  private def pieces(wordBits: Seq[Int], off: Int, w: Int): Seq[(Int, Int, Int, Int)] = {
+    val wordOff = wordBits.scanLeft(0)(_ + _)
+    wordBits.indices.flatMap { k =>
+      val lo = math.max(off, wordOff(k))
+      val hi = math.min(off + w, wordOff(k) + wordBits(k))
+      if (hi <= lo) None else Some((k, lo - wordOff(k), hi - lo, lo - off))
+    }
+  }
 
   /** Pigeonhole multi-index hamming self-join — the construction d03
-    * (one 60-bit word) and m03 (two 60-bit words) use, and
-    * plans/HammingJoinRule applies to user-written joins. The
+    * (one 60-bit word) and m03 (two 60-bit words) use. The
     * fingerprint is the little-endian concatenation of the long
     * columns `fp0, fp1, ...` (word k holds `wordBits(k)` bits, 1 to
     * 64). It is split into maxH+1 chunks over the CONCATENATED bit
@@ -748,7 +777,6 @@ object Dedup {
     * the width, exactly like d03's 7x~8-bit layout. */
   private[graft] def hammingSelfJoin(fps: DataFrame, wordBits: Seq[Int],
                                      maxH: Int): DataFrame = {
-    import graft.plans.Pigeonhole.{chunkLayout, mask, pieces}
     // Degenerate parameters silently collapse the multi-index into one
     // bucket (an O(n^2) join): maxH+1 > bits yields zero-width chunks
     // whose mask is 0. Reject it; full-width masks are explicit.

@@ -130,30 +130,15 @@ class KinesisEmuWrite(cfg: SinkConfig, valueIsString: Boolean) extends Write {
 class KinesisEmuBatchWrite(cfg: SinkConfig, valueIsString: Boolean) extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new KinesisEmuWriterFactory(cfg, valueIsString)
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    KinesisSinkStats.record(cfg.streamName, messages)
+  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
 class KinesisEmuStreamingWrite(cfg: SinkConfig, valueIsString: Boolean) extends StreamingWrite {
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
     new KinesisEmuWriterFactory(cfg, valueIsString)
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    KinesisSinkStats.record(cfg.streamName, messages)
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-/** Job-level aggregation of per-task commit messages: delivered flush
-  * units (and keyed rows) per stream. */
-object KinesisSinkStats {
-  final case class Totals(delivered: Long)
-  private val totals = new java.util.concurrent.ConcurrentHashMap[String, Totals]()
-
-  def record(stream: String, messages: Array[WriterCommitMessage]): Unit = {
-    val batch = Totals(messages.collect { case KinesisCommit(d) => d }.sum)
-    totals.merge(stream, batch, (a, b) => Totals(a.delivered + b.delivered))
-  }
-  def get(stream: String): Totals = totals.getOrDefault(stream, Totals(0))
 }
 
 class KinesisEmuWriterFactory(cfg: SinkConfig, valueIsString: Boolean)
@@ -164,7 +149,7 @@ class KinesisEmuWriterFactory(cfg: SinkConfig, valueIsString: Boolean)
     new KinesisEmuDataWriter(cfg, valueIsString, partitionId, Some(epochId))
 }
 
-final case class KinesisCommit(delivered: Long) extends WriterCommitMessage
+case object KinesisCommit extends WriterCommitMessage
 
 /** Per-task writer: buffers row payloads into flush units (R3) and
   * chunks/batches/puts them (R5-R8) at commit, or before a row with its
@@ -194,7 +179,6 @@ class KinesisEmuDataWriter(cfg: SinkConfig, valueIsString: Boolean,
     }
 
   private val writerCfg = KinesisWriter.Config(cfg.streamName, cfg.partitionKey)
-  private var delivered = 0L // flush units and keyed rows
   private var deliveredRecords = 0L
   private val pendingUnits = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
   private val flusher = new KinesisWriter.Flusher(writerCfg, unit => pendingUnits += unit)
@@ -212,10 +196,8 @@ class KinesisEmuDataWriter(cfg: SinkConfig, valueIsString: Boolean,
     }
   }
 
-  private def deliver(c: KinesisWriter.Config, payload: Array[Byte]): Unit = {
+  private def deliver(c: KinesisWriter.Config, payload: Array[Byte]): Unit =
     deliveredRecords += sendPayload(c, payload)
-    delivered += 1
-  }
 
   private def drain(): Unit = {
     pendingUnits.foreach(deliver(writerCfg, _))
@@ -232,7 +214,7 @@ class KinesisEmuDataWriter(cfg: SinkConfig, valueIsString: Boolean,
       case (None, None) => () // non-durable batch: records already sent
     }
     staged.clear()
-    KinesisCommit(delivered)
+    KinesisCommit
   }
   override def abort(): Unit = pendingUnits.clear()
   override def close(): Unit = ()

@@ -103,6 +103,25 @@ class ExactlyOnceSpec extends AnyFunSuite {
     KinesisEmu.reset()
   }
 
+  test("epoch tokens are per stream: another stream's horizon and a delete/recreate") {
+    KinesisEmu.reset()
+    val r = Seq(KinesisRecord("k", Array[Byte](1)))
+    KinesisEmu.createStream("ta", 1)
+    KinesisEmu.createStream("tb", 1)
+    assert(KinesisEmu.putRecordsIdempotent("ta", 0L, 0, r))
+    // tb advancing past the horizon leaves ta's tokens alone
+    assert(KinesisEmu.putRecordsIdempotent("tb", 0L, 0, r))
+    assert(KinesisEmu.putRecordsIdempotent("tb", KinesisEmu.EpochRetention + 5, 0, r))
+    assert(!KinesisEmu.putRecordsIdempotent("ta", 0L, 0, r)) // a retry, not a second copy
+    assert(KinesisEmu.stream("ta").get.allRecords.size == 1)
+    // a deleted and recreated stream commits its new epoch 0
+    KinesisEmu.deleteStream("ta")
+    KinesisEmu.createStream("ta", 1)
+    assert(KinesisEmu.putRecordsIdempotent("ta", 0L, 0, r))
+    assert(KinesisEmu.stream("ta").get.allRecords.size == 1)
+    KinesisEmu.reset()
+  }
+
   test("oversized staged epochs are re-batched to service limits") {
     KinesisEmu.reset()
     KinesisEmu.createStream("eo2", 1)

@@ -95,26 +95,4 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lit2 == direct.asInstanceOf[Long])
     assert(lit2 >= 0 && lit2 < (1L << planes), s"bucket $lit2 out of range")
   }
-
-  test("NonZeroVector: codegen == interpreted, short-circuit semantics") {
-    val s = spark
-    import s.implicits._
-    import org.apache.spark.sql.GraftInterop
-    def nzv(c: org.apache.spark.sql.Column) =
-      GraftInterop.column(graft.functions.NonZeroVector(GraftInterop.expression(c)))
-    // parquet-backed (codegen path) vs driver re-check
-    val e = graft.core.Tables.embeddings(spark, sfDir).limit(100)
-    val got = e.select(col("vec_id"), nzv(col("embedding")).as("nz"))
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    val want = e.select(col("vec_id"), col("embedding"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).exists(_ != 0.0f)).toMap
-    assert(got.nonEmpty && got == want)
-    // explicit edges: all-zero, empty, leading-zero vectors
-    val edges = Seq(
-      (1L, Array(0.0f, 0.0f)), (2L, Array.empty[Float]),
-      (3L, Array(0.0f, 0.0f, 1e-30f)), (4L, Array(-0.0f, 0.0f))).toDF("id", "v")
-    val r = edges.select(col("id"), nzv(col("v")).as("nz"))
-      .collect().map(x => x.getLong(0) -> x.getBoolean(1)).toMap
-    assert(r == Map(1L -> false, 2L -> false, 3L -> true, 4L -> false))
-  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.rules.RuleExecutor
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -73,12 +74,22 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   // MapPartitions appearing in it would mean the report regressed to
   // re-running the verify kernel per query.
 
-  test("no CartesianProduct anywhere; BNLJ and object kernels only where named") {
+  /** Every declared entry's executed plan at sf0.001, planned once for
+    * both sweep tests, and Spark's rule metering over exactly that
+    * planning (reset first). */
+  private lazy val (plans, ruleMetering) = {
     val sf = "/root/testdata/sf0.001"
+    RuleExecutor.resetMetrics()
+    val planned = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> fn(spark, sf).queryExecution.executedPlan.toString
+    }
+    (planned, RuleExecutor.dumpTimeSpent())
+  }
+
+  test("no CartesianProduct anywhere; BNLJ and object kernels only where named") {
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
     val objectKernelSeen = scala.collection.mutable.Set.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val plan = fn(spark, sf).queryExecution.executedPlan.toString
+    plans.foreach { case (name, plan) =>
       if (plan.contains("CartesianProduct"))
         offenders += s"$name: CartesianProduct"
       if (plan.contains("BroadcastNestedLoopJoin") && !bnljAllowed.contains(name))
@@ -95,6 +106,16 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       offenders += s"$n: allow-listed object kernel no longer present (remove the allowance)"
     }
     assert(offenders.isEmpty, s"plan anti-patterns:\n  ${offenders.mkString("\n  ")}")
+  }
+
+  test("every optimizer rule GraftExtensions injects rewrites a declared entry") {
+    // a metering line: rule, effective / total ns, effective / total runs
+    val line = """(\S+)\s+\d+ / \d+\s+(\d+) / (\d+)""".r
+    val effective = ruleMetering.linesIterator.map(_.trim)
+      .collect { case line(rule, eff, _) => rule -> eff.toLong }.toMap
+    val counts = graft.plans.GraftExtensions.OptimizerRules
+      .map(r => r.ruleName -> effective.getOrElse(r.ruleName, 0L))
+    assert(counts.forall(_._2 > 0), s"effective runs over ${plans.size} entries: $counts")
   }
 
   test("d08's bloom pre-filter stays native — no object round-trip in the plan") {

@@ -227,9 +227,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     q.stop()
     val recs = KinesisEmu.stream("streamed").get.allRecords
     assert(recs.size >= 50, s"only ${recs.size} records arrived")
-    // per-commit stats aggregated from the task commit messages
-    val t = graft.sources.KinesisSinkStats.get("streamed")
-    assert(t.delivered >= 50L, s"stats=$t")
     // per-row routing keys spread across both shards, payloads intact
     assert(recs.map(_.shardId).distinct.size == 2)
     assert(recs.forall(r => new String(r.data).startsWith("payload-")))
