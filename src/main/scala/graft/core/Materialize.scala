@@ -33,8 +33,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    — a crashed JVM cannot permanently orphan temp dirs;
   *  - generations do NOT accumulate forever: [[retentionSweep]] (round
   *    16) deletes a family's unpinned generations under structural
-  *    pin-safety guarantees — the lifecycle operators (append/retune/
-  *    compact) mint generations, the retention policy reaps superseded
+  *    pin-safety guarantees — the lifecycle operators (append/retune)
+  *    mint generations, the retention policy reaps superseded
   *    ones, and a tombstoned document's rows survive in no retained
   *    generation (graft.ops.Governance.g01 is the gate-checked report).
   */
@@ -96,7 +96,7 @@ object Materialize {
     * The file listing is cached per (dir, table) with a SHORT TTL
     * ([[FingerprintTtlMs]], 120 s): one query
     * legitimately fingerprints the same input several times (band table
-    * + live view + compacted/appended/chain keys, all within seconds),
+    * + live view + appended/chain keys, all within seconds),
     * and on an object store each uncached call would be a full
     * recursive LIST of the input tree — thousands of paginated requests
     * on a millions-of-files corpus, multiplied per entry.
@@ -542,11 +542,10 @@ object Materialize {
   /** RETENTION SWEEP (round-16): delete every complete generation of
     * `kind` that is not pinned. Generations accumulate unboundedly
     * otherwise — every append folds a new chain generation, every
-    * retune republishes and leaves its stale predecessor, every
-    * compaction leaves the raw artifact behind — and a superseded raw
-    * generation is not just a storage leak: it RETAINS the rows of
-    * legally-deleted documents that compaction removed from the
-    * serving artifact. The policy is the caller's (`pins` names the
+    * retune republishes and leaves its stale predecessor — and a
+    * superseded raw generation is not just a storage leak: it RETAINS
+    * the rows of legally-deleted documents the serving generation
+    * dropped. The policy is the caller's (`pins` names the
     * currently-serving fingerprint and the rollback generation —
     * whatever the family's lifecycle designates); the MECHANISM here
     * guarantees, structurally and by post-assertion:
@@ -617,7 +616,7 @@ object Materialize {
   }
 
   /** Retention POLICY hook for lifecycle publishers (round 17): right
-    * after a cutover/append/compaction publish, the publisher calls
+    * after a cutover/append publish, the publisher calls
     * this with the generation fingerprints its lifecycle line still
     * designates (serving + rollback) and every other complete
     * generation of the kind is reaped — superseded cutover sources,
@@ -630,9 +629,9 @@ object Materialize {
     * fine, and the swept list is logged rather than returned. Each
     * lifecycle LINE must own its kind namespace — a sweep pins only
     * its own line's generations, so two lines sharing a kind would
-    * reap each other's serving artifacts (the reason the chain/append/
-    * compaction artifacts live under `minhash-chain`/`minhash-append`/
-    * `minhash-live`, not `minhash`). */
+    * reap each other's serving artifacts (the reason the chain and
+    * append artifacts live under `minhash-chain`/`minhash-append`, not
+    * `minhash`). */
   def sweepKeep(s: SparkSession, kind: String, pins: Set[String]): Unit = {
     // the all-stale case [[retentionSweep]] hard-refuses is, for the
     // POLICY caller, simply "this line's current generation isn't

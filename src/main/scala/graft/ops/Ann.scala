@@ -1098,60 +1098,33 @@ object Ann {
     * a broadcast (the s07 model-serving shape, applied to the index).
     * This is the REPLICATED-index serving model every low-latency ANN
     * deployment runs (the index rides each serving node; queries never
-    * shuffle); past one node's memory the same bundle shards
-    * per-cluster and probes route by their probed cluster ids — a
-    * stream-static equi-join on `cluster`, same arithmetic, so the
-    * collapse here is a deployment size choice, not a semantic one.
-    * Arrays are sorted so the PQ codebook index IS pcid and the bundle
-    * is byte-deterministic.
+    * shuffle). Arrays are sorted so the PQ codebook index IS pcid and
+    * the bundle is byte-deterministic.
     *
     * DELETION-AWARE (round 14): the bundle is built over
-    * [[a16ServedIndex]] — the published index minus tombstones (or the
-    * compacted rewrite past the threshold) — NOT the raw published
-    * artifact. Before this, the streaming tier kept answering with
-    * vectors a16's batch tier had already deleted: exactly the
-    * takedown-leak failure mode d17's scaladoc names, live between two
-    * serving tiers of the same index. s11's oracle is a16's
-    * (reduced-corpus) chain, so a leaked deleted vector breaks the
-    * gate hash. */
+    * [[liveIndex]] — the published index minus tombstones, the view
+    * a16's batch serve reads — NOT the raw published artifact. Before
+    * this, the streaming tier kept answering with vectors a16's batch
+    * tier had already deleted: exactly the takedown-leak failure mode
+    * d17's scaladoc names, live between two serving tiers of the same
+    * index. s11's oracle is a16's (reduced-corpus) chain, so a leaked
+    * deleted vector breaks the gate hash. */
   private[graft] def ivfpqServeBundle(s: SparkSession, d: String): DataFrame = {
-    val indexRow = perVecCodes(a16ServedIndex(s, d)).agg(
-      array_sort(collect_list(struct(col("cluster"), col("vec_id"), col("codes"))))
+    // one (cluster, vec_id, codes[sub]) entry per LIVE vector
+    val indexRow = liveIndex(s, d)
+      .groupBy(col("vec_id"), col("cluster"))
+      .agg(array_sort(collect_list(struct(col("sub"), col("code")))).as("sc"))
+      .select(col("cluster"), col("vec_id"),
+        expr("transform(sc, x -> CAST(x.code AS BIGINT))").as("codes"))
+      .agg(array_sort(collect_list(struct(col("cluster"), col("vec_id"), col("codes"))))
         .as("index"))
     indexRow.crossJoin(ivfpqCodebooksRow(s, d))
   }
 
-  /** one (cluster, vec_id, codes[sub]) row per LIVE vector — the pivot
-    * both streaming serve shapes share (the one-row bundle collapses
-    * it; the sharded serve groups it per cluster). */
-  private def perVecCodes(idx: DataFrame): DataFrame =
-    idx.groupBy(col("vec_id"), col("cluster"))
-      .agg(array_sort(collect_list(struct(col("sub"), col("code")))).as("sc"))
-      .select(col("cluster"), col("vec_id"),
-        expr("transform(sc, x -> CAST(x.code AS BIGINT))").as("codes"))
-
-  /** The PER-CLUSTER sharded form of the serving index — the scale
-    * path past the one-row bundle's single-row/2 GiB ceiling (the
-    * round-13 `weak`): one (cluster, entries) row per IVF cluster,
-    * entries sorted for determinism, built over the SAME
-    * [[a16ServedIndex]] live view as the bundle. A row is bounded by
-    * its cluster's population (the IVF partition-pruning contract —
-    * at 100x the index, rows grow with N/K and the coarse codebook
-    * grows K with N), and probes ROUTE to rows by probed-cluster id
-    * via a stream-static equi-join: each query touches
-    * IvfProbeClusters shard rows, never the whole index, and the
-    * static side shuffles/broadcasts per cluster instead of one
-    * monolithic row. */
-  private[graft] def ivfpqServeShards(s: SparkSession, d: String): DataFrame =
-    perVecCodes(a16ServedIndex(s, d))
-      .groupBy(col("cluster"))
-      .agg(array_sort(collect_list(struct(col("vec_id"), col("codes")))).as("entries"))
-
   /** the constant-size codebook half of the serving state (coarse
-    * centroids + PQ codebook, one row) — shared by the one-row bundle
-    * and the sharded serve, which broadcasts ONLY this and routes
-    * probes to index shards. */
-  private[graft] def ivfpqCodebooksRow(s: SparkSession, d: String): DataFrame = {
+    * centroids + PQ codebook, one row) that [[ivfpqServeBundle]] joins
+    * to its index row. */
+  private def ivfpqCodebooksRow(s: SparkSession, d: String): DataFrame = {
     val q = ivfQServe(s, d)
     val centsRow = coarseCents(q).agg(
       array_sort(collect_list(struct(col("cid"), col("cq"), col("cnorm2")))).as("cents"))
@@ -1193,34 +1166,14 @@ object Ann {
   private[graft] def a16Tombstones(s: SparkSession, d: String): DataFrame =
     embeddings(s, d).select(col("vec_id")).where(a16TombstonePred)
 
-  /** the published index minus tombstoned vectors — the anti-join
-    * serve view (id-only delete side; the published artifact is never
+  /** The index view every deletion-aware serving tier answers from —
+    * a16's batch serve AND s11's streaming bundle build consume THIS,
+    * so the two tiers cannot disagree about which vectors are live:
+    * the published index minus tombstoned vectors via per-query
+    * anti-join (id-only delete side; the published artifact is never
     * touched). */
   private def liveIndex(s: SparkSession, d: String): DataFrame =
     publishedIndex(s, d).join(a16Tombstones(s, d), Seq("vec_id"), "left_anti")
-
-  private[graft] def compactedIndexFingerprint(s: SparkSession, d: String): String =
-    graft.core.Materialize.fingerprint(d, "embeddings",
-      s"ivfpq-c$IvfCentroids-pq$PqCentroids-s$PqSubspaces-minusdel" +
-        s"-m${graft.ops.Dedup.IncrementalMod}-t${graft.ops.Dedup.TombstoneRem}",
-      annCodeSalt)
-
-  /** COMPACTION: rewrite the published 4-int index without the deleted
-    * rows, under its own fingerprint — reads the PUBLISHED index, never
-    * the embeddings (d17's compaction contract applied to vectors).
-    * Its own lifecycle line (kind "ivfpq-live", round 17): the
-    * compacted rewrite is the serving index's live companion, not a
-    * superseded generation — housing it under "ivfpq" would put it in
-    * the blast radius of a17's cutover sweep. The line serves exactly
-    * one generation; prior-corpus/prior-code residue is reaped at
-    * publish. */
-  private[graft] def compactedIndex(s: SparkSession, d: String): DataFrame = {
-    val fp = compactedIndexFingerprint(s, d)
-    val t = graft.core.Materialize.readOrCompute(s, sk("ivfpq-live", d), fp)(
-      liveIndex(s, d))
-    graft.core.Materialize.sweepKeep(s, sk("ivfpq-live", d), Set(fp))
-    t
-  }
 
   /** a16: SERVE AFTER DELETE — the deletion half of the index
     * lifecycle (a15 covered append): vectors leave the corpus
@@ -1234,42 +1187,13 @@ object Ann {
     * corpus row-for-row — so the contract "a16 == a06 on the corpus
     * minus deletions" is exact, and the oracle states it as a06's CTE
     * chain with the tombstone predicate cut into the candidate stream.
-    * Above [[graft.ops.Dedup.TombstoneCompactThreshold]] the path
-    * switches to the COMPACTED index ([[compactedIndex]] — one slim
-    * rewrite, tombstone-free serves thereafter).
     *
     * Scale shape: no rebuild (the one pass that touches every vector
     * is exactly what deletion must avoid); the anti-join is id-only
-    * vs the 4-int index; the threshold decision reads two counters
-    * from a vec_id-pruned scan (the d17 AQE-class scalar). A deleted
-    * vector leaking back into a top-3 — the legal failure mode — is a
-    * row-hash break at the gate. */
+    * vs the 4-int index. A deleted vector leaking back into a top-3 —
+    * the legal failure mode — is a row-hash break at the gate. */
   def a16(s: SparkSession, d: String): DataFrame =
-    serveAdcTop3(s, d, a16ServedIndex(s, d))
-
-  /** The index view every deletion-aware serving tier answers from —
-    * a16's batch serve AND s11's streaming bundle build consume THIS,
-    * so the two tiers cannot disagree about which vectors are live:
-    * the published index minus tombstones via per-query anti-join below
-    * [[graft.ops.Dedup.TombstoneCompactThreshold]], the compacted
-    * rewrite above it. The threshold fraction counts DELETABLE rows
-    * only (vec_id >= [[IvfCentroids]]): codebook rows can never match
-    * the tombstone predicate, so counting them made the effective
-    * trigger stricter than the nominal shared constant and
-    * inconsistent with d17, whose denominator has no protected rows
-    * (round-13 advice). The two counters come from a vec_id-pruned
-    * scan — the AQE-class plan-choice scalar, not data movement. */
-  private[graft] def a16ServedIndex(s: SparkSession, d: String): DataFrame = {
-    val t = embeddings(s, d)
-      .where(col("vec_id") >= IvfCentroids.toLong)
-      .agg(count(lit(1)).as("n"),
-        sum(when(a16TombstonePred, lit(1L)).otherwise(lit(0L))).as("nd")).head()
-    val n = t.getLong(0)
-    val nd = if (t.isNullAt(1)) 0L else t.getLong(1)
-    if (n > 0 && nd.toDouble / n > graft.ops.Dedup.TombstoneCompactThreshold)
-      compactedIndex(s, d)
-    else liveIndex(s, d)
-  }
+    serveAdcTop3(s, d, liveIndex(s, d))
 
   /** a16's anti-join serve over an ARBITRARY delete set — exposed for
     * the property spec (d17Over's contract on vectors): index-row
@@ -1475,7 +1399,7 @@ object Ann {
     * generation flavor is needed. The gate entry a17 is unchanged: the
     * census world never deletes codebook rows, so its doctrine stays
     * "full-corpus artifact + deletion at the serve view"
-    * ([[a16ServedIndex]]); this path exists for the delete sets that
+    * ([[liveIndex]]); this path exists for the delete sets that
     * doctrine refuses. */
   private[graft] def a17RetrainOver(s: SparkSession, d: String,
                                     tombstones: DataFrame): DataFrame = {

@@ -133,17 +133,6 @@ object Dedup {
     * 8×2 (≥0.975 measured) at every gate SF. */
   val RetuneRecallThreshold = 0.9
 
-  /** tombstone fraction above which a serve path stops anti-joining
-    * per query and REWRITES the published artifact without the deleted
-    * rows (compaction). Shared by d17 (pair table), the band-signature
-    * live view, and a16 (IVF-PQ index): below it, the per-query
-    * anti-join costs less than a rewrite; above it, every consumer pays
-    * the dead-row scan + join forever and the one-time slim-table
-    * rewrite (never a raw-input rescan — the published artifacts carry
-    * everything the reduced artifact needs) amortizes across all
-    * future serves. */
-  val TombstoneCompactThreshold = 0.25
-
   /** the LIVE corpus as a shared oracle-SQL prefix: documents minus
     * the tombstone census residue. Every cluster-derived report oracle
     * (d07/d09/d10/d13/p09 since round 15) is stated over `livedocs` —
@@ -715,19 +704,9 @@ object Dedup {
       .toDF("doc_id", "simhash")
   }
 
-  /** Multi-index (pigeonhole) banding: the 60-bit fingerprint is split
-    * into HammingMax+1 = 7 chunks (4x9 + 3x8 bits). Two fingerprints
-    * within hamming distance 6 differ in at most 6 chunks, so they MUST
-    * agree exactly on at least one chunk — candidate pairs come from an
-    * equi-join on (chunk_idx, chunk_value), then the exact bit_count
-    * verifies. Replaces the round-1 all-pairs theta join (a
-    * BroadcastNestedLoop, O(n^2) at any scale) with one hash shuffle of
-    * 7 rows/doc; recall is exact, not probabilistic. */
-  val SimhashChunks: Seq[(Int, Int, Int)] = chunkLayout(SimhashBits, HammingMax + 1)
-
   /** (idx, bit offset, width) for `bits` split into `n` chunks; the
     * first `bits % n` chunks get one more bit. */
-  private def chunkLayout(bits: Int, n: Int): Seq[(Int, Int, Int)] = {
+  private[graft] def chunkLayout(bits: Int, n: Int): Seq[(Int, Int, Int)] = {
     val base = bits / n
     val extra = bits % n
     val widths = Seq.tabulate(n)(i => if (i < extra) base + 1 else base)
@@ -1140,10 +1119,8 @@ object Dedup {
   private[graft] def publishPairs(s: SparkSession, d: String): DataFrame = {
     val t = graft.core.Materialize.publish(s, sk("pairs", d), pairsFingerprint(d))(d03Pairs(s, d))
     // retention at the kernel publish (round 17): the simhash pair line
-    // designates the full table + its current compacted rewrite; prior
-    // corpora/code residue is reaped
-    graft.core.Materialize.sweepKeep(s, sk("pairs", d),
-      Set(pairsFingerprint(d), compactedD03PairsFingerprint(d)))
+    // designates the full table; prior corpora/code residue is reaped
+    graft.core.Materialize.sweepKeep(s, sk("pairs", d), Set(pairsFingerprint(d)))
     t
   }
 
@@ -1166,29 +1143,14 @@ object Dedup {
       .join(tombstones.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_anti")
       .select(col("doc_a"), col("doc_b"), col("hamming"))
 
-  private[graft] def compactedD03PairsFingerprint(d: String): String =
-    graft.core.Materialize.fingerprint(d, "documents",
-      s"simhash-pairs-b$SimhashBits-h$HammingMax" +
-        s"-minusdel-m$IncrementalMod-t$TombstoneRem", dedupCodeSalt)
-
-  /** COMPACTION of the d03 pair artifact: the published table rewritten
-    * without tombstone-touching rows, under its own fingerprint — the
-    * d17 contract applied to the simhash pair family. Reads the
-    * PUBLISHED table, never raw text, never the pigeonhole kernel. */
-  private[graft] def compactedD03PairsTable(s: SparkSession, d: String): DataFrame =
-    graft.core.Materialize.readOrCompute(s, sk("pairs", d), compactedD03PairsFingerprint(d))(
-      liveD03PairsOver(s, d, d17Tombstones(s, d)))
-
   /** The LIVE view of the d03 pair artifact — what every report built
     * on the simhash pair family (d10's leakage matrix, the cluster
-    * repair below) reads instead of [[pairsTable]]: id-only anti-join
-    * below the shared [[TombstoneCompactThreshold]], the compacted
-    * rewrite above it. d03 itself stays on the full table — it is the
-    * pair-generation kernel measure, exactly as d02 stays on the full
-    * band table. */
+    * repair below) reads instead of [[pairsTable]]: the published table
+    * anti-joined against the tombstone ids. d03 itself stays on the
+    * full table — it is the pair-generation kernel measure, exactly as
+    * d02 stays on the full band table. */
   private[graft] def liveD03Pairs(s: SparkSession, d: String): DataFrame =
-    if (aboveCompactThreshold(s, d)) compactedD03PairsTable(s, d)
-    else liveD03PairsOver(s, d, d17Tombstones(s, d))
+    liveD03PairsOver(s, d, d17Tombstones(s, d))
 
   /** Compute cluster labels (doc, label) for the d03 similarity graph
     * and MATERIALIZE them at the fingerprint key (atomic publish, temp
@@ -1291,15 +1253,12 @@ object Dedup {
   /** The LIVE view of the cluster-label artifact, consumed by every
     * cluster-derived report (d09's savings, d13's keep-list, p09's
     * mixing rates). Unlike the pair/band live views there is no
-    * below-threshold anti-join branch to serve per query — the correct
-    * serve is the component repair ([[liveLabelsOver]]), an ITERATIVE
-    * job, and re-running it per report is the anti-pattern the
-    * published-artifact doctrine exists to prevent — so the repaired
-    * table is always published at its deletion-keyed fingerprint and
-    * reports read parquet (one slim write per corpus × delete-set,
-    * amortized over every report; the compaction economics that are
-    * only conditionally right for a per-query anti-join are
-    * unconditionally right here). */
+    * per-query anti-join to serve — the correct serve is the component
+    * repair ([[liveLabelsOver]]), an ITERATIVE job, and re-running it
+    * per report is the anti-pattern the published-artifact doctrine
+    * exists to prevent — so the repaired table is always published at
+    * its deletion-keyed fingerprint and reports read parquet (one slim
+    * write per corpus × delete-set, amortized over every report). */
   private[graft] def liveCcLabels(s: SparkSession, d: String): DataFrame = {
     val fp = liveLabelsFingerprint(d)
     if (graft.core.Materialize.exists(s, sk("labels", d), fp))
@@ -1525,8 +1484,7 @@ object Dedup {
         s"JaccardMaxSalts=$JaccardMaxSalts work bound (cap $jaccardCapDocs docs/block); " +
         s"worst block '${over.getString(2)}' has $worstN docs " +
         s"(~${worstN * worstN / 2} intra-block pairs). Task work grows past the " +
-        s"${JaccardPairBudget}-pair budget — use the MinHash-LSH path (d02) for this corpus, " +
-        "or pass strict = true to fail fast.")
+        s"${JaccardPairBudget}-pair budget — use the MinHash-LSH path (d02) for this corpus.")
     }
   }
 
@@ -1541,36 +1499,26 @@ object Dedup {
     * repartition spreads the CPU-bound sort/replicate map work
     * regardless of source file layout.
     *
-    * Per-block salt counts come from a map-side-combined groupBy count
-    * of the block keys (one cheap extra pass), joined back to the
+    * `census`: the (block_key, count) table, joined back to the
     * feature stream — Spark auto-broadcasts the tiny count table, the
     * derived P rides along in each replica row, and no block census
-    * ever lands on the driver (only the scalar block COUNT does).
-    *
-    * `census`: optional precomputed (block_key, count) table. The block
-    * census never needs the FEATURES — callers whose feature extraction
-    * is expensive (d04's per-char shingling) pass a count over the raw
+    * ever lands on the driver (only the scalar block COUNT does). The
+    * block census never needs the FEATURES, so callers count the raw
     * source instead of paying the extraction twice (the typed lambda is
-    * opaque to Catalyst, so it cannot prune it out of the count path).
-    * `strict`: throw instead of warning when a block exceeds the
-    * salt-cap work bound ([[jaccardCapWarning]]). */
+    * opaque to Catalyst, so it cannot prune it out of a count path). */
   def blockedJaccardTyped(s: SparkSession,
                           feats: org.apache.spark.sql.Dataset[(String, Long, Array[String])],
                           threshold: Double,
-                          census: Option[DataFrame] = None,
-                          strict: Boolean = false): DataFrame = {
+                          census: DataFrame): DataFrame = {
     import s.implicits._
     val par = s.sparkContext.defaultParallelism
-    val counts = census.getOrElse(feats.groupByKey(_._1).count().toDF("bk", "bn"))
-      .toDF("bk", "bn")
+    val counts = census.toDF("bk", "bn")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val numBlocks = counts.count()
-    // salt-cap cliff guard: warn (or fail fast when strict) instead of
-    // silently letting task work grow past the pair budget
-    jaccardCapWarning(counts).foreach { msg =>
-      if (strict) throw new IllegalStateException(msg)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-    }
+    // salt-cap cliff guard: warn instead of silently letting task work
+    // grow past the pair budget
+    jaccardCapWarning(counts).foreach(
+      msg => org.slf4j.LoggerFactory.getLogger(getClass).warn(msg))
     val withCnt = feats.toDF("src", "id", "fs")
       .join(counts, col("src") === col("bk"))
       .select(col("src"), col("id"), col("fs"), col("bn"))
@@ -1649,7 +1597,7 @@ object Dedup {
     // block census straight off the raw table: counting docs per source
     // does not need the 3-gram features
     val census = documents(s, d).groupBy("source").count().toDF("bk", "bn")
-    blockedJaccardTyped(s, feats, 0.6, Some(census))
+    blockedJaccardTyped(s, feats, 0.6, census)
       .select("doc_a", "doc_b", "jaccard")
   }
 
@@ -2287,8 +2235,7 @@ object Dedup {
 
   // ---- d16: incremental batch-vs-corpus near-dup admission ----
 
-  // IncrementalMod/IncrementalRem/TombstoneRem/TombstoneCompactThreshold
-  // are declared with the top-of-object constants (initialization-order
+  // IncrementalMod/IncrementalRem/TombstoneRem are declared with the top-of-object constants (initialization-order
   // constraint: d14Sql interpolates them).
 
   /** d16: INCREMENTAL near-dup admission — the shape a production
@@ -2335,9 +2282,8 @@ object Dedup {
     // cut before the candidate join, so an arrival is never rejected
     // for matching a document that has been DELETED — the d16∘d17
     // composition failure the round-13 verdict named (a takedown that
-    // keeps blocking re-ingestion forever). Below the compaction
-    // threshold this is an id-only anti-join on the published table;
-    // above it, the compacted artifact.
+    // keeps blocking re-ingestion forever): an id-only anti-join on the
+    // published table.
     admissionReportOver(s, newBands, admissionCorpusView(s, d))
   }
 
@@ -2350,20 +2296,16 @@ object Dedup {
 
   /** (family kind, fingerprint) of every published artifact the
     * admission corpus view serves from — the lineage identities p12
-    * declares for its admission consumption. Mirrors [[liveBandView]]'s
-    * decision exactly: the compacted live companion above the tombstone
-    * threshold; the default band table (plus its collapse membership,
-    * when one was published) below it. */
-  private[graft] def admissionArtifacts(s: SparkSession, d: String): Seq[(String, String)] =
-    if (aboveCompactThreshold(s, d))
-      Seq((sk("minhash-live", d), compactedBandFingerprint(s, d)))
-    else {
-      val fp = minhashFingerprint(s, d)
-      val members =
-        if (graft.core.Materialize.exists(s, sk("minhash-members", d), fp))
-          Seq((sk("minhash-members", d), fp)) else Nil
-      (sk("minhash", d), fp) +: members
-    }
+    * declares for its admission consumption: the default band table
+    * [[liveBandView]] reads, plus its collapse membership when one was
+    * published. */
+  private[graft] def admissionArtifacts(s: SparkSession, d: String): Seq[(String, String)] = {
+    val fp = minhashFingerprint(s, d)
+    val members =
+      if (graft.core.Materialize.exists(s, sk("minhash-members", d), fp))
+        Seq((sk("minhash-members", d), fp)) else Nil
+    (sk("minhash", d), fp) +: members
+  }
 
   /** the admission kernel d16/d18 share, over an arbitrary (arrival
     * bands, corpus bands) split: directed banded candidate join with
@@ -2615,20 +2557,6 @@ object Dedup {
       // output order (the spec compares rows positionally)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
 
-  private[graft] def compactedPairsFingerprint(s: SparkSession, d: String): String =
-    graft.core.Materialize.fingerprint(d, "documents",
-      s"minhash-pairs-s$MinhashSeeds-r$BandRows-tau$TauNum-$TauDen" +
-        s"-minusdel-m$IncrementalMod-t$TombstoneRem", dedupCodeSalt)
-
-  /** COMPACTION: rewrite the published pair table without the
-    * tombstone-touching rows, under its own fingerprint. The compute
-    * reads the PUBLISHED pair table, never raw text and never the
-    * verify kernel — a compaction that re-verified the corpus would
-    * defeat the reason the artifact exists. */
-  private[graft] def compactedPairsTable(s: SparkSession, d: String): DataFrame =
-    graft.core.Materialize.readOrCompute(s, sk("minhash-pairs", d), compactedPairsFingerprint(s, d))(
-      livePairs(s, d, d17Tombstones(s, d)))
-
   /** d17: DELETION-AWARE near-dup serve — the other half of the
     * incremental lifecycle d16/a15 started: documents get REMOVED
     * (takedowns, license revocations, dedup losers) at least as often
@@ -2638,11 +2566,7 @@ object Dedup {
     * ([[d17Tombstones]]); the serve path anti-joins BOTH endpoints of
     * the published pair table ([[pairsTableD02]] — built once per
     * corpus fingerprint by d02's own kernel, so the artifact cannot
-    * drift from the operator). When the tombstone fraction exceeds
-    * [[TombstoneCompactThreshold]], the path switches to the COMPACTED
-    * pair table ([[compactedPairsTable]]): a one-time rewrite of the
-    * slim artifact that future serves read tombstone-free. Output
-    * contract: exactly d02 computed on the reduced corpus (sound
+    * drift from the operator). Output contract: exactly d02 computed on the reduced corpus (sound
     * because pair membership depends on the two docs alone — see
     * [[livePairs]]; the oracle states it that way), so a leaked
     * deleted doc — the legal failure mode — breaks the row hash.
@@ -2653,81 +2577,23 @@ object Dedup {
     * own price); the pair-table serve reads O(|pairs|) + an id-only
     * anti-join instead (the published-artifact doctrine d09/d10/d13
     * already follow for d07's labels and d03's pairs). The plan-audit
-    * spec pins "no raw-text scan, no republish when warm"; compaction
-    * costs one slim scan + write, amortized over every later serve.
-    * The threshold decision reads two counters from a doc_id-pruned
-    * scan (a driver-side scalar steering WHICH of two equal-result
-    * plans runs — the AQE decision class, not data movement). */
+    * spec pins "no raw-text scan, no republish when warm". */
   def d17(s: SparkSession, d: String): DataFrame = {
-    val above = aboveCompactThreshold(s, d)
-    val pairs =
-      if (above) compactedPairsTable(s, d)
-      else livePairs(s, d, d17Tombstones(s, d))
-    // retention at the compaction owner (round 17): the pair line keeps
-    // TWO designated artifacts — the full-corpus pair table (the
-    // compaction's source; resweeping it would force the verify kernel
-    // to re-run) and the current compacted rewrite — and reaps
-    // prior-corpus/prior-code residue
+    val pairs = livePairs(s, d, d17Tombstones(s, d))
+    // retention at the pair serve (round 17): the pair line keeps the
+    // full-corpus pair table (resweeping it would force the verify
+    // kernel to re-run) and reaps prior-corpus/prior-code residue
     graft.core.Materialize.sweepKeep(s, sk("minhash-pairs", d),
-      Set(d02PairsFingerprint(s, d), compactedPairsFingerprint(s, d)))
+      Set(d02PairsFingerprint(s, d)))
     pairs.orderBy("doc_a", "doc_b")
-  }
-
-  /** the shared compaction trigger: tombstoned fraction of the corpus
-    * against [[TombstoneCompactThreshold]] — two counters from a
-    * doc_id-pruned scan (the AQE-class plan-choice scalar), consumed by
-    * d17's pair serve AND the live band view so every deletion-aware
-    * consumer flips to its compacted artifact at the same point. */
-  private def aboveCompactThreshold(s: SparkSession, d: String): Boolean = {
-    val t = documents(s, d).agg(
-      count(lit(1)).as("n"),
-      sum(when(d17TombstonePred, lit(1L)).otherwise(lit(0L))).as("nd")).head()
-    val n = t.getLong(0)
-    val nd = if (t.isNullAt(1)) 0L else t.getLong(1)
-    n > 0 && nd.toDouble / n > TombstoneCompactThreshold
   }
 
   // ---- the band-signature artifact under deletion (round 14) ----
 
-  private[graft] def compactedBandFingerprint(s: SparkSession, d: String): String =
-    graft.core.Materialize.fingerprint(d, "documents",
-      s"minhash-s$MinhashSeeds-r$BandRows-minusdel-m$IncrementalMod-t$TombstoneRem",
-      dedupCodeSalt)
-
-  /** COMPACTION of the signature artifact itself: the published band
-    * table rewritten without the tombstoned docs' rows, under its own
-    * fingerprint — d17's compaction contract applied to the MinHash
-    * artifact (round-13 verdict item 3: d17 compacted the *pair* table
-    * but the *signature* table kept deleted docs' bands forever, so
-    * d14's recall eval and s06's batch reference still saw them). The
-    * compute reads the PUBLISHED band table, never raw text. */
-  private[graft] def compactedBandTable(s: SparkSession, d: String): DataFrame = {
-    val fp = compactedBandFingerprint(s, d)
-    // its own lifecycle line (kind "minhash-live", round 17): the
-    // compacted rewrite is the banding line's live COMPANION, not a
-    // superseded generation of it — housing it under "minhash" would
-    // put it in the blast radius of d19's cutover sweep.
-    // DOCUMENT-LEVEL even over a collapsed build (bandRowsAt
-    // re-inflates before the tombstone cut): compaction is a full
-    // rewrite anyway, and a member-level artifact lets every
-    // above-threshold consumer skip the membership machinery.
-    val t = graft.core.Materialize.readOrCompute(s, sk("minhash-live", d), fp)(
-      bandRowsAt(bandView(s, d),
-        keepMinusIds(d17Tombstones(s, d)))
-        .select(col("i"), col("band"), col("sig"), col("n"), col("toks")))
-    // retention policy: this line serves exactly one generation — the
-    // current corpus+code compaction; prior-round/prior-corpus residue
-    // is superseded the moment this one is published
-    graft.core.Materialize.sweepKeep(s, sk("minhash-live", d), Set(fp))
-    t
-  }
-
   /** The LIVE view of the band-signature artifact — what every
     * deletion-aware consumer (d16's corpus side, d14's recall eval,
     * s06's batch reference) reads instead of [[bandTable]]: the
-    * published table minus tombstoned docs via id-only anti-join below
-    * the shared threshold, the compacted rewrite above it (one slim
-    * scan+write, never raw text, amortized over all future serves).
+    * published table minus tombstoned docs via id-only anti-join.
     * d02 deliberately still consumes the FULL table: it is the
     * nightly full-corpus kernel measure; its deletion-aware serve is
     * d17. */
@@ -2739,17 +2605,14 @@ object Dedup {
   private[graft] def liveBandRowsByDoc(s: SparkSession, d: String): DataFrame =
     bandRowsAt(liveBandView(s, d))
 
-  /** the live view WITH its collapse membership (round 17): below the
-    * compaction threshold the id-only tombstone cut is applied at
-    * MEMBER level (a tombstoned representative must not keep serving
-    * for its surviving duplicates — [[filteredView]] relabels);
-    * above it the compacted artifact is document-level by
-    * construction and carries no membership. Uncollapsed corpora take
-    * exactly the pre-round-17 plan (members None, the filters are the
-    * same anti-join). */
+  /** the live view WITH its collapse membership (round 17): the
+    * id-only tombstone cut is applied at MEMBER level (a tombstoned
+    * representative must not keep serving for its surviving duplicates
+    * — [[filteredView]] relabels). Uncollapsed corpora take exactly the
+    * pre-round-17 plan (members None, the filters are the same
+    * anti-join). */
   private[graft] def liveBandView(s: SparkSession, d: String): BandView =
-    if (aboveCompactThreshold(s, d)) BandView(compactedBandTable(s, d), None)
-    else filteredView(bandView(s, d), keepMinusIds(d17Tombstones(s, d)))
+    filteredView(bandView(s, d), keepMinusIds(d17Tombstones(s, d)))
 
   // ---- d18: dedup-side artifact APPEND (round 15, the a15 analog) ----
 
@@ -2858,9 +2721,8 @@ object Dedup {
       bandRowsFor(s, documents(s, d), StaleBandRows))
 
   /** the stale generation's live view: tombstones cut by id-only
-    * anti-join (no compaction flavor — the stale artifact is
-    * pre-cutover history; the rewrite economics belong to the SERVING
-    * generation). */
+    * anti-join, the same cut the SERVING generation's live view
+    * applies. */
   private[graft] def staleLiveBands(s: SparkSession, d: String): DataFrame =
     staleBandTable(s, d)
       .join(d17Tombstones(s, d).select(col("doc_id").as("i")), Seq("i"), "left_anti")
@@ -3114,9 +2976,7 @@ object Dedup {
   /** d17's anti-join serve over an ARBITRARY delete set — exposed for
     * the property spec: the "deletion == never ingested" contract is
     * an algebraic claim about pair locality, so it must hold for ANY
-    * id set, not just the census residue the gate entry uses (no
-    * compaction branch here: the compacted fingerprint is keyed to the
-    * census set; ad-hoc delete sets always serve via anti-join). */
+    * id set, not just the census residue the gate entry uses. */
   private[graft] def d17Over(s: SparkSession, d: String,
                              tombstones: DataFrame): DataFrame =
     livePairs(s, d, tombstones).orderBy("doc_a", "doc_b")

@@ -9,10 +9,9 @@ import graft.core.Tables._
   * lifecycle event mints a generation under
   * [[graft.core.Materialize]] — d18/d20's appends, d19/a17's retune
   * republishes (which leave the stale generation addressable for
-  * rollback), d17/a16's compactions (which leave the raw artifact
-  * behind) — and nothing ever deleted a superseded one. That is a
-  * storage leak with legal teeth: a compacted-away tombstone's rows
-  * live on inside the superseded raw generations. The mechanism is
+  * rollback) — and nothing ever deleted a superseded one. That is a
+  * storage leak with legal teeth: a tombstoned document's rows live on
+  * inside the superseded raw generations. The mechanism is
   * [[graft.core.Materialize.retentionSweep]] (pin {serving, rollback},
   * age out the rest; pins provably byte-untouched); this entry is the
   * gate-checkable REPORT of one full retention cycle.

@@ -870,7 +870,7 @@ object Pipeline {
     * Ships the increment artifact + a lineage manifest naming every
     * published artifact consumed: the admission gate's band artifacts
     * ([[graft.ops.Dedup.admissionArtifacts]] — the band table and, when
-    * they exist, its collapse membership / compacted companion), the
+    * it exists, its collapse membership), the
     * two base-summary tables ([[p12BaseArtifacts]]), and the corpus
     * input. The RETURNED relation is the per-source build report
     * (n_arrivals / n_admitted / n_placed / tokens_placed / pos_sum /
@@ -1172,15 +1172,6 @@ object Pipeline {
     * no-ops by construction. */
   val TakedownRem = 1L
 
-  /** takedown rows above which the repair abandons the per-shard
-    * broadcast-correction plan for the windowed re-rank (the broadcast
-    * carries one (pos, n_tok) struct per taken-down row — at ~16 B/row
-    * the default cap is ~1.6 MB, far under any broadcast limit; a
-    * mass takedown beyond it pays p11's own pinned window exchange
-    * over the slim survivor rows instead). [[p13Over]] takes it as a
-    * parameter. */
-  val TakedownBroadcastMaxRows = 100000L
-
   /** (family kind, fingerprint) of the PUBLISHED full placement — the
     * shipped training order as a serveable artifact (p11's placed
     * rows land in a per-run dir; the repair tier needs a durable,
@@ -1230,25 +1221,6 @@ object Pipeline {
         col("doc_id"), col("source"), col("n_tok"), col("redacted_md5"))
   }
 
-  /** shard-local excision by WINDOWED RE-RANK — the mass-takedown
-    * fallback: p11's own pinned placement exchange re-run over the
-    * slim SURVIVOR rows only (original pos preserves the (h, doc_id)
-    * order, so re-ranking by it reproduces the frozen relative
-    * order). Still placement-only: no corpus scan, no kernel re-run,
-    * no rate re-derivation. */
-  private[graft] def exciseWindowed(s: SparkSession, survivors: DataFrame): DataFrame = {
-    val w = Window.partitionBy("shard").orderBy("pos")
-    survivors
-      .repartition(s.sparkContext.defaultParallelism, col("shard"))
-      .withColumn("new_pos", row_number().over(w).cast(LongType))
-      .withColumn("new_off",
-        coalesce(sum(col("n_tok")).over(w) - col("n_tok"), lit(0L)))
-      .select(col("shard"), col("new_pos").as("pos"),
-        (col("new_off") / PackTokens).cast(LongType).as("bin"),
-        (col("new_off") % PackTokens).as("bin_off"),
-        col("doc_id"), col("source"), col("n_tok"), col("redacted_md5"))
-  }
-
   /** p13: the ARRIVAL-SIZED placement repair. Semantics are EXCISION,
     * deliberately: a takedown of a shipped training order removes the
     * taken-down rows and closes the gaps (per shard: positions
@@ -1263,13 +1235,13 @@ object Pipeline {
     * what the next FULL rebuild is for). Consequently repair ==
     * placement-stage rebuild over (mixed minus takedown) EXACTLY —
     * not just on planted corpora — which is what the oracle replays
-    * and Round20OpsSpec pins against [[exciseWindowed]] and a
+    * and Round20OpsSpec pins against a windowed re-rank and a
     * plain-Scala model across a pack-bin-crossing takedown.
     *
     * The repair consumes ONLY the published placement (slim rows) and
     * the id-only takedown feed: one doc_id-pruned corpus scan for the
     * feed, one anti-join + correction over the placement, zero corpus
-    * text, zero kernel re-runs, zero windows on the broadcast path.
+    * text, zero kernel re-runs, zero windows.
     * Ships the repaired order + lineage manifest like every build. */
   def p13(s: SparkSession, d: String): DataFrame =
     p13Over(s, d,
@@ -1281,30 +1253,20 @@ object Pipeline {
     * for the nightly census entry (p13) and the streamed-feed
     * composition (s18, takedown = the drained event feed), mirroring
     * d17Over/a16Over: the placement tier serves the same liveness
-    * whichever axis the deletion arrives on. Past `broadcastMaxRows`
-    * takedown rows the repair takes the windowed re-rank. */
-  private[graft] def p13Over(s: SparkSession, d: String, feed: DataFrame, name: String,
-                             broadcastMaxRows: Long = TakedownBroadcastMaxRows): DataFrame = {
+    * whichever axis the deletion arrives on. */
+  private[graft] def p13Over(s: SparkSession, d: String, feed: DataFrame,
+                             name: String): DataFrame = {
     val M = graft.core.Materialize
     val placement = placementTable(s, d)
     val hit = placement.join(feed, "doc_id")
       .select(col("shard"), col("pos"), col("n_tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // try/finally: the persisted takedown set must not outlive this
-    // call if ANYTHING after the persist throws
-    try {
-      val nTakedown = hit.count() // takedown-sized action (plan choice)
-      val survivors = placement.join(feed, Seq("doc_id"), "left_anti")
-      val repaired =
-        if (nTakedown <= broadcastMaxRows) exciseBroadcast(survivors, hit)
-        else exciseWindowed(s, survivors)
-      val (pk, pfp) = placementArtifact(s, d)
-      shipBuild(s, name, repaired, Seq(
-        ("published", pk, pfp, M.tablePath(s, pk, pfp)),
-        ("input", "documents",
-          M.fingerprint(d, "documents", s"takedown-feed-r$TakedownRem", ""),
-          s"$d/documents.parquet")))._2
-    } finally hit.unpersist(blocking = false)
+    val survivors = placement.join(feed, Seq("doc_id"), "left_anti")
+    val (pk, pfp) = placementArtifact(s, d)
+    shipBuild(s, name, exciseBroadcast(survivors, hit), Seq(
+      ("published", pk, pfp, M.tablePath(s, pk, pfp)),
+      ("input", "documents",
+        M.fingerprint(d, "documents", s"takedown-feed-r$TakedownRem", ""),
+        s"$d/documents.parquet")))._2
   }
 
   /** Oracle: p11's full chain with the takedown excluded at the

@@ -135,7 +135,7 @@ object TextSim {
     graft.ops.Dedup.blockedJaccardTyped(s, {
       import s.implicits._
       feats.as[(String, Long, Array[String])]
-    }, 0.5, Some(census))
+    }, 0.5, census)
   }
 
   val q26Sql: String =

@@ -888,45 +888,59 @@ object Replay {
     * (HOFs over the broadcast arrays, exact integer ADC arithmetic):
     * no watermark, no state store, no shuffle of the query stream, so
     * per-query latency is one executor-local map. DELETION-AWARE since
-    * round 14: the bundle is built over [[graft.ops.Ann.a16ServedIndex]]
-    * (published index minus tombstones / the compacted rewrite), so the
-    * streaming tier can never answer with a vector the batch tier has
-    * deleted — the cross-tier takedown leak the round-13 verdict named.
+    * round 14: the bundle is built over the index view a16 serves
+    * (published index minus tombstones), so the streaming tier can
+    * never answer with a vector the batch tier has deleted — the
+    * cross-tier takedown leak the round-13 verdict named.
     * Oracle = a16Sql (the stream must answer bit-for-bit what a16's
     * batch serve-after-delete answers — any index/codebook/tombstone
     * drift between the two serving tiers is the production corruption
     * class this entry pins).
     *
     * Scale shape: the replicated-bundle broadcast is the low-latency
-    * deployment model (index on every serving node); the sharded
-    * variant (probes routed to per-cluster bundle shards by a
-    * stream-static equi-join on cluster id) keeps the same arithmetic
-    * when the index outgrows one node — see the bundle's scaladoc. */
+    * deployment model (index on every serving node). The whole
+    * per-probe answer is ONE expression, with the probe-side context
+    * BOUND ONCE via a 1-element transform(array(struct(...)), ctx ->
+    * ...) wrapper. Without the binding, CollapseProject inlines a
+    * withColumn'd pcl/adc into the candidate lambdas (each is
+    * referenced only once TEXTUALLY, so the optimizer considers the
+    * inline free) and the runtime then re-evaluates them per index
+    * entry / per candidate — measured 4.0-4.5 s of single-task time
+    * for 10 probes at sf0.1; the ctx binding makes every inner
+    * reference a lambda-variable field read. Candidates come from the
+    * probed clusters (self excluded), scored by PqSubspaces table
+    * lookups, ranked by (adist, vec_id) via default struct ordering. */
   def s11(s: SparkSession, d: String): DataFrame = {
-    // deployment-size switch (the AQE-class plan-choice scalar, from a
-    // metadata-only parquet row count): the one-row replicated bundle
-    // is the low-latency shape while the index fits one broadcast row;
-    // past S11OneRowMaxVectors the SAME arithmetic runs sharded
-    // per-cluster (s11Sharded) — the scale path the round-13 verdict
-    // required as code, spec-pinned equal on the gate corpus.
-    val nVecs = s.read.parquet(s"$d/embeddings.parquet").count()
-    if (nVecs > S11OneRowMaxVectors) s11Sharded(s, d) else s11OneRow(s, d)
+    val bundle = graft.ops.Ann.ivfpqServeBundle(s, d) // publishes index if cold
+    val answered = s11ProbeStream(s, d).crossJoin(broadcast(bundle))
+      .withColumn("top3", expr(
+        s"""element_at(transform(array($s11CtxStruct),
+           |ctx ->
+           |  slice(array_sort(
+           |    transform(
+           |      filter(filter(index, b -> array_contains(ctx.pcl, b.cluster)),
+           |             e -> e.vec_id != probe_id),
+           |      e -> struct(
+           |        aggregate(zip_with(e.codes, ctx.adc,
+           |                           (cd, row) -> element_at(row, CAST(cd + 1 AS INT))),
+           |                  CAST(0 AS BIGINT), (sacc, sx) -> sacc + sx) AS adist,
+           |        e.vec_id AS vec_id))),
+           |  1, 3)), 1)""".stripMargin))
+      .select(col("probe_id"), posexplode(col("top3")))
+      .select(col("probe_id"), (col("pos") + 1).cast(LongType).as("rank"),
+        col("col.vec_id").as("neighbor_id"), col("col.adist").as("adist"))
+    sinkRun(s, answered, runBase(s, "s11"))
+      .select(col("probe_id"), col("rank").cast(LongType).as("rank"),
+        col("neighbor_id"), col("adist").cast(LongType).as("adist"))
+      .orderBy("probe_id", "rank")
   }
-
-  /** vectors above which s11 abandons the one-row bundle: at
-    * ~(8 + PqSubspaces·8) bytes per entry plus cluster/vec ids, 1M
-    * vectors is a ~50 MB single row — comfortably broadcastable, and
-    * two orders of magnitude under the 2 GiB single-row array ceiling
-    * the collapse would otherwise hit silently. */
-  val S11OneRowMaxVectors: Long = 1000000L
 
   /** the per-probe serving context (probed-cluster list + ADC tables)
     * as ONE SQL struct over (q, cents, pq) columns: pcl =
     * top-IvfProbeClusters coarse centroids by (cosine desc, cid) — the
     * batch probeSide's row_number order; adc[sub][pcid] = integer L2 of
     * the probe's sub-slice against that PQ centroid (subDists'
-    * arithmetic). Shared by the one-row and sharded serves so the two
-    * deployment shapes cannot drift. */
+    * arithmetic). */
   private def s11CtxStruct: String = {
     import graft.ops.Ann.{IvfProbeClusters, PqSubspaces}
     val w = s"CAST(size(q) / $PqSubspaces AS INT)"
@@ -952,24 +966,9 @@ object Replay {
       .stripMargin
   }
 
-  /** scoring of one candidate-entry array against a bound adc table —
-    * the other shared half of the serve arithmetic (`entries` is any
-    * array<struct<vec_id, codes>>; `adcRef` names the bound ADC
-    * reference in scope). */
-  private def s11ScoreSlice(entries: String, adcRef: String): String =
-    s"""slice(array_sort(
-       |    transform(
-       |      filter($entries, e -> e.vec_id != probe_id),
-       |      e -> struct(
-       |        aggregate(zip_with(e.codes, $adcRef,
-       |                           (cd, row) -> element_at(row, CAST(cd + 1 AS INT))),
-       |                  CAST(0 AS BIGINT), (sacc, sx) -> sacc + sx) AS adist,
-       |        e.vec_id AS vec_id))),
-       |  1, 3)""".stripMargin
-
-  /** the probe stream both serve shapes consume: the embeddings file
-    * replayed as a stream, cut to the probe ids AT THE SOURCE so the
-    * scan pushdown models "queries arrive", not "the corpus arrives". */
+  /** s11's probe stream: the embeddings file replayed as a stream, cut
+    * to the probe ids AT THE SOURCE so the scan pushdown models
+    * "queries arrive", not "the corpus arrives". */
   private def s11ProbeStream(s: SparkSession, d: String): DataFrame = {
     val embSchema = s.read.parquet(s"$d/embeddings.parquet").schema
     s.readStream.schema(embSchema)
@@ -978,73 +977,6 @@ object Replay {
       .select(col("vec_id").as("probe_id"),
         transform(col("embedding"),
           x => floor(x.cast(DoubleType) * 1000).cast(LongType)).as("q"))
-  }
-
-  /** the ONE-ROW replicated-bundle serve (small-index fast path).
-    * The whole per-probe answer is ONE expression, with the probe-side
-    * context BOUND ONCE via a 1-element transform(array(struct(...)),
-    * ctx -> ...) wrapper. Without the binding, CollapseProject inlines
-    * a withColumn'd pcl/adc into the candidate lambdas (each is
-    * referenced only once TEXTUALLY, so the optimizer considers the
-    * inline free) and the runtime then re-evaluates them per index
-    * entry / per candidate — measured 4.0-4.5 s of single-task time
-    * for 10 probes at sf0.1; the ctx binding makes every inner
-    * reference a lambda-variable field read. Candidates come from the
-    * probed clusters (self excluded), scored by PqSubspaces table
-    * lookups, ranked by (adist, vec_id) via default struct ordering. */
-  private[graft] def s11OneRow(s: SparkSession, d: String): DataFrame = {
-    val bundle = graft.ops.Ann.ivfpqServeBundle(s, d) // publishes index if cold
-    val answered = s11ProbeStream(s, d).crossJoin(broadcast(bundle))
-      .withColumn("top3", expr(
-        s"""element_at(transform(array($s11CtxStruct),
-           |ctx ->
-           |  ${s11ScoreSlice(
-                 "filter(index, b -> array_contains(ctx.pcl, b.cluster))",
-                 "ctx.adc")}), 1)""".stripMargin))
-      .select(col("probe_id"), posexplode(col("top3")))
-      .select(col("probe_id"), (col("pos") + 1).cast(LongType).as("rank"),
-        col("col.vec_id").as("neighbor_id"), col("col.adist").as("adist"))
-    sinkRun(s, answered, runBase(s, "s11"))
-      .select(col("probe_id"), col("rank").cast(LongType).as("rank"),
-        col("neighbor_id"), col("adist").cast(LongType).as("adist"))
-      .orderBy("probe_id", "rank")
-  }
-
-  /** the SHARDED serve — the scale shape past the one-row bundle's
-    * single-row ceiling (the round-13 `weak`, now code): only the
-    * constant-size codebook row ([[graft.ops.Ann.ivfpqCodebooksRow]])
-    * is broadcast to the stream; each probe computes its context once,
-    * fans out to its IvfProbeClusters probed-cluster ids, and a
-    * stream-static EQUI-JOIN on cluster routes it to exactly those
-    * per-cluster index shards ([[graft.ops.Ann.ivfpqServeShards]] —
-    * rows bounded by cluster population, never the whole index). Each
-    * shard answers its LOCAL top-3 (a superset of its members of the
-    * global top-3, so the merge is lossless); the read-back merges
-    * shard answers per probe — the scatter-gather ROUTER tier every
-    * sharded ANN deployment runs in front of the shard fan-out. Same
-    * context/scoring expressions as the one-row path by construction
-    * (s11CtxStruct/s11ScoreSlice), spec-pinned equal. */
-  private[graft] def s11Sharded(s: SparkSession, d: String): DataFrame = {
-    val codebooks = graft.ops.Ann.ivfpqCodebooksRow(s, d)
-    val shards = graft.ops.Ann.ivfpqServeShards(s, d)
-    val routed = s11ProbeStream(s, d)
-      .crossJoin(broadcast(codebooks))
-      .withColumn("ctx", expr(s11CtxStruct))
-      .select(col("probe_id"), col("ctx.adc").as("adc"),
-        explode(col("ctx.pcl")).as("pcluster"))
-    val scored = routed
-      .join(shards, col("pcluster") === col("cluster"))
-      .withColumn("top3", expr(s11ScoreSlice("entries", "adc")))
-      .select(col("probe_id"), explode(col("top3")).as("c"))
-      .select(col("probe_id"), col("c.adist").as("adist"),
-        col("c.vec_id").as("neighbor_id"))
-    sinkRun(s, scored, runBase(s, "s11sh"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("adist"), col("neighbor_id"))))
-      .where(col("rank") <= 3)
-      .select(col("probe_id"), col("rank").cast(LongType).as("rank"),
-        col("neighbor_id"), col("adist").cast(LongType).as("adist"))
-      .orderBy("probe_id", "rank")
   }
 
   /** s12: STREAMING TOMBSTONE FEED — deletion arrives as an EVENT, not

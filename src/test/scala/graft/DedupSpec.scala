@@ -15,8 +15,11 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  /** the chunk layout hammingSelfJoin builds for d03's fingerprint */
+  private val simhashChunks = Dedup.chunkLayout(Dedup.SimhashBits, Dedup.HammingMax + 1)
+
   test("SimhashChunks tile the 60-bit fingerprint exactly") {
-    val chunks = Dedup.SimhashChunks
+    val chunks = simhashChunks
     assert(chunks.length == Dedup.HammingMax + 1)
     assert(chunks.map(_._3).sum == Dedup.SimhashBits)
     // contiguous, non-overlapping
@@ -31,7 +34,7 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rnd = new scala.util.Random(42)
     val mask60 = (1L << Dedup.SimhashBits) - 1
     def chunkVals(fp: Long): Seq[Long] =
-      Dedup.SimhashChunks.map { case (_, off, w) => (fp >>> off) & ((1L << w) - 1) }
+      simhashChunks.map { case (_, off, w) => (fp >>> off) & ((1L << w) - 1) }
     (0 until 2000).foreach { _ =>
       val a = rnd.nextLong() & mask60
       // flip up to HammingMax random bits
@@ -71,7 +74,9 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       val fs = rnd.shuffle(vocab).take(8 + rnd.nextInt(10)).toArray
       (src, i, fs)
     }
-    val got = Dedup.blockedJaccardTyped(s, docs.toDS(), 0.3)
+    val ds = docs.toDS()
+    val got = Dedup.blockedJaccardTyped(s, ds, 0.3,
+        ds.toDF("src", "id", "fs").groupBy("src").count())
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
       .sortBy(t => (t._1, t._2))
@@ -132,7 +137,9 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       val fs = rnd.shuffle(vocab).take(8 + rnd.nextInt(10)).toArray
       (src, i, fs)
     }
-    val got = Dedup.blockedJaccardTyped(s, docs.toDS(), 0.3)
+    val ds = docs.toDS()
+    val got = Dedup.blockedJaccardTyped(s, ds, 0.3,
+        ds.toDF("src", "id", "fs").groupBy("src").count())
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
       .sortBy(t => (t._1, t._2))
@@ -148,13 +155,11 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     got.zip(want).foreach { case (g, w) => assert(g == w, s"$g != $w") }
   }
 
-  test("salt-cap cliff: over-cap block trips the census warning and strict mode") {
+  test("salt-cap cliff: over-cap block trips the census warning") {
     val s = spark
     import s.implicits._
-    import org.apache.spark.sql.functions.{array, col, lit}
     // synthetic census: one block past the cap, one under it — the
-    // warning must fire, name the worst block, and strict mode must
-    // fail fast before any kernel work
+    // warning must fire and name the worst block
     val cap = Dedup.jaccardCapDocs
     val counts = Seq(("huge", cap + 1), ("ok", 10L)).toDF("bk", "bn")
     val msg = Dedup.jaccardCapWarning(counts)
@@ -162,14 +167,6 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(msg.get.contains("huge"), s"worst block not named: ${msg.get}")
     assert(Dedup.jaccardCapWarning(Seq(("ok", cap)).toDF("bk", "bn")).isEmpty,
       "at-cap block must NOT trip the census")
-    // strict mode: the kernel must throw during planning, not run over-cap
-    val feats = s.range(cap + 1)
-      .select(lit("huge").as("src"), col("id"), array().cast("array<string>").as("fs"))
-      .as[(String, Long, Array[String])]
-    val ex = intercept[IllegalStateException] {
-      Dedup.blockedJaccardTyped(s, feats, 0.5, strict = true)
-    }
-    assert(ex.getMessage.contains("JaccardMaxSalts"))
   }
 
   test("property: connectedComponents == union-find on random graphs") {

@@ -88,16 +88,27 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val main = code("src/main/scala")
     val callers = main ++ code("perfbench/src")
+    // members: every def, and every val / lazy val declared at the top
+    // level of an object (two-space indent under a column-0 `object`);
+    // locals and class fields stay out
+    val topLevel = "^(?:(?:private|protected)(?:\\[\\w+\\])?\\s+|case\\s+|final\\s+|sealed\\s+|abstract\\s+)*(object|class|trait)\\s".r
+    val memberVal = ("^  (?:(?:private|protected)(?:\\[\\w+\\])?\\s+|final\\s+|implicit\\s+)*" +
+      "(?:lazy\\s+)?val\\s+([A-Za-z_][A-Za-z0-9_]*)").r
     val defined = main.toSeq.flatMap { case (file, ls) =>
-      ls.filterNot(_.contains("override"))
-        .flatMap(l => "\\bdef\\s+([A-Za-z_][A-Za-z0-9_]*)".r.findAllMatchIn(l).map(_.group(1) -> file))
+      var inObject = false
+      ls.filterNot(_.contains("override")).flatMap { l =>
+        topLevel.findFirstMatchIn(l).foreach(m => inObject = m.group(1) == "object")
+        val vals = if (inObject) memberVal.findFirstMatchIn(l).map(_.group(1)).toSeq else Nil
+        ("\\bdef\\s+([A-Za-z_][A-Za-z0-9_]*)".r.findAllMatchIn(l).map(_.group(1)) ++ vals)
+          .map(_ -> file)
+      }
     }.groupMap(_._1)(_._2)
     // in its own file any mention is a call; elsewhere only a call-shaped
     // one (`.name`, `name(`, `name[`), so an unrelated local of the same
     // name does not count
     val uncalled = defined.filterNot { case (name, files) =>
       val q = java.util.regex.Pattern.quote(name)
-      val defLine = s"\\bdef\\s+$q\\b".r
+      val defLine = s"\\b(?:def|val)\\s+$q\\b".r
       val mention = s"\\b$q\\b".r
       val call = s"(\\.$q\\b|\\b$q\\s*[(\\[])".r
       callers.exists { case (file, ls) =>

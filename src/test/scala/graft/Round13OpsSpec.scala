@@ -11,9 +11,7 @@ import org.scalatest.BeforeAndAfterAll
   *    contained the deleted rows (deletion must be indistinguishable
   *    from non-ingestion — the legal contract of a takedown);
   *  - the serve paths read the PUBLISHED artifacts (no raw-text scan,
-  *    no rebuild) and anti-join an id-only delete set;
-  *  - past the tombstone threshold, compaction rewrites the artifact
-  *    once from the published table and the answer is unchanged.
+  *    no rebuild) and anti-join an id-only delete set.
   */
 class Round13OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -65,54 +63,6 @@ class Round13OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.count()
     assert(graft.core.Materialize.publishCount == pub0,
       "warm d17 must not rebuild/republish anything")
-  }
-
-  test("d17 compaction: >threshold tombstones rewrite once; answer unchanged") {
-    val s = spark
-    import s.implicits._
-    // census residue 3 (mod 10): docs 3/13/23/33 are tombstoned -> 4/6
-    // deleted, frac 0.67 > threshold 0.25 -> d17 must take the
-    // compaction path. Doc 3 duplicates doc 1's text: the full-corpus
-    // d02 pair (1,3) must vanish, the surviving pair (1,2) must stay.
-    val dir = java.nio.file.Files.createTempDirectory("graft-d17-compact").toString
-    Seq(
-      (1L, "alpha beta gamma delta"),
-      (2L, "alpha beta gamma delta"),
-      (3L, "alpha beta gamma delta"),
-      (13L, "one two three four"),
-      (23L, "five six seven eight"),
-      (33L, "nine ten eleven twelve"))
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val pub0 = graft.core.Materialize.publishCount
-    val rows = graft.ops.Dedup.d17(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(rows == Seq((1L, 2L)),
-      s"compacted serve answer wrong: $rows")
-    // cold corpus: band table + full pair table + compacted pair table
-    assert(graft.core.Materialize.publishCount == pub0 + 3,
-      "compaction path must publish band/pairs/compacted exactly once each")
-    // warm repeat: all artifacts served from storage, no new publish
-    val pub1 = graft.core.Materialize.publishCount
-    assert(graft.ops.Dedup.d17(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 2L)))
-    assert(graft.core.Materialize.publishCount == pub1)
-    // the compacted table IS the anti-join view of the published
-    // pairs, row for row — and the full pair table still carries the
-    // tombstone-touching pair (1,3) the compaction removed
-    val compacted = graft.ops.Dedup.compactedPairsTable(spark, dir)
-      .collect().map(_.toSeq).toSet
-    val tomb = graft.ops.Dedup.d17Tombstones(spark, dir)
-    val anti = graft.ops.Dedup.pairsTableD02(spark, dir)
-      .join(tomb.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_anti")
-      .join(tomb.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_anti")
-      .select("doc_a", "doc_b", "jaccard") // using-joins reorder columns
-      .collect().map(_.toSeq).toSet
-    assert(compacted == anti)
-    val fullPairs = graft.ops.Dedup.pairsTableD02(spark, dir)
-      .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(fullPairs.contains((1L, 3L)),
-      "published pair artifact must be delete-set independent")
   }
 
   test("d17 property: deletion == never ingested for ARBITRARY delete sets") {
@@ -212,36 +162,6 @@ class Round13OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(got.nonEmpty && got == want,
         s"trial $trial: a16Over(${deleted.size} deletes) diverged (${got.size} vs ${want.size})")
     }
-  }
-
-  test("a16 compaction: >threshold tombstones rewrite the index once; serve unchanged") {
-    val s = spark
-    import s.implicits._
-    // id set skewed onto the tombstone residue: 16 codebook rows +
-    // eight deletable ids (%10 == 3, >= 16) + four keepers -> 8 of 28
-    // deleted = 0.286 > the 0.25 threshold, so a16 must take the
-    // compacted-index path (the census corpora sit at ~10% and only
-    // exercise the anti-join branch).
-    val rnd = new scala.util.Random(11)
-    val ids = (0L until 16L) ++ Seq(23L, 33L, 43L, 53L, 63L, 73L, 83L, 93L,
-      20L, 21L, 30L, 40L)
-    val dir = java.nio.file.Files.createTempDirectory("graft-a16-compact").toString
-    ids.map { i => (i, Array.fill(8)(rnd.nextFloat()), (i % 10).toInt) }
-      .toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val pub0 = graft.core.Materialize.publishCount
-    val got = graft.ops.Ann.a16(spark, dir).collect().map(_.toSeq).toSeq
-    // cold corpus: full index publish + compacted index publish
-    assert(graft.core.Materialize.publishCount == pub0 + 2,
-      "compaction path must publish full + compacted index exactly once each")
-    val reduced = reducedAt(dir, "embeddings", graft.ops.Ann.a16TombstonePred)
-    val want = graft.ops.Ann.a06(spark, reduced).collect().map(_.toSeq).toSeq
-    assert(got.nonEmpty && got == want,
-      s"compacted serve diverged from a06-on-reduced (${got.size} vs ${want.size})")
-    // warm repeat: no new publish, same answer
-    val pub1 = graft.core.Materialize.publishCount
-    assert(graft.ops.Ann.a16(spark, dir).collect().map(_.toSeq).toSeq == got)
-    assert(graft.core.Materialize.publishCount == pub1)
   }
 
   test("a16 warm serve: published index + pruned probe reads; no rebuild") {

@@ -16,9 +16,8 @@ import org.scalatest.BeforeAndAfterAll
   *    survivors' label — the planted corpus exercises both against the
   *    component repair, and pins that the naive anti-join answer is
   *    wrong (the reason the repair exists);
-  *  - the d03 pair artifact gets the d17 treatment: anti-join serve
-  *    below the shared compaction threshold (plan-pinned), compacted
-  *    rewrite above it, identical answers.
+  *  - the d03 pair artifact gets the d17 treatment: an anti-join serve
+  *    over the published table (plan-pinned).
   *
   * The planted texts' simhash relations (ham(A,B)=5, ham(B,C)=4,
   * ham(A,C)=9 > HammingMax, ham(D,E)=4, fillers > 6 from everything)
@@ -108,34 +107,11 @@ class Round15OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(full(7L) == 1L && full(24L) == 13L,
       "full-corpus labels lost their bridge/min-id structure — test lost its signal")
-    // d07's pair-serve plan below threshold: anti-join over the
-    // published pair artifact
+    // d07's pair-serve plan: anti-join over the published pair artifact
     val pairPlan = graft.ops.Dedup.liveD03Pairs(spark, dir)
       .queryExecution.executedPlan.toString
     assert(pairPlan.contains("LeftAnti") && pairPlan.contains("graft_mat/pairs"),
       "sub-threshold live pair view must anti-join the published artifact")
-  }
-
-  test("d03 pair compaction: >threshold tombstones rewrite the pair artifact once; == rebuild-on-reduced") {
-    // 6 docs, 2 tombstoned -> 0.33 > threshold: compacted branch
-    val dir = writeDocs(plantedDocs, "compact")
-    graft.ops.Dedup.d03(spark, dir).count() // publish the full pair table
-    val pub0 = graft.core.Materialize.publishCount
-    val live1 = graft.ops.Dedup.liveD03Pairs(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(graft.core.Materialize.publishCount == pub0 + 1,
-      "above-threshold live pair view must publish the compacted table once")
-    val pub1 = graft.core.Materialize.publishCount
-    val live2 = graft.ops.Dedup.liveD03Pairs(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(graft.core.Materialize.publishCount == pub1,
-      "warm compacted pair serve must not republish")
-    assert(live1 == live2)
-    // == the pair table a never-ingested corpus would publish
-    val reduced = reducedAt(dir, "documents", graft.ops.Dedup.d17TombstonePred)
-    val rebuilt = graft.ops.Dedup.d03(spark, reduced).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(live1 == rebuilt, s"compacted pairs != rebuild-on-reduced: $live1 vs $rebuilt")
   }
 
   test("cluster reports ∘ d17 == reports on a corpus that never ingested the deleted docs (sf0.001)") {

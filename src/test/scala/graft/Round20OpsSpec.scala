@@ -1,13 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** Round-20 invariants (the round-19 verdict's orders + ADVICE items):
   *  - p13 placement-level deletion: the broadcast-correction repair,
-  *    the windowed re-rank fallback, and a plain-Scala excision model
+  *    a windowed re-rank reference, and a plain-Scala excision model
   *    agree on a PLANTED placement whose takedown pushes survivors
   *    across a pack-bin boundary (the re-offset must be cumulative,
   *    not local), and the end-to-end p13 equals the placement-stage
@@ -46,6 +48,25 @@ class Round20OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         }
       }.sortBy(r => (r._1, r._2))
 
+  /** shard-local excision by WINDOWED RE-RANK — the Spark reference the
+    * broadcast-correction repair is pinned against: p11's own
+    * placement exchange re-run over the slim SURVIVOR rows (original
+    * pos preserves the (h, doc_id) order, so re-ranking by it
+    * reproduces the frozen relative order). */
+  private def exciseWindowed(s: SparkSession, survivors: DataFrame): DataFrame = {
+    val pack = graft.ops.Pipeline.PackTokens
+    val w = Window.partitionBy("shard").orderBy("pos")
+    survivors
+      .repartition(s.sparkContext.defaultParallelism, col("shard"))
+      .withColumn("new_pos", row_number().over(w).cast(LongType))
+      .withColumn("new_off",
+        coalesce(sum(col("n_tok")).over(w) - col("n_tok"), lit(0L)))
+      .select(col("shard"), col("new_pos").as("pos"),
+        (col("new_off") / pack).cast(LongType).as("bin"),
+        (col("new_off") % pack).as("bin_off"),
+        col("doc_id"), col("source"), col("n_tok"), col("redacted_md5"))
+  }
+
   test("p13 excision: broadcast correction == windowed re-rank == model " +
     "on a planted placement; the takedown crosses a pack-bin boundary") {
     val s = spark
@@ -76,7 +97,7 @@ class Round20OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
           r.getLong(4), r.getString(5), r.getLong(6), r.getString(7)))
     val viaBroadcast = rowsOf(P.exciseBroadcast(survivors, hit))
-    val viaWindow = rowsOf(P.exciseWindowed(s, survivors))
+    val viaWindow = rowsOf(exciseWindowed(s, survivors))
     val expected = exciseModel(planted, Set(20L))
     assert(viaBroadcast === expected,
       "broadcast-correction repair must equal the excision model")
@@ -108,7 +129,7 @@ class Round20OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // rebuild-at-placement-stage: re-rank the survivors of the SAME
     // published order (excision freezes sampling fates, so this IS
     // what the next rebuild's placement stage would emit)
-    val rebuilt = P.exciseWindowed(s,
+    val rebuilt = exciseWindowed(s,
         placement.join(feedIds, Seq("doc_id"), "left_anti"))
       .orderBy("shard", "pos").collect().map(_.toSeq).toSeq
     assert(repaired === rebuilt, "repair must equal the placement-stage rebuild")
@@ -118,20 +139,6 @@ class Round20OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
     assert(manifest.contains(("published", pk, pfp)),
       s"manifest must name the consumed placement artifact $pk/$pfp")
-  }
-
-  test("p13 mass-takedown fallback: broadcastMaxRows=0 forces the " +
-    "windowed path and the gate face is unchanged") {
-    val s = spark
-    val P = graft.ops.Pipeline
-    val viaBroadcast = P.p13(s, sf).collect().map(_.toSeq).toSeq
-    // p13's own takedown feed, with the broadcast cap at 0
-    val feed = graft.core.Tables.documents(s, sf).select(col("doc_id"))
-      .where(col("doc_id") % graft.ops.Dedup.IncrementalMod === P.TakedownRem)
-    val viaWindow = P.p13Over(s, sf, feed, "p13", broadcastMaxRows = 0)
-      .collect().map(_.toSeq).toSeq
-    assert(viaWindow === viaBroadcast,
-      "the two repair plans must ship identical orders")
   }
 
   test("s14 arrival side: a round-robin exchange to defaultParallelism " +
