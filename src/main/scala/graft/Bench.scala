@@ -54,7 +54,7 @@ object Bench {
 
   /** Warm-up before the first sample: JIT/codegen/IO paths, not counted. */
   private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    graft.core.Tables.region(spark, sfDir).count()
     SparkEntry.entry(spark).count()
     cleanStorage(spark)
   }

@@ -306,7 +306,7 @@ object Materialize {
     * manifests stay checkable. */
   def readTable(s: SparkSession, kind: String, fp: String): DataFrame = {
     recordRead(kind, fp)
-    s.read.parquet(tablePath(s, kind, fp))
+    Tables.parquet(s, tablePath(s, kind, fp))
   }
 
   /** Read the materialized table if this exact (input, algorithm, code)
@@ -452,7 +452,7 @@ object Materialize {
       // rename the path is gone and delete is a cheap no-op.
       fs.delete(tmp, true)
     }
-    s.read.parquet(out)
+    Tables.parquet(s, out)
   }
 
   /** Claim `<out>.lock` with create-if-absent — atomic on HDFS and

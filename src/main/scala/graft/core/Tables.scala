@@ -6,7 +6,8 @@ import org.apache.spark.sql.types._
 
 /** Loaders for the driver-generated parquet corpus (TESTDATA.md).
   *
-  * All tables are plain parquet reads; `events` needs special handling
+  * All tables are parquet reads through [[parquet]], which supplies a
+  * schema inferred once per file state; `events` needs special handling
   * because the driver has shipped its `ts` column under two different
   * physical encodings across corpus regenerations:
   *
@@ -35,7 +36,64 @@ object Tables {
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
+
+  /** A parquet read that carries its schema. A bare
+    * `spark.read.parquet(p)` infers the schema from the footer inside a
+    * one-task Spark job on every call; this infers it once per file
+    * state and reads with `.schema(...)`. The file state is the path, a
+    * listing stamp (name, length and mtime of the file, or of a
+    * directory's children) and the session's
+    * `spark.sql.legacy.parquet.nanosAsLong`, so a file rewritten in
+    * place, or read under the other timestamp contract, is inferred
+    * again. For the corpus tables and published [[Materialize]] tables
+    * only: a run directory that was just written knows its schema and
+    * passes it itself, so unique run paths never fill the memo. */
+  def parquet(s: SparkSession, path: String): DataFrame =
+    s.read.schema(parquetSchema(s, path)).parquet(path)
+
+  /** The schema [[parquet]] reads `path` with. */
+  def parquetSchema(s: SparkSession, path: String): StructType = factsOf(s, path).schema
+
+  /** Row count of the parquet file or directory at `path`, counted once
+    * per file state (the key [[parquet]] uses). */
+  def parquetRows(s: SparkSession, path: String): Long = {
+    val f = factsOf(s, path)
+    if (f.rows < 0) f.rows = parquet(s, path).count()
+    f.rows
+  }
+
+  private final case class FileState(path: String, stamp: Seq[(String, Long, Long)],
+                                     nanosAsLong: String)
+  private final class Facts(val schema: StructType) { @volatile var rows = -1L }
+
+  /** Entries the schema memo keeps (least recently used out first):
+    * ten corpus tables per scale factor plus the published tables a
+    * process serves. */
+  private val FactsEntries = 256
+  private val facts = new java.util.LinkedHashMap[FileState, Facts](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[FileState, Facts]): Boolean =
+      size() > FactsEntries
+  }
+
+  private def stateOf(s: SparkSession, path: String): FileState = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    val files = if (st.isDirectory) fs.listStatus(p).toSeq else Seq(st)
+    FileState(path,
+      files.map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sortBy(_._1),
+      s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
+  }
+
+  private def factsOf(s: SparkSession, path: String): Facts = {
+    val key = stateOf(s, path)
+    facts.synchronized(Option(facts.get(key))).getOrElse {
+      // inferred outside the lock: the inference is a Spark job
+      val f = new Facts(s.read.parquet(path).schema)
+      facts.synchronized(Option(facts.putIfAbsent(key, f)).getOrElse(f))
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")
@@ -51,17 +109,17 @@ object Tables {
     * whichever physical encoding the corpus currently ships. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(spark, spark.read.parquet(s"$dir/events.parquet"))
+    normalizeTs(spark, parquet(spark, s"$dir/events.parquet"))
   }
 
   /** Raw Spark-side type of events.parquet's `ts` under the nanosAsLong
     * contract — LongType for a TIMESTAMP(NANOS) file, TimestampNTZType
-    * for the regenerated micros file. Footer-only read (no data scan);
-    * the streaming replay needs this to build its explicit source
-    * schema, which a file stream cannot infer. */
+    * for the regenerated micros file. Footer-only, and memoized with
+    * [[parquet]]'s schema; the streaming replay needs this to build its
+    * explicit source schema, which a file stream cannot infer. */
   def rawEventsTsType(spark: SparkSession, dir: String): DataType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+    parquet(spark, s"$dir/events.parquet").schema("ts").dataType
   }
 
   /** Normalize a raw events `ts` column to session-TZ TimestampType at

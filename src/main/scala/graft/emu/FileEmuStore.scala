@@ -17,8 +17,11 @@ import graft.ingest.KinesisRecord
   * same-directory rename):
   *
   *   meta.json                          numShards (written once)
-  *   commits/<epoch>_<partition>.token  commit marker — THE commit point
-  *   data/<epoch>_<partition>-<uniq>.bin  staged record batch
+  *   commits/<key>_<partition>.token  commit marker — THE commit point
+  *   data/<key>_<partition>-<uniq>.bin  staged record batch
+  *
+  * A streaming epoch's key is `<epoch>q<query id>` ([[epochKey]]), a
+  * batch write job's is `b<uuid>`.
   *
   * Commit protocol (mirrors `Materialize.publish`'s stage-then-rename
   * discipline):
@@ -32,13 +35,13 @@ import graft.ingest.KinesisRecord
   *      commit; [[FileAlreadyExistsException]] means a concurrent
   *      attempt won the race — delete our staged file, return false.
   *
-  * Readers only see records of (epoch, partition)s whose token exists,
+  * Readers only see records of (key, partition)s whose token exists,
   * and take exactly ONE attempt file per token (lexicographically
   * first — Spark retries of a deterministic partition stage identical
   * bytes, so the choice is cosmetic), so a crash between 3 and 4
   * leaves an invisible orphan (swept on load), never a dirty read or a
   * duplicate. Sequence numbers are assigned at load time, densely per
-  * shard in (epoch, partition) order — deterministic in every process.
+  * shard in (key, partition) order — deterministic in every process.
   *
   * The reference talks to a real multi-writer network service
   * (`kinesis/kinesis.go:165-168`); with this store any number of JVMs
@@ -64,14 +67,26 @@ object FileEmuStore {
   private def streamDir(dir: String, stream: String): Path = Paths.get(dir, stream)
   private def commitsDir(dir: String, stream: String): Path = streamDir(dir, stream).resolve("commits")
   private def dataDir(dir: String, stream: String): Path = streamDir(dir, stream).resolve("data")
-  /** Commit keys are strings: streaming epochs use the epoch number
-    * ("42"), batch jobs a "b<uuid-hex>" id — anything without '_', '-',
-    * or '/'. Numeric keys order numerically in [[loadCommitted]] (so
-    * replayed sequences are stable as epochs grow), non-numeric keys
-    * after them in lexicographic order. */
+  /** Commit keys are strings without '_', '-' or '/': a streaming
+    * epoch's is [[epochKey]] (a bare epoch number also reads as one, of
+    * an unnamed query), a batch job's a "b<uuid-hex>" id.
+    * [[loadCommitted]] orders epoch keys by query, then numerically by
+    * epoch (so one query's replayed sequences are stable as its epochs
+    * grow), and the other keys after them in lexicographic order. */
   private[emu] def requireKey(key: String): Unit =
     require(key.nonEmpty && !key.exists(c => c == '_' || c == '-' || c == '/'),
       s"bad commit key '$key'")
+  /** The commit key of a streaming query's epoch. The query id (the
+    * one its checkpoint keeps across restarts) keeps two queries that
+    * write one stream from refusing each other's epochs as retries. */
+  def epochKey(queryId: String, epoch: Long): String =
+    s"${epoch}q${queryId.filter(_.isLetterOrDigit)}"
+  private val EpochKey = "(\\d+)q([0-9A-Za-z]*)".r
+  private def keyOrder(key: String): (Int, String, Long, String) = key match {
+    case EpochKey(e, q) => (0, q, e.toLong, key)
+    case _ => key.toLongOption.fold((1, "", 0L, key))(e => (0, "", e, key))
+  }
+
   private def tokenPath(dir: String, stream: String, key: String, partition: Int): Path =
     commitsDir(dir, stream).resolve(s"${key}_$partition.token")
 
@@ -142,7 +157,7 @@ object FileEmuStore {
   final case class CommittedBatch(key: String, partition: Int,
                                   records: Seq[(String, Array[Byte], Long)])
 
-  /** Every committed batch, in deterministic (epoch, partition) order —
+  /** Every committed batch, in deterministic (key, partition) order —
     * exactly one attempt file per token. Orphan attempt files (a crash
     * between rename and token) are ignored here and swept by
     * [[sweepOrphans]]. Safe against a concurrent [[commit]] race: the
@@ -185,11 +200,11 @@ object FileEmuStore {
       }
       CommittedBatch(key, partition, recs)
     }
-    // numeric keys (streaming epochs) first in NUMERIC order — so a
-    // growing stream only APPENDS to the replay and previously assigned
-    // sequence numbers stay stable — then non-numeric keys (batch write
-    // ids) lexicographically
-    batches.sortBy(b => (b.key.toLongOption.getOrElse(Long.MaxValue), b.key, b.partition))
+    // streaming epochs first, by query and then in NUMERIC epoch
+    // order — so a growing query only APPENDS to the replay and the
+    // sequence numbers it was assigned stay stable — then the other
+    // keys (batch write ids) lexicographically
+    batches.sortBy(b => (keyOrder(b.key), b.partition))
   }
 
   private def readAttempt(p: Path): Seq[(String, Array[Byte], Long)] = {

@@ -160,28 +160,31 @@ object KinesisEmu {
     })
   }
 
-  /** One stream's exactly-once state: the committed (epoch, partition)
-    * tokens, a lock per token, and the newest committed epoch, which
-    * sets the stream's eviction horizon. */
+  /** One stream's exactly-once state: the committed (query, epoch,
+    * partition) tokens, a lock per token, and each query's newest
+    * committed epoch, which sets that query's eviction horizon. */
   private final class Tokens {
-    val committed = ConcurrentHashMap.newKeySet[(Long, Int)]()
-    val locks = new ConcurrentHashMap[(Long, Int), Object]()
-    val maxSeenEpoch = new AtomicLong(Long.MinValue)
+    val committed = ConcurrentHashMap.newKeySet[(String, Long, Int)]()
+    val locks = new ConcurrentHashMap[(String, Long, Int), Object]()
+    val maxSeenEpoch = new ConcurrentHashMap[String, AtomicLong]()
   }
   private val tokens = new ConcurrentHashMap[String, Tokens]()
 
   /** Commit tokens older than this many epochs behind the newest one
-    * committed on the same stream are evicted (the token set would
-    * otherwise grow without bound on long-running streams). Spark only
-    * replays epochs at or after its last checkpoint, far inside this
-    * horizon. */
+    * the same query committed on the same stream are evicted (the token
+    * set would otherwise grow without bound on long-running streams).
+    * Spark only replays epochs at or after its last checkpoint, far
+    * inside this horizon. */
   val EpochRetention = 1000L
 
   /** Idempotent PutRecords for streaming epochs: the same
-    * (stream, epoch, partition) token commits at most once, so Spark's
-    * task/epoch retries don't duplicate records — exactly-once into the
-    * emu log (SURVEY.md §7.4 decision; the reference's writer has no
-    * such guard and re-sends on upstream retry).
+    * (stream, query, epoch, partition) token commits at most once, so
+    * Spark's task/epoch retries don't duplicate records — exactly-once
+    * into the emu log (SURVEY.md §7.4 decision; the reference's writer
+    * has no such guard and re-sends on upstream retry). `queryId` is the
+    * streaming query's id, which its checkpoint keeps across restarts:
+    * a restarted query's retried epoch is refused, while a second query
+    * writing the same stream commits its own epoch 0.
     *
     * Two phases under the epoch lock: STAGE validates every batch
     * (service limits, failure injector, shard-rate admission) and routes
@@ -193,11 +196,11 @@ object KinesisEmu {
     * under failure; round-2 appended during validation and rolled back
     * on failure — exactly-once for committed data but with a dirty-read
     * window this rewrite closes.) */
-  def putRecordsIdempotent(streamName: String, epochId: Long, partitionId: Int,
-                           records: Seq[KinesisRecord]): Boolean = {
-    val token = s"$streamName/$epochId/$partitionId"
+  def putRecordsIdempotent(streamName: String, queryId: String, epochId: Long,
+                           partitionId: Int, records: Seq[KinesisRecord]): Boolean = {
+    val token = s"$streamName/$queryId/$epochId/$partitionId"
     val st = tokens.computeIfAbsent(streamName, _ => new Tokens)
-    val key = (epochId, partitionId)
+    val key = (queryId, epochId, partitionId)
     val committed = st.locks.computeIfAbsent(key, _ => new Object).synchronized {
       if (st.committed.contains(key)) false // already committed
       else {
@@ -216,7 +219,7 @@ object KinesisEmu {
         true
       }
     }
-    if (committed) evictOldEpochs(st, epochId)
+    if (committed) evictOldEpochs(st, queryId, epochId)
     committed
   }
 
@@ -277,8 +280,9 @@ object KinesisEmu {
     * — so the protocol holds across JVMs (a real cluster's executors,
     * or any concurrent writer process), which the in-memory singleton
     * cannot provide. The token is (stream, key, partition): a streaming
-    * sink passes the epoch number as `key`, so epoch retries commit at
-    * most once; a BATCH write job passes its `writeId`, minted once per
+    * sink passes [[FileEmuStore.epochKey]] of its query id and epoch as
+    * `key`, so epoch retries commit at most once and two queries never
+    * share a token; a BATCH write job passes its `writeId`, minted once per
     * job on the driver ("b" + UUID hex) and carried by the serialized
     * writer factory — task retries of one partition cannot duplicate (a
     * crashed attempt's staged file is an invisible orphan), while two
@@ -297,11 +301,11 @@ object KinesisEmu {
   }
 
   /** Rebuild this JVM's in-memory view of a persisted stream by
-    * replaying every committed batch in deterministic (epoch,
-    * partition) order through the normal shard-append path (MD5
-    * routing, dense per-shard sequence numbers — identical in every
-    * process that loads the same dir). The previous in-memory stream
-    * of that name, if any, is replaced.
+    * replaying every committed batch in deterministic (query, epoch,
+    * partition) order ([[FileEmuStore.loadCommitted]]) through the
+    * normal shard-append path (MD5 routing, dense per-shard sequence
+    * numbers — identical in every process that loads the same dir). The
+    * previous in-memory stream of that name, if any, is replaced.
     *
     * Scale note (honest): this load materializes the stream in ONE
     * JVM — the emu's read model, fine for the emulator's log sizes. A
@@ -324,14 +328,16 @@ object KinesisEmu {
     st
   }
 
-  /** Evict the stream's commit tokens more than [[EpochRetention]]
-    * epochs behind its newest committed epoch. Amortized: the sweep
-    * only runs when the stream's horizon advances. */
-  private def evictOldEpochs(st: Tokens, epochId: Long): Unit = {
-    val prev = st.maxSeenEpoch.getAndUpdate(m => math.max(m, epochId))
+  /** Evict the query's commit tokens on the stream more than
+    * [[EpochRetention]] epochs behind its newest committed epoch.
+    * Amortized: the sweep only runs when the query's horizon advances. */
+  private def evictOldEpochs(st: Tokens, queryId: String, epochId: Long): Unit = {
+    val max = st.maxSeenEpoch.computeIfAbsent(queryId, _ => new AtomicLong(Long.MinValue))
+    val prev = max.getAndUpdate(m => math.max(m, epochId))
     if (epochId > prev && prev != Long.MinValue) {
-      val horizon = st.maxSeenEpoch.get() - EpochRetention
-      if (horizon > Long.MinValue + EpochRetention) st.committed.removeIf(_._1 < horizon)
+      val horizon = max.get() - EpochRetention
+      if (horizon > Long.MinValue + EpochRetention)
+        st.committed.removeIf(k => k._1 == queryId && k._2 < horizon)
       // lock entries are deliberately NOT evicted: removing a lock
       // object another thread currently holds inside
       // putRecordsIdempotent would let a concurrent retry

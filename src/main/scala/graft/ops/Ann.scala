@@ -1435,9 +1435,10 @@ object Ann {
       (n + KmeansTargetClusterSize - 1) / KmeansTargetClusterSize).toInt
 
   /** Corpus census for the K derivation: a parquet row-count is
-    * metadata-only (no data scan), so this is free even at 100 TB. */
+    * metadata-only (no data scan), and it is counted once per file
+    * state per JVM ([[graft.core.Tables.parquetRows]]). */
   private def embeddingsCount(s: SparkSession, d: String): Long =
-    embeddings(s, d).count()
+    graft.core.Tables.parquetRows(s, s"$d/embeddings.parquet")
   /** same data-calibrated near-dup threshold as d05 — the corpus'
     * synthetic embeddings top out near cosine 0.5. */
   val SemDedupTau = 0.4

@@ -89,8 +89,8 @@ object Governance {
     def counts(g: Gen): (Long, Long) =
       if (!graft.core.Materialize.exists(s, graft.core.Materialize.scopedKind(Kind, d), fp(d, g.tag))) (0L, 0L)
       else {
-        val r = s.read
-          .parquet(graft.core.Materialize.tablePath(s, graft.core.Materialize.scopedKind(Kind, d), fp(d, g.tag)))
+        val r = graft.core.Tables.parquet(s,
+          graft.core.Materialize.tablePath(s, graft.core.Materialize.scopedKind(Kind, d), fp(d, g.tag)))
           .agg(count(lit(1)).as("n"),
             sum(when(col("i") % Dedup.IncrementalMod === Dedup.TombstoneRem,
               lit(1L)).otherwise(lit(0L))).as("nt")).head()

@@ -718,7 +718,7 @@ object Pipeline {
     import s.implicits._
     manifest.toDF("role", "family", "fingerprint", "path")
       .coalesce(1).write.parquet(s"$base/manifest")
-    (base, s.read.parquet(s"$base/train").orderBy("shard", "pos"))
+    (base, s.read.schema(placed.schema).parquet(s"$base/train").orderBy("shard", "pos"))
   }
 
   /** p11's full placed-order derivation (stages 2–7), WITHOUT the
@@ -952,6 +952,7 @@ object Pipeline {
       p12BaseArtifacts(s, d)).map { case (k, fp) =>
       ("published", k, fp, graft.core.Materialize.tablePath(s, k, fp))
     }
+    val census = arrivals.select("doc_id", "source")
     val (base, artifact) = shipBuild(s, name, placed, consumed :+
       (("input", "documents",
         graft.core.Materialize.fingerprint(d, "documents", "input", ""),
@@ -961,7 +962,7 @@ object Pipeline {
       // the report below stay fully declarative (reading it back
       // instead of re-embedding d16's typed verify kernel in the
       // returned plan)
-      extras = Seq(("admitted", arrivals.select("doc_id", "source"))))
+      extras = Seq(("admitted", census)))
     // GATE OUTPUT: the per-source BUILD REPORT, not the placed rows —
     // on a near-dup-saturated corpus (this testdata: hundreds of τ≥1/2
     // neighbors per doc) the admission gate truthfully rejects almost
@@ -975,7 +976,7 @@ object Pipeline {
     // is spec-checked row-by-row via [[lastBuildBase]].
     val arrivalCensus = live.where(col("doc_id") % mod === rem)
       .groupBy("source").agg(big(count(lit(1))).as("n_arrivals"))
-    val admittedBySrc = s.read.parquet(s"$base/admitted")
+    val admittedBySrc = s.read.schema(census.schema).parquet(s"$base/admitted")
       .groupBy("source").agg(big(count(lit(1))).as("n_admitted"))
     val placedBySrc = artifact.groupBy("source").agg(
       big(count(lit(1))).as("n_placed"),

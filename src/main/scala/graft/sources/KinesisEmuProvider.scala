@@ -68,7 +68,7 @@ class KinesisEmuTable(options: CaseInsensitiveStringMap) extends Table
     TableCapability.MICRO_BATCH_READ, TableCapability.ACCEPT_ANY_SCHEMA).asJava
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new KinesisEmuWriteBuilder(streamName, options, info.schema())
+    new KinesisEmuWriteBuilder(streamName, options, info.schema(), info.queryId())
 
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
     new KinesisEmuScanBuilder(streamName, Option(options.get("persistDir")),
@@ -82,10 +82,11 @@ class KinesisEmuTable(options: CaseInsensitiveStringMap) extends Table
 final case class SinkConfig(streamName: String, partitionKey: String,
                             valueField: Int, keyField: Int,
                             persistDir: Option[String] = None,
-                            writeId: String = "b0")
+                            writeId: String = "b0",
+                            queryId: String)
 
 class KinesisEmuWriteBuilder(stream: String, options: CaseInsensitiveStringMap,
-                             schema: StructType) extends WriteBuilder {
+                             schema: StructType, queryId: String) extends WriteBuilder {
   override def build(): Write = {
     // value column: 'value' or 'data' (BINARY or STRING); key column
     // optional (STRING). Checked here, before any task starts: each
@@ -109,7 +110,10 @@ class KinesisEmuWriteBuilder(stream: String, options: CaseInsensitiveStringMap,
       // one durable-commit id per write JOB, minted here on the driver:
       // batch tasks commit under (writeId, partition), so retries of a
       // partition are exactly-once while separate jobs append
-      writeId = "b" + java.util.UUID.randomUUID().toString.replace("-", ""))
+      writeId = "b" + java.util.UUID.randomUUID().toString.replace("-", ""),
+      // streaming epochs commit under (query, epoch, partition): the
+      // query id is the one the checkpoint keeps across restarts
+      queryId = queryId)
     new KinesisEmuWrite(cfg, value.dataType == StringType)
   }
 }
@@ -158,8 +162,9 @@ case object KinesisCommit extends WriterCommitMessage
   *
   * Streaming epochs (`epoch` defined) deliver exactly-once: records are
   * staged locally and committed idempotently under the
-  * (stream, epoch, partition) token, so Spark's epoch/task retries
-  * cannot duplicate data in the emu log. */
+  * (stream, query, epoch, partition) token, so Spark's epoch/task
+  * retries cannot duplicate data in the emu log, and two queries that
+  * write one stream never refuse each other's epochs. */
 class KinesisEmuDataWriter(cfg: SinkConfig, valueIsString: Boolean,
                            partitionId: Int = 0, epoch: Option[Long] = None)
     extends DataWriter[InternalRow] {
@@ -208,9 +213,11 @@ class KinesisEmuDataWriter(cfg: SinkConfig, valueIsString: Boolean,
     flusher.flush(); drain() // final flush drains EVERYTHING (fixes quirk (b))
     (epoch, cfg.persistDir) match {
       case (_, Some(dir)) => KinesisEmu.putRecordsPersisted(dir, cfg.streamName,
-        epoch.fold(cfg.writeId)(_.toString), partitionId, staged.toSeq)
+        epoch.fold(cfg.writeId)(graft.emu.FileEmuStore.epochKey(cfg.queryId, _)),
+        partitionId, staged.toSeq)
       case (Some(e), None) =>
-        KinesisEmu.putRecordsIdempotent(cfg.streamName, e, partitionId, staged.toSeq)
+        KinesisEmu.putRecordsIdempotent(cfg.streamName, cfg.queryId, e, partitionId,
+          staged.toSeq)
       case (None, None) => () // non-durable batch: records already sent
     }
     staged.clear()
@@ -244,7 +251,8 @@ object ShardOffsets {
   * whole point of the reference's buffer layer is bounded-memory
   * transfer — `kinesis/kinesis.go:75-89` flushes at most one buffer
   * per tick). Unbounded catch-up reads are the streaming-restart OOM
-  * at 100 TB/day; these caps bound every micro-batch. */
+  * at 100 TB/day; these caps bound every micro-batch, under
+  * `Trigger.AvailableNow` too. */
 final case class AdmissionCaps(maxRecords: Option[Long], maxBytes: Option[Long]) {
   maxRecords.foreach(n => require(n > 0, s"maxRecordsPerTrigger must be > 0, got $n"))
   maxBytes.foreach(n => require(n > 0, s"maxBytesPerTrigger must be > 0, got $n"))
@@ -280,7 +288,7 @@ object DurableStreamView {
 class KinesisEmuMicroBatchStream(stream: String, persistDir: Option[String] = None,
                                  caps: AdmissionCaps = AdmissionCaps(None, None))
     extends MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
+    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{
     CompositeReadLimit, ReadLimit, ReadMaxBytes, ReadMaxRows}
 
@@ -303,9 +311,27 @@ class KinesisEmuMicroBatchStream(stream: String, persistDir: Option[String] = No
   private def head(shards: Seq[KinesisEmu.Shard]): ShardOffsets =
     ShardOffsets(shards.map(s => s.shardId -> (s.latestSequence + 1)).toMap)
 
+  /** The shard heads when an AvailableNow run started. Without this
+    * Spark wraps the source in `AvailableNowDataStreamWrapper`, which
+    * reads everything up to that head in one batch and ignores the
+    * caps; with it the run drains exactly what was there at start, in
+    * batches the caps bound. */
+  @volatile private var availableNowHead: Option[Map[String, Long]] = None
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowHead = Some(head(refreshed).next)
+
+  /** The offsets a batch may read up to: each shard's head, capped at
+    * the AvailableNow start head once one is taken. */
+  private def readable(shards: Seq[KinesisEmu.Shard]): Map[String, Long] = {
+    val h = head(shards).next
+    availableNowHead.fold(h)(start =>
+      h.map { case (id, n) => id -> math.min(n, start.getOrElse(id, 0L)) })
+  }
+
   override def initialOffset(): Offset =
     ShardOffsets(view().map(s => s.shardId -> 0L).toMap)
-  override def latestOffset(): Offset = head(refreshed)
+  override def latestOffset(): Offset = ShardOffsets(readable(refreshed))
   override def deserializeOffset(json: String): Offset = ShardOffsets.parse(json)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -357,8 +383,9 @@ class KinesisEmuMicroBatchStream(stream: String, persistDir: Option[String] = No
   private def cappedAdvance(shards: Seq[KinesisEmu.Shard], from: Map[String, Long],
                             rowCap: Option[Long], byteCap: Option[Long]): Map[String, Long] = {
     val snap = shards.sortBy(_.shardId)
+    val until = readable(snap)
     val avail = snap.map(sh => sh.shardId ->
-      math.max(0L, sh.latestSequence + 1 - from.getOrElse(sh.shardId, 0L))).toMap
+      math.max(0L, until(sh.shardId) - from.getOrElse(sh.shardId, 0L))).toMap
     // rows: max-min fair allocation of the global row cap
     val rowAlloc: Map[String, Long] = rowCap match {
       case None => avail

@@ -237,13 +237,21 @@ object Replay {
     * the Spark default for a deployment that points
     * spark.graft.replay.root at a durable store and wants end-to-end
     * checkpoint integrity there.
-    * Both keys are restored (or unset) afterwards. */
-  private def withReplayPartitions[T](s: SparkSession, n: Int = 8)(body: => T): T = {
+    *
+    * `noDataBatches = false` also scopes off the micro-batches that
+    * only move the watermark: they read no rows and, for an operator
+    * that emits as soon as a key is first seen, emit nothing — all they
+    * do is evict state, which a fresh checkpoint that no run resumes
+    * never needs. Every key is restored (or unset) afterwards. */
+  private def withReplayPartitions[T](s: SparkSession, n: Int = 8,
+                                      noDataBatches: Boolean = true)(body: => T): T = {
     val wantCk = s.conf.getOption("spark.graft.replay.checkpointChecksum")
       .exists(_.trim.equalsIgnoreCase("true"))
     val scoped = Seq(
       "spark.sql.shuffle.partitions" -> n.toString,
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> wantCk.toString)
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> wantCk.toString) ++
+      (if (noDataBatches) Nil
+       else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))
     val prev = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
     scoped.foreach { case (k, v) => s.conf.set(k, v) }
     try body finally prev.foreach {
@@ -377,11 +385,16 @@ object Replay {
     * `$base/out` (checkpoint `$base/ck`), returned as a batch reader of
     * the sink — the only code that starts an AvailableNow sink query.
     * A later call on the same base resumes the checkpoint and drains
-    * only what arrived since. `onDone` sees the finished query. */
+    * only what arrived since. `onDone` sees the finished query.
+    * `noDataBatches = false` skips the eviction-only micro-batches (see
+    * [[withReplayPartitions]]); only a drain whose checkpoint is never
+    * resumed may pass it. The read-back carries `df`'s schema: the sink
+    * just wrote it, so no schema-inference job runs. */
   private[graft] def sinkRun(s: SparkSession, df: DataFrame, base: String,
                              partitions: Int = 8,
+                             noDataBatches: Boolean = true,
                              onDone: StreamingQuery => Unit = _ => ()): DataFrame = {
-    withReplayPartitions(s, partitions) {
+    withReplayPartitions(s, partitions, noDataBatches) {
       leasedQueryRun(s, base) {
         df.writeStream.format("parquet")
           .option("path", s"$base/out")
@@ -394,7 +407,7 @@ object Replay {
         onDone(q)
       }
     }
-    s.read.parquet(s"$base/out")
+    s.read.schema(df.schema).parquet(s"$base/out")
   }
 
   /** Replay events.parquet + sentinel through `pipe` (a streaming
@@ -459,9 +472,10 @@ object Replay {
       // watermark history, half the engine starts. (A no-data batch
       // the engine may insert between the two only finalizes state
       // earlier — same output rows either way.)
+      val out = pipe(unioned)
       withReplayPartitions(s) {
         leasedQueryRun(s, base) {
-          pipe(unioned).writeStream
+          out.writeStream
             .format("parquet")
             .option("path", s"$base/out")
             .option("checkpointLocation", s"$base/ck")
@@ -475,7 +489,7 @@ object Replay {
           q.stop()
         }
       }
-      s.read.parquet(s"$base/out")
+      s.read.schema(out.schema).parquet(s"$base/out")
     }
   }
 
@@ -636,7 +650,7 @@ object Replay {
     * near-dup of a document that has been deleted. */
   def s06(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val docSchema = s.read.parquet(s"$d/documents.parquet").schema
+    val docSchema = graft.core.Tables.parquetSchema(s, s"$d/documents.parquet")
     val docStream = s.readStream.schema(docSchema)
       .parquet(s"$d/[d]ocuments.parquet") // one-file glob, as with events
       .where(col("doc_id") % graft.ops.Dedup.IncrementalMod =!=
@@ -679,7 +693,7 @@ object Replay {
     * model rides every executor (broadcast); the vector stream never
     * shuffles. */
   def s07(s: SparkSession, d: String): DataFrame = {
-    val embSchema = s.read.parquet(s"$d/embeddings.parquet").schema
+    val embSchema = graft.core.Tables.parquetSchema(s, s"$d/embeddings.parquet")
     val vecStream = s.readStream.schema(embSchema)
       .parquet(s"$d/[e]mbeddings.parquet") // one-file glob, as with events
       .select(col("vec_id"),
@@ -705,14 +719,17 @@ object Replay {
     * into a kinesis-emu stream as a standing backlog (one record per
     * document via the sink's per-row routing key = doc_id), then
     * drained with `maxRecordsPerTrigger` bounding every micro-batch
-    * (SupportsAdmissionControl's latestOffset(start, limit) caps the
-    * per-shard advance — StreamingSpec S11/S11b prove the bound and
-    * the oversized-record progress guarantee). The per-record
-    * transform is STATELESS, so the drained result is invariant to
-    * the batching the caps impose, and the oracle is plain batch SQL
-    * over documents: any loss, duplication, or text corruption the
-    * bounded multi-batch drain introduced would break the row-for-row
-    * hash. The emu stream is per-run and deleted after the drain. */
+    * (latestOffset(start, limit) caps the per-shard advance; the source
+    * is SupportsTriggerAvailableNow, so the AvailableNow drain keeps
+    * the cap and stops at the shard heads of its start — StreamingSpec
+    * S11/S11b and S11c/S11d prove the bound and the oversized-record
+    * progress guarantee; at sf0.01 the 500-record backlog drains in two
+    * batches). The per-record transform is STATELESS, so the drained
+    * result is invariant to the batching the caps impose, and the
+    * oracle is plain batch SQL over documents: any loss, duplication,
+    * or text corruption the bounded multi-batch drain introduced would
+    * break the row-for-row hash. The emu stream is per-run and deleted
+    * after the drain. */
   def s08(s: SparkSession, d: String): DataFrame = {
     val name = s"s08-${java.lang.ProcessHandle.current.pid}-${System.nanoTime}"
     graft.emu.KinesisEmu.createStream(name, shards = 4)
@@ -970,7 +987,7 @@ object Replay {
     * to the probe ids AT THE SOURCE so the scan pushdown models
     * "queries arrive", not "the corpus arrives". */
   private def s11ProbeStream(s: SparkSession, d: String): DataFrame = {
-    val embSchema = s.read.parquet(s"$d/embeddings.parquet").schema
+    val embSchema = graft.core.Tables.parquetSchema(s, s"$d/embeddings.parquet")
     s.readStream.schema(embSchema)
       .parquet(s"$d/[e]mbeddings.parquet") // one-file glob, as with events
       .where(col("vec_id") < 10)
@@ -1000,7 +1017,7 @@ object Replay {
     * is the sink parquet itself, so a takedown wave of any size drains
     * in bounded micro-batches. */
   def s12(s: SparkSession, d: String): DataFrame = {
-    val docSchema = s.read.parquet(s"$d/documents.parquet").schema
+    val docSchema = graft.core.Tables.parquetSchema(s, s"$d/documents.parquet")
     val feed = s.readStream.schema(docSchema)
       .parquet(s"$d/[d]ocuments.parquet") // one-file glob, as with events
       .where(graft.ops.Dedup.d17TombstonePred)
@@ -1022,7 +1039,7 @@ object Replay {
     * deletion matrix: {pair artifact, ANN index} × {census batch,
     * event feed} all serve the same liveness. */
   def s13(s: SparkSession, d: String): DataFrame = {
-    val embSchema = s.read.parquet(s"$d/embeddings.parquet").schema
+    val embSchema = graft.core.Tables.parquetSchema(s, s"$d/embeddings.parquet")
     val feed = s.readStream.schema(embSchema)
       .parquet(s"$d/[e]mbeddings.parquet") // one-file glob, as with events
       .where(graft.ops.Ann.a16TombstonePred)
@@ -1070,7 +1087,13 @@ object Replay {
     * completes; BASELINE.md s14 state rail). A collapsed corpus build
     * shrinks the same state k-fold for exact-dup mass:
     * candidate keys are per REPRESENTATIVE, expansion happens at
-    * read-back. */
+    * read-back.
+    *
+    * One engine bootstrap and one micro-batch: the drain's checkpoint is
+    * fresh per call and never resumed, so [[s14Drain]] skips the
+    * eviction-only batch the moved watermark would otherwise run (0
+    * rows in, nothing out, a RocksDB state commit at
+    * [[AdmissionPartitions]]); StreamingSpec S13 pins the one batch. */
   /** s14's arrival-side source: the day-1 census cut at the scan, the
     * slim (id, text) projection, and a round-robin REBALANCE to
     * `defaultParallelism` BEFORE the CPU-dense signing flatMap
@@ -1087,7 +1110,7 @@ object Replay {
     import as.implicits._
     val mod = graft.ops.Dedup.IncrementalMod
     val rem = graft.ops.Dedup.IncrementalRem
-    val docSchema = as.read.parquet(s"$d/documents.parquet").schema
+    val docSchema = graft.core.Tables.parquetSchema(as, s"$d/documents.parquet")
     as.readStream.schema(docSchema)
       .parquet(s"$d/[d]ocuments.parquet")
       .where(col("doc_id") % mod === rem)
@@ -1150,8 +1173,11 @@ object Replay {
     * window for another tier to inherit from). */
   private[graft] def s14Drain(as: SparkSession, d: String, pairs: DataFrame,
                               corpusView: graft.ops.Dedup.BandView): DataFrame = {
+    // the checkpoint is fresh per call and never resumed, so the
+    // eviction-only batch after the data batch is skipped: the
+    // dedup emits each pair when first seen, so it adds no rows
     val drained = sinkRun(as, pairs, runBase(as, "s14"),
-      partitions = AdmissionPartitions)
+      partitions = AdmissionPartitions, noDataBatches = false)
     s14Report(as, d, drained, corpusView.members)
   }
 
@@ -1229,7 +1255,7 @@ object Replay {
     * placement + the drained ids (broadcast-correction, zero
     * exchanges). */
   def s18(s: SparkSession, d: String): DataFrame = {
-    val docSchema = s.read.parquet(s"$d/documents.parquet").schema
+    val docSchema = graft.core.Tables.parquetSchema(s, s"$d/documents.parquet")
     val feed = s.readStream.schema(docSchema)
       .parquet(s"$d/[d]ocuments.parquet") // one-file glob, as with events
       .where(col("doc_id") % graft.ops.Dedup.IncrementalMod ===
@@ -1359,7 +1385,7 @@ object Replay {
     val base = runBase(s, "s16adm")
     admittedIds.write.parquet(s"$base/admitted")
     graft.ops.Pipeline.p12Over(s, d,
-      s.read.parquet(s"$base/admitted"), "s16")
+      s.read.schema(admittedIds.schema).parquet(s"$base/admitted"), "s16")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

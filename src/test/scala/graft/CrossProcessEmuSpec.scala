@@ -90,6 +90,20 @@ class CrossProcessEmuSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bins.length == 13, s"got ${bins.length} attempt files")
   }
 
+  test("two queries' epoch keys replay each query's epochs in numeric order") {
+    val dir = Files.createTempDirectory("graft_xproc_epochkey").toString
+    FileEmuStore.createStream(dir, "ek", numShards = 1)
+    def put(q: String, e: Long): Unit = assert(FileEmuStore.commit(dir, "ek",
+      FileEmuStore.epochKey(q, e), 0,
+      Seq(graft.ingest.KinesisRecord("k", s"$q$e".getBytes("UTF-8"))), 1L))
+    Seq(10L, 2L, 1L).foreach(put("qb-1", _))
+    Seq(2L, 10L).foreach(put("qa-1", _))
+    assert(!FileEmuStore.commit(dir, "ek", FileEmuStore.epochKey("qa-1", 2L), 0, Nil, 1L))
+    val replayed = FileEmuStore.loadCommitted(dir, "ek")
+      .flatMap(_.records.map(r => new String(r._2, "UTF-8")))
+    assert(replayed == Seq("qa-12", "qa-110", "qb-11", "qb-12", "qb-110"), replayed)
+  }
+
   test("orphaned attempt files (crash between stage and token) are invisible and swept") {
     val dir = Files.createTempDirectory("graft_xproc_orphan").toString
     FileEmuStore.createStream(dir, "o", numShards = 1)

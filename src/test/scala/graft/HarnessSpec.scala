@@ -123,6 +123,20 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stale.isEmpty, "allowlisted defs no spec calls")
   }
 
+  test("every parquet read in src/main carries its schema, apart from the helper " +
+      "and two allowlisted probes") {
+    // a read without .schema(...) infers the schema in a Spark job on
+    // every call; Tables.parquet is the one place that still infers,
+    // once per file state. Bench's control probes are frozen, and
+    // SchemaProbe reports the footer as the file holds it today.
+    val allowed = Map("Tables.scala" -> 1, "Bench.scala" -> 2, "SchemaProbe.scala" -> 1)
+    val bare = "\\.read\\s*\\.(?:parquet\\(|format\\(\"parquet\"\\))".r
+    val found = codeLines("src/main/scala").toSeq
+      .map { case (file, ls) => file.getFileName.toString -> bare.findAllIn(ls.mkString("\n")).size }
+      .filter(_._2 > 0).toMap
+    assert(found == allowed, s"parquet reads without a schema, by file: $found")
+  }
+
   test("a Rail sample of q03 at sf0.001 dumps a stage table and the final plan") {
     val sf = "/root/testdata/sf0.001"
     val (name, fn) = SparkEntry.queries.find(_._1.startsWith("q03")).get

@@ -486,6 +486,144 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     KinesisEmu.reset()
   }
 
+  /** Drain `stream` in one AvailableNow run under `cap` (an admission
+    * option and its value); `duringFirst` runs inside the first
+    * non-empty batch. Returns every batch's (sequenceNumber, shardId,
+    * partitionKey, data length) rows. */
+  private def availableNowDrain(stream: String, cap: (String, String))(
+      duringFirst: => Unit): Seq[Seq[(Long, String, String, Int)]] = {
+    val batches = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[Seq[(Long, String, String, Int)]]())
+    spark.readStream.format("kinesis-emu")
+      .option("stream", stream).option(cap._1, cap._2).load()
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        val rows = df.selectExpr("sequenceNumber", "shardId", "partitionKey", "length(data)")
+          .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getInt(3))).toSeq
+        if (rows.nonEmpty && batches.isEmpty) duringFirst
+        batches.add(rows)
+        ()
+      }
+      .trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+    import scala.jdk.CollectionConverters._
+    batches.asScala.toSeq.filter(_.nonEmpty)
+  }
+
+  test("S11c: under Trigger.AvailableNow maxRecordsPerTrigger bounds every batch, " +
+      "and a record put after start is left for the next run") {
+    KinesisEmu.reset()
+    KinesisEmu.createStream("adm-an", 2)
+    (0 until 47).foreach { i =>
+      KinesisEmu.putRecords("adm-an",
+        Seq(graft.ingest.KinesisRecord(s"k$i", Array.fill(100)(i.toByte))))
+    }
+    val batches = availableNowDrain("adm-an", "maxRecordsPerTrigger" -> "10") {
+      KinesisEmu.putRecords("adm-an",
+        Seq(graft.ingest.KinesisRecord("late", Array.fill(100)(1.toByte))))
+    }
+    val sizes = batches.map(_.size)
+    assert(sizes.forall(_ <= 10), s"batch over cap: $sizes")
+    assert(sizes.size >= 5, s"backlog drained in too few batches: $sizes")
+    val all = batches.flatten
+    assert(all.size == 47 && all.map(r => (r._1, r._2)).distinct.size == 47,
+      s"loss/dup: ${all.size}")
+    assert(!all.exists(_._3 == "late"), "a record put after start was read")
+    KinesisEmu.reset()
+  }
+
+  test("S11d: under Trigger.AvailableNow maxBytesPerTrigger bounds every batch, " +
+      "and a record put after start is left for the next run") {
+    KinesisEmu.reset()
+    KinesisEmu.createStream("admb-an", 2)
+    (0 until 30).foreach { i =>
+      KinesisEmu.putRecords("admb-an",
+        Seq(graft.ingest.KinesisRecord(s"k$i", Array.fill(100)(i.toByte))))
+    }
+    KinesisEmu.putRecords("admb-an",
+      Seq(graft.ingest.KinesisRecord("big", Array.fill(1000)(7.toByte))))
+    val batches = availableNowDrain("admb-an", "maxBytesPerTrigger" -> "350") {
+      KinesisEmu.putRecords("admb-an",
+        Seq(graft.ingest.KinesisRecord("late", Array.fill(100)(1.toByte))))
+    }
+    assert(batches.forall(_.map(_._4).sum <= 350 + 1000),
+      s"batch bytes: ${batches.map(_.map(_._4).sum)}")
+    assert(batches.size >= 8, s"too few byte-capped batches: ${batches.size}")
+    val all = batches.flatten
+    assert(all.size == 31 && all.map(r => (r._1, r._2)).distinct.size == 31,
+      s"loss/dup: ${all.size}")
+    assert(!all.exists(_._3 == "late"), "a record put after start was read")
+    KinesisEmu.reset()
+  }
+
+  test("S5f: two queries writing one kinesis-emu stream both deliver every row, " +
+      "in memory and with persistDir; a restarted query refuses its retried epoch") {
+    import java.nio.file.{Files, Path}
+    Seq(false, true).foreach { durable =>
+      KinesisEmu.reset()
+      val root = Files.createTempDirectory("graft-two-writers")
+      val persist = root.resolve("emu").toString
+      val stream = s"two-writers-$durable"
+      if (durable) graft.emu.FileEmuStore.createStream(persist, stream, 2)
+      else KinesisEmu.createStream(stream, 2)
+      def source(tag: String, ids: Range): String = {
+        val p = root.resolve(s"src-$tag").toString
+        spark.range(ids.start, ids.end).selectExpr("CAST(id AS STRING) AS value")
+          .coalesce(1).write.parquet(p)
+        p
+      }
+      def write(src: String, ck: String): Unit = {
+        val w = spark.readStream.schema("value STRING").parquet(src)
+          .selectExpr("value", "concat('k', value) AS partitionKey")
+          .writeStream.format("kinesis-emu").option("stream", stream)
+          .option("checkpointLocation", root.resolve(ck).toString)
+        (if (durable) w.option("persistDir", persist) else w)
+          .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      }
+      def delivered: Seq[String] = {
+        val st = if (durable) KinesisEmu.loadPersisted(persist, stream)
+          else KinesisEmu.stream(stream).get
+        st.allRecords.map(r => new String(r.data, "UTF-8")).sorted
+      }
+      val want = (0 until 45).map(_.toString).sorted
+      val a = source("a", 0 until 20)
+      write(a, "ck-a")
+      write(source("b", 20 until 45), "ck-b")
+      assert(delivered == want, s"durable=$durable")
+      // un-commit query a's last batch: its restart re-runs that epoch
+      // under the same query id, and the sink refuses it as a retry
+      val commits = root.resolve("ck-a/commits")
+      val listed = { val s = Files.list(commits); try s.toArray.toSeq.map(_.asInstanceOf[Path]) finally s.close() }
+      val last = listed.map(_.getFileName.toString).filter(_.forall(_.isDigit)).map(_.toLong).max
+      listed.filter(_.getFileName.toString.stripPrefix(".").split('.').head == last.toString)
+        .foreach(Files.delete(_))
+      write(a, "ck-a")
+      assert(delivered == want, s"durable=$durable: retried epoch delivered twice")
+    }
+    KinesisEmu.reset()
+  }
+
+  test("S13: s14's one-shot drain runs one micro-batch, with no eviction-only batch") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val as = graft.streaming.Replay.admissionSession(spark)
+    val progress = new java.util.concurrent.atomic.AtomicInteger()
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    val l = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progress.incrementAndGet()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        ended.countDown()
+    }
+    as.streams.addListener(l)
+    try {
+      assert(graft.streaming.Replay.s14(spark, sfDir).count() > 0)
+      assert(ended.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      org.apache.spark.graft.ListenerInterop.drain(spark.sparkContext, 5000)
+      assert(progress.get == 1, s"micro-batches: ${progress.get}")
+    } finally as.streams.removeListener(l)
+  }
+
   test("S6b: tiny watermark horizon bounds state but may re-emit expired keys") {
     import graft.streaming.StreamDedup
     val keys = Seq("user_id", "event_type")
